@@ -405,15 +405,16 @@ def main() -> None:
     except (OSError, ValueError):
         _steady_q = {}
     # guard (r12 advice): a steady file merged at a different SF would make
-    # every suspect threshold wrong — only consult it at the matching SF
+    # every suspect threshold wrong — only consult it at the matching SF,
+    # compared as numbers so a `sf1` directory matches a steady `1.0`
     try:
         with open(os.path.join(_here, "BENCH_steady.json")) as fh:
             _steady_sf = json.load(fh).get("sf")
-        _bench_sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-        if _steady_sf is not None and str(_steady_sf) != _bench_sf:
+        _bench_sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+        if _steady_sf is not None and float(_steady_sf) != _bench_sf:
             _steady_q = {}
     except (OSError, ValueError):
-        pass
+        _steady_q = {}
     _suspects = [
         n
         for n, t in timings.items()

@@ -397,10 +397,6 @@ class CdcTableConfig:
     # SourceName/DestinationName/DestinationType)
     renames: dict[str, str] = field(default_factory=dict)  # src name -> dst name
     type_overrides: dict[str, str] = field(default_factory=dict)  # dst name -> spark ddl type
-    # merge physical strategy: 'agg' (default here — measured ~35% faster on
-    # the raw->normalize path: single exchange, inherent dedup, no window
-    # pass) or 'join' (see normalize.merge_changes for the trade-off)
-    merge_strategy: str = "agg"
     # a destination bucket whose row count crosses this splits in two after
     # the batch that grew it (storage.split_bucket — extendible hashing, only
     # the split bucket rewrites). Bounds per-batch merge reread as key
@@ -408,24 +404,6 @@ class CdcTableConfig:
     # ≤ threshold rows ≈ a few hundred MB, the task-sized unit the 100 TB
     # design wants. 0 disables.
     split_threshold_rows: int = 4_000_000
-    # >0 enables the LWW hot-key guard (normalize.latest_changes skew_salt):
-    # pre-fold per (pk, checkpoint-salt) so a pk receiving most of a batch
-    # cannot serialize the dedup window onto one task. Opt-in — costs a
-    # second exchange on well-distributed batches.
-    lww_skew_salt: int = 0
-    # AUTO hot-key guard (round 10, r9 verdict #6): when lww_skew_salt is 0
-    # and the raw range is big enough for skew to matter
-    # (footer-row-count >= lww_hot_key_min_rows — metadata only, free),
-    # normalize probes the batch's max per-pk share with a map-side-
-    # combinable count agg (normalize.detect_hot_key) and flips the salt
-    # on (DEFAULT_SKEW_SALT) only when a pk exceeds this fraction of the
-    # batch — the structural guard self-selects at cluster width and
-    # costs nothing on well-distributed or small batches. 0 disables.
-    # The 1M floor is both gates at once: ranges below it skip the probe
-    # entirely (a sub-1M-row window task cannot serialize anything worth
-    # a second exchange), and a hot key must hold >= this many rows.
-    lww_hot_key_threshold: float = 0.01
-    lww_hot_key_min_rows: int = 1_000_000
     # >0: after each normalize of this table, rewrite any bucket holding
     # more than this many data files down to one (storage.compact — the
     # ClickHouse-background-merge analogue). Lazy cadences append a file
@@ -532,8 +510,7 @@ class CdcPipeline:
         and net to zero."""
         if backfill:
             cfg = self.tables.get(dst_table)
-            table = ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
-                             split_threshold_rows=cfg.split_threshold_rows)
+            table = self._table(cfg)
             if table.exists and view.read() is None:
                 live = table.read()
                 if cfg.soft_delete_col:
@@ -654,6 +631,11 @@ class CdcPipeline:
             return pending >= self.auto_ratio * self._dest_row_count()
         return hi - lo + 1 >= self.normalize_every
 
+    def _table(self, cfg: CdcTableConfig) -> ParquetTable:
+        """The bucketed destination table a CdcTableConfig describes."""
+        return ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
+                            split_threshold_rows=cfg.split_threshold_rows)
+
     def _dest_row_count(self) -> int:
         """Total destination rows across the mirror's tables, from parquet
         footers only — cached because it changes only when a normalize /
@@ -662,9 +644,7 @@ class CdcPipeline:
         if self._dest_rows is None:
             dest = 0
             for cfg in self.tables.values():
-                t = ParquetTable(self.spark, cfg.path, cfg.pk_cols,
-                                 cfg.n_buckets,
-                                 split_threshold_rows=cfg.split_threshold_rows)
+                t = self._table(cfg)
                 if t.exists:
                     dest += sum(t.rows_per_bucket().values())
             self._dest_rows = dest
@@ -682,8 +662,7 @@ class CdcPipeline:
         cfg = self.tables.get(dst)
         if cfg is None:
             raise KeyError(f"unknown destination table: {dst}")
-        table = ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
-                             split_threshold_rows=cfg.split_threshold_rows)
+        table = self._table(cfg)
         base = table.read() if table.exists else None
         rng = self._pending_range()
         if rng is None:
@@ -744,8 +723,7 @@ class CdcPipeline:
         the new columns for the rest of this batch range."""
         from peerdb_spark import schema_evolution as SE
 
-        table = ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
-                             split_threshold_rows=cfg.split_threshold_rows)
+        table = self._table(cfg)
         if table._load_schema() is not None:
             if self.catalog is not None and self.mirror_name:
                 SE.replay_deltas(self.catalog, self.mirror_name, table, [delta])
@@ -863,34 +841,29 @@ class CdcPipeline:
         # cheap size gate for the auto hot-key probe, shared by all tables
         # in the range: parquet footer row counts, no data read (computed
         # once, outside the merge thread pool)
-        range_rows = (
-            self.raw.batch_rows(start_batch, end_batch)
-            if any(t.lww_skew_salt == 0 and t.lww_hot_key_threshold
-                   for t in self.tables.values())
-            else 0
-        )
+        range_rows = self.raw.batch_rows(start_batch, end_batch)
 
         def _one(dst: str) -> None:
             cfg = self.tables.get(dst)
             if cfg is None:
                 return
             changes = self._changes_for(raw, dst, cfg)
-            table = ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
-                             split_threshold_rows=cfg.split_threshold_rows)
-            salt = cfg.lww_skew_salt
-            if not salt and cfg.lww_hot_key_threshold:
-                if range_rows >= cfg.lww_hot_key_min_rows and N.detect_hot_key(
-                    changes, cfg.pk_cols, cfg.lww_hot_key_threshold,
-                    cfg.lww_hot_key_min_rows,
-                ):
-                    salt = N.DEFAULT_SKEW_SALT
+            table = self._table(cfg)
+            # AUTO hot-key guard: flip the LWW salt on only when one pk holds
+            # a large share of a large range (normalize.detect_hot_key — a
+            # map-side-combinable count probe), so the guard self-selects at
+            # cluster width and costs nothing on even or small batches
+            salt = 0
+            if range_rows >= N.HOT_KEY_MIN_ROWS and N.detect_hot_key(
+                changes, cfg.pk_cols, N.HOT_KEY_THRESHOLD, N.HOT_KEY_MIN_ROWS
+            ):
+                salt = N.DEFAULT_SKEW_SALT
             views = self._views.get(dst, ())
             images = N.merge_into_table(
                 table,
                 changes,
                 soft_delete_col=cfg.soft_delete_col,
                 synced_at_col=cfg.synced_at_col,
-                strategy=cfg.merge_strategy,
                 return_images=bool(views),
                 skew_salt=salt,
             )
@@ -927,8 +900,7 @@ class CdcPipeline:
         self.tables[cfg.dst_table] = cfg
         self._dest_rows = None
         if backfill is not None:
-            table = ParquetTable(self.spark, cfg.path, cfg.pk_cols, cfg.n_buckets,
-                             split_threshold_rows=cfg.split_threshold_rows)
+            table = self._table(cfg)
             out = backfill
             if cfg.soft_delete_col:
                 out = out.withColumn(cfg.soft_delete_col, F.lit(False))

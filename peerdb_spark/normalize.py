@@ -118,9 +118,9 @@ def latest_changes(
     order rule mview's retraction folds rely on — so Spark's partial
     (map-side) aggregation collapses the hot key WITHIN each input task
     before any shuffle, and the final window sees ≤ skew_salt rows per pk.
-    Two exchanges instead of one, so it is opt-in: the plain window wins on
-    well-distributed batches (r5 measured the window 7.8 s vs an agg-based
-    dedup 11.9 s at sf0.1)."""
+    Two exchanges instead of one, so callers pass a salt only when a hot
+    key is present (CdcPipeline's auto probe, detect_hot_key): the plain
+    window wins on well-distributed batches."""
     if skew_salt:
         ord_ = F.struct(F.col(ts_col), F.col(checkpoint_col))
         salt = F.pmod(F.xxhash64(F.col(checkpoint_col)), F.lit(int(skew_salt)))
@@ -144,6 +144,13 @@ def latest_changes(
 # window then sees <= 32 pre-folded rows per pk — small enough to be free,
 # wide enough that the pre-fold's map-side partials parallelize
 DEFAULT_SKEW_SALT = 32
+# auto hot-key guard gates (CdcPipeline.normalize_batches): a raw range
+# below HOT_KEY_MIN_ROWS (parquet footer counts, no data read) skips the
+# probe — a sub-1M-row window task cannot serialize anything worth a
+# second exchange — and a hot key must hold more than HOT_KEY_THRESHOLD
+# of the batch AND at least HOT_KEY_MIN_ROWS rows
+HOT_KEY_THRESHOLD = 0.01
+HOT_KEY_MIN_ROWS = 1_000_000
 
 
 def detect_hot_key(
@@ -252,29 +259,14 @@ def merge_changes(
     soft_delete_col: str | None = None,
     synced_at_col: str | None = None,
     dedup: bool = True,
-    strategy: str = "join",
 ) -> DataFrame:
     """Merge a change batch into a destination DataFrame, returning new state.
 
     `changes` carries pk cols + data cols + changelog meta cols. `dest` may be
-    None (bootstrap). Equivalent of the generated MERGE (see module doc).
-
-    Two physical strategies with identical semantics (cross-checked by the
-    property tests):
-    - "join" (default): window LWW dedup then presence-marked full-outer join.
-      Two exchanges (one per side, the window's partitioning is reused by the
-      join). Fastest for the common mostly-unique-keys-per-batch case.
-    - "agg": union + single groupBy(pk) with max_by winner selection — one
-      exchange, and LWW dedup happens in the MAP-SIDE partial aggregate.
-      Wins when batches have heavy per-key churn (duplicates collapse before
-      the shuffle); costs more CPU otherwise (struct-buffer SortAggregate).
+    None (bootstrap). Equivalent of the generated MERGE (see module doc):
+    window LWW dedup, then a presence-marked full-outer join on the pk. Two
+    exchanges, one per side — the join reuses the window's pk partitioning.
     """
-    if strategy == "agg":
-        return merge_changes_agg(
-            dest, changes, pk_cols, data_cols, soft_delete_col, synced_at_col, dedup
-        )
-    if strategy != "join":
-        raise ValueError(f"unknown merge strategy: {strategy!r} (use 'join' or 'agg')")
     if data_cols is None:
         data_cols = [c for c in changes.columns if c not in META_COLS and c not in pk_cols]
     data_cols = [c for c in data_cols if c not in (soft_delete_col, synced_at_col)]
@@ -369,156 +361,12 @@ def merge_changes(
     return joined.where(keep).selectExpr(*select_cols)
 
 
-def merge_changes_agg(
-    dest: DataFrame | None,
-    changes: DataFrame,
-    pk_cols: list[str],
-    data_cols: list[str] | None = None,
-    soft_delete_col: str | None = None,
-    synced_at_col: str | None = None,
-    dedup: bool = True,
-) -> DataFrame:
-    """Aggregation-strategy merge: union(dest, changes) → one groupBy(pk) with
-    `max_by` winner selection — a single exchange, and LWW dedup happens in
-    the MAP-SIDE partial aggregate.
-
-    When to prefer over the default join strategy (see merge_changes): batches
-    with per-key churn (multiple changes per key), where the map-side partial
-    collapses duplicates before the shuffle — measured 1.5x faster than the
-    join strategy on the lineitem changelog (~4 changes/key, sf0.1). For
-    mostly-unique keys the struct-buffer SortAggregate costs more CPU than
-    the window+join. Both strategies are semantically identical
-    (cross-checked by tests/test_merge_strategies.py).
-    """
-    from pyspark.sql import types as T
-
-    if data_cols is None:
-        data_cols = [c for c in changes.columns if c not in META_COLS and c not in pk_cols]
-    data_cols = [c for c in data_cols if c not in (soft_delete_col, synced_at_col)]
-    changes = split_pk_updates(changes, pk_cols)
-    has_unchanged = COL_UNCHANGED in changes.columns
-
-    chg_fields = {f.name: f.dataType for f in changes.schema.fields}
-    vals_type = T.StructType([T.StructField(c, chg_fields[c], True) for c in data_cols])
-    dest_cols = [c for c in dest.columns if c not in pk_cols] if dest is not None else []
-    dvals_fields = [T.StructField(c, chg_fields[c], True) for c in data_cols]
-    dvals_fields.append(T.StructField("_prev_del", T.BooleanType(), True))
-    dvals_fields.append(T.StructField("_prev_sync", T.TimestampType(), True))
-    dvals_type = T.StructType(dvals_fields)
-
-    epoch = F.to_timestamp(F.lit("1970-01-01"))
-    # checkpoints keep their NATIVE orderable type: integer LSN-like offsets
-    # and opaque string offsets (MySQL GTID / Mongo resume tokens,
-    # ref flow/model/cdc_stream.go:56-58) both order correctly in the struct
-    # comparison — casting to long would null out string offsets
-    ck_type = chg_fields.get(COL_CHECKPOINT, T.LongType())
-
-    src = changes.select(
-        *pk_cols,
-        F.struct(*[F.col(c).cast(chg_fields[c]).alias(c) for c in data_cols]).alias("_vals"),
-        kind_code().alias("_rtype"),
-        (F.col(COL_UNCHANGED) if has_unchanged else F.lit(None).cast("array<string>")).alias(
-            "_unch"
-        ),
-        F.lit(1).alias("_is_change"),
-        F.coalesce(F.col(COL_COMMIT_TS).cast("timestamp"), epoch).alias("_ts"),
-        F.col(COL_CHECKPOINT).cast(ck_type).alias("_ck"),
-        F.lit(None).cast(dvals_type).alias("_dvals"),
-    )
-
-    if dest is not None:
-        prev_del = (
-            F.coalesce(F.col(soft_delete_col), F.lit(False))
-            if soft_delete_col and soft_delete_col in dest_cols
-            else F.lit(False)
-        )
-        prev_sync = (
-            F.col(synced_at_col).cast("timestamp")
-            if synced_at_col and synced_at_col in dest_cols
-            else F.lit(None).cast("timestamp")
-        )
-        dst = dest.select(
-            *pk_cols,
-            F.lit(None).cast(vals_type).alias("_vals"),
-            F.lit(-1).alias("_rtype"),
-            F.lit(None).cast("array<string>").alias("_unch"),
-            F.lit(0).alias("_is_change"),
-            epoch.alias("_ts"),
-            # never compared: _is_change=0 loses to any change at the struct's
-            # first field, so the ordering short-circuits before _ck
-            F.lit(None).cast(ck_type).alias("_ck"),
-            F.struct(
-                *[
-                    (F.col(c).cast(chg_fields[c]) if c in dest_cols else F.lit(None).cast(chg_fields[c])).alias(c)
-                    for c in data_cols
-                ],
-                prev_del.alias("_prev_del"),
-                prev_sync.alias("_prev_sync"),
-            ).alias("_dvals"),
-        )
-        unioned = src.unionByName(dst)
-    else:
-        unioned = src
-
-    order = F.struct(F.col("_is_change"), F.col("_ts"), F.col("_ck"))
-    agg = unioned.groupBy(*pk_cols).agg(
-        F.max_by(F.struct(F.col("_vals"), F.col("_rtype"), F.col("_unch")), order).alias("_w"),
-        F.max(F.col("_dvals")).alias("_d"),
-        F.max(F.col("_is_change")).alias("_had"),
-    )
-
-    w_vals, w_rtype, w_unch = F.col("_w._vals"), F.col("_w._rtype"), F.col("_w._unch")
-    d_ = F.col("_d")
-    had = F.col("_had") == 1
-    in_dest = d_.isNotNull()
-    is_delete = had & (w_rtype == F.lit(KIND_DELETE))
-
-    # matched delete keeps destination values (tombstone UPDATE); unmatched
-    # delete takes the source values (tombstone INSERT — reference parity)
-    use_src = had & (~is_delete | ~in_dest)
-
-    def value_of(c: str):
-        src_val = w_vals[c]
-        if has_unchanged:
-            # TOAST-unchanged column keeps the destination value — the single
-            # generic branch replacing the reference's per-combination SQL
-            src_val = F.when(
-                w_unch.isNotNull() & F.array_contains(w_unch, F.lit(c)) & in_dest,
-                d_[c],
-            ).otherwise(w_vals[c])
-        return F.when(use_src, src_val).otherwise(d_[c])
-
-    select_cols = [*[F.col(c) for c in pk_cols], *[value_of(c).alias(c) for c in data_cols]]
-
-    if soft_delete_col:
-        deleted = (
-            F.when(is_delete, F.lit(True))
-            .when(had, F.lit(False))
-            .otherwise(F.coalesce(d_["_prev_del"], F.lit(False)))
-        )
-        select_cols.append(deleted.alias(soft_delete_col))
-        # all rows kept: matched deletes become tombstone updates, unmatched
-        # deletes materialize as tombstone INSERTs (reference parity)
-        keep = F.lit(True)
-    else:
-        # hard delete drops the row; unmatched deletes no-op
-        keep = ~is_delete
-
-    if synced_at_col:
-        select_cols.append(
-            F.when(had, F.current_timestamp()).otherwise(d_["_prev_sync"]).alias(synced_at_col)
-        )
-
-    return agg.where(keep).select(*select_cols)
-
-
 def merge_into_table(
     table: ParquetTable,
     changes: DataFrame,
     data_cols: list[str] | None = None,
     soft_delete_col: str | None = None,
     synced_at_col: str | None = None,
-    strategy: str = "join",
     return_images: bool = False,
     skew_salt: int = 0,
 ) -> tuple[DataFrame, DataFrame] | None:
@@ -533,10 +381,6 @@ def merge_into_table(
     (pre from the touched buckets, post from the just-written table), so
     the images are free beyond one re-read of the touched buckets."""
     pk = table.pk_cols
-    # Always pre-dedup with the window even for the agg strategy (which could
-    # dedup inherently): the row_number filter is cheaper per row than the
-    # struct-buffer max_by, so shrinking the batch first wins — measured
-    # 7.8s vs 11.9s on the 600k-row sf0.1 pipeline.
     # PK-changing updates split BEFORE dedup so the synthetic old-pk delete
     # participates in last-writer-wins under its own key.
     split = split_pk_updates(changes, pk)
@@ -553,7 +397,7 @@ def merge_into_table(
         keys = deduped.select(*pk).distinct()
     if not table.exists:
         boot = merge_changes(None, deduped, pk, data_cols, soft_delete_col, synced_at_col,
-                             dedup=False, strategy=strategy)
+                             dedup=False)
         table.overwrite(boot)
         # a large initial snapshot can overshoot the bucket bound in one
         # write — split oversized base buckets immediately rather than
@@ -590,8 +434,7 @@ def merge_into_table(
                 eager=True  # the buckets are REWRITTEN below — snapshot first
             )
         merged = merge_changes(dest, deduped.drop(BUCKET_COL), pk, data_cols,
-                               soft_delete_col, synced_at_col, dedup=False,
-                               strategy=strategy)
+                               soft_delete_col, synced_at_col, dedup=False)
         merged = merged.withColumn(BUCKET_COL, bexpr)
         table.replace_partitions(merged, buckets)
         if return_images:
@@ -621,7 +464,7 @@ def merge_into_table(
                 eager=True  # table.overwrite below replaces the files pre reads
             )
         merged = merge_changes(dest, deduped, pk, data_cols, soft_delete_col, synced_at_col,
-                               dedup=False, strategy=strategy)
+                               dedup=False)
         table.overwrite(merged)
         if return_images:
             post = table.read().join(F.broadcast(keys), pk, "left_semi")
@@ -644,12 +487,5 @@ def rmt_latest_view(
     """
     if is_deleted is None:
         is_deleted = F.col(COL_KIND) == "delete"
-    rn = (
-        f"row_number() OVER (PARTITION BY {', '.join(_qid(c) for c in pk_cols)}"
-        f" ORDER BY {_qid(version_col)} DESC, {_qid(tiebreak_col)} DESC) AS _rn"
-    )
-    return (
-        appended.selectExpr("*", rn)
-        .where((F.col("_rn") == 1) & ~is_deleted)
-        .drop("_rn")
-    )
+    latest = latest_changes(appended, pk_cols, version_col, tiebreak_col)
+    return latest.where(~is_deleted)

@@ -492,9 +492,10 @@ def test_state_as_of_hypothesis_random_prefixes(spark, tmp_path):
 
 def test_auto_hot_key_salt_engages(spark, tmp_path, monkeypatch):
     """Round-10 auto hot-key guard: a normalize whose batch concentrates
-    on one pk flips the LWW salt on by itself (threshold + floor from
-    CdcTableConfig); an evenly-spread batch keeps the plain window. The
-    destination state is identical either way (the r9 equivalence pin)."""
+    on one pk flips the LWW salt on by itself (threshold + floor are the
+    normalize module constants, lowered here); an evenly-spread batch
+    keeps the plain window. The destination state is identical either way
+    (the r9 equivalence pin)."""
     from peerdb_spark import normalize as N
 
     seen = []
@@ -505,9 +506,9 @@ def test_auto_hot_key_salt_engages(spark, tmp_path, monkeypatch):
         return real(table, changes, *a, **kw)
 
     monkeypatch.setattr(cdc.N, "merge_into_table", spy)
-    cfg = cdc.CdcTableConfig(
-        "t", ["id"], VAL_SCHEMA, str(tmp_path / "t"), n_buckets=4,
-        lww_hot_key_threshold=0.5, lww_hot_key_min_rows=10)
+    monkeypatch.setattr(N, "HOT_KEY_THRESHOLD", 0.5)
+    monkeypatch.setattr(N, "HOT_KEY_MIN_ROWS", 10)
+    cfg = cdc.CdcTableConfig("t", ["id"], VAL_SCHEMA, str(tmp_path / "t"), n_buckets=4)
     pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
     hot = _changelog(spark, [
         ("update", c, "t", {"id": 7 if c % 10 else c, "val": f"v{c}",
@@ -525,10 +526,3 @@ def test_auto_hot_key_salt_engages(spark, tmp_path, monkeypatch):
         spark, cfg.path, ["id"], 4).read().collect()}
     assert got[7] == "v99"  # hot key's last writer (c=100 hits pk 100)
     assert got[200] == "e"
-    # explicit salt config still wins over the probe
-    cfg2 = cdc.CdcTableConfig(
-        "t", ["id"], VAL_SCHEMA, str(tmp_path / "t2"), n_buckets=4,
-        lww_skew_salt=8, lww_hot_key_threshold=0.5, lww_hot_key_min_rows=10)
-    pipe2 = cdc.CdcPipeline(spark, str(tmp_path / "raw2"), [cfg2])
-    pipe2.process_batch(even, 1)
-    assert seen[-1] == 8

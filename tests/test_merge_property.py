@@ -27,16 +27,24 @@ base_rows = st.dictionaries(
 )
 
 
-def replay(base: dict, events: list) -> dict:
+def replay(base: dict, events: list, soft_delete: bool = False) -> dict:
     """Sequential reference semantics: upsert on insert/update, remove on
-    delete (delete of absent key is a no-op)."""
-    state = dict(base)
+    delete (delete of absent key is a no-op).
+
+    With soft_delete every key maps to (val, deleted) and a delete leaves a
+    tombstone holding the last values the destination held for the key —
+    the reference MERGE's `WHEN MATCHED AND type=2 THEN UPDATE SET
+    deleted=TRUE` keeps the pre-batch row, and a delete of a key the
+    destination never held INSERTs the delete's own image."""
+    state = {pk: (val, False) for pk, val in base.items()}
     for kind, pk, val in events:
-        if kind == "delete":
-            state.pop(pk, None)
+        if kind != "delete":
+            state[pk] = (val, False)
+        elif soft_delete:
+            state[pk] = (base.get(pk, val), True)
         else:
-            state[pk] = val
-    return state
+            state.pop(pk, None)
+    return state if soft_delete else {pk: val for pk, (val, _) in state.items()}
 
 
 @settings(
@@ -44,8 +52,8 @@ def replay(base: dict, events: list) -> dict:
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(base=base_rows, events=ops)
-def test_merge_matches_sequential_replay(spark, base, events):
+@given(base=base_rows, events=ops, soft_delete=st.booleans())
+def test_merge_matches_sequential_replay(spark, base, events, soft_delete):
     dest = (
         spark.createDataFrame(
             [(k, v) for k, v in base.items()], "id long, val string"
@@ -73,8 +81,12 @@ def test_merge_matches_sequential_replay(spark, base, events):
         "id long, val string, _kind string, _checkpoint_id long, _commit_ts timestamp,"
         "_txid long, _dst_table string, _unchanged_cols array<string>",
     )
-    got = {r["id"]: r["val"] for r in N.merge_changes(dest, chg, ["id"]).collect()}
-    assert got == replay(base, events)
+    if soft_delete:
+        merged = N.merge_changes(dest, chg, ["id"], soft_delete_col="_del")
+        got = {r["id"]: (r["val"], r["_del"]) for r in merged.collect()}
+    else:
+        got = {r["id"]: r["val"] for r in N.merge_changes(dest, chg, ["id"]).collect()}
+    assert got == replay(base, events, soft_delete)
 
 
 # --- PK-changing updates (normalize.split_pk_updates) ----------------------
@@ -171,47 +183,4 @@ def test_merge_with_pk_updates_matches_replay(spark, base, events):
         "_old struct<id: long, val: string>",
     )
     got = {r["id"]: r["val"] for r in N.merge_changes(dest, chg, ["id"]).collect()}
-    assert got == replay_with_moves(base, events)
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(base=base_rows, events=move_ops)
-def test_merge_agg_with_pk_updates_matches_replay(spark, base, events):
-    """The agg strategy must apply the same split."""
-    dest = (
-        spark.createDataFrame(
-            [(k, v) for k, v in base.items()], "id long, val string"
-        )
-        if base
-        else None
-    )
-    chg_rows = []
-    for i, (kind, key, val) in enumerate(events):
-        if kind == "move":
-            old_pk, new_pk = key
-            chg_rows.append(("update", i, TS + dt.timedelta(seconds=i), i, "t", None,
-                             {"id": old_pk, "val": None}, new_pk, val))
-        else:
-            chg_rows.append((kind, i, TS + dt.timedelta(seconds=i), i, "t", None,
-                             None, key, val))
-    chg = spark.createDataFrame(
-        [
-            {
-                "_kind": k, "_checkpoint_id": c, "_commit_ts": ts, "_txid": tx,
-                "_dst_table": dt_, "_unchanged_cols": u, "_old": old, "id": pk, "val": v,
-            }
-            for (k, c, ts, tx, dt_, u, old, pk, v) in chg_rows
-        ],
-        "id long, val string, _kind string, _checkpoint_id long, _commit_ts timestamp,"
-        "_txid long, _dst_table string, _unchanged_cols array<string>,"
-        "_old struct<id: long, val: string>",
-    )
-    got = {
-        r["id"]: r["val"]
-        for r in N.merge_changes(dest, chg, ["id"], strategy="agg").collect()
-    }
     assert got == replay_with_moves(base, events)

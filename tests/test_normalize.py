@@ -102,6 +102,26 @@ def test_merge_toast_unchanged_cols(spark):
     assert out[1]["val"] == "big-toast"
 
 
+@pytest.mark.xfail(strict=True, reason=(
+    "TOAST backfill reads the pre-batch destination, not the latest in-batch "
+    "image of the column (reference: cdc.go processUpdateMessage + cdc_store)"))
+def test_toast_unchanged_after_in_batch_update(spark):
+    # Postgres holds x='big5' after both updates; the merge dedups to the
+    # second update and backfills x from the destination as it was before
+    # the batch ('big1'), or NULL when the key has no destination row
+    schema = ("id long, v string, x string, _kind string, _checkpoint_id long,"
+              " _commit_ts timestamp, _txid long, _dst_table string,"
+              " _unchanged_cols array<string>")
+    chg = spark.createDataFrame([
+        (1, "a", "big5", "update", 1, TS + dt.timedelta(seconds=1), 1, "t", None),
+        (1, "c", None, "update", 2, TS + dt.timedelta(seconds=2), 2, "t", ["x"]),
+    ], schema)
+    dest = spark.createDataFrame([(1, "a", "big1")], "id long, v string, x string")
+    for base in (dest, None):
+        out = _state(N.merge_changes(base, chg, ["id"]))
+        assert (out[1]["v"], out[1]["x"]) == ("c", "big5")
+
+
 def test_merge_soft_delete_keeps_tombstone(spark):
     dest = spark.createDataFrame([(1, "one"), (2, "two")], "id long, val string")
     chg = _chg(spark, [("delete", 1, 1, None, None)])
@@ -119,14 +139,13 @@ def test_merge_soft_delete_unmatched_delete_inserts_tombstone(spark):
     # destination materializes as a tombstone row, not a no-op
     dest = spark.createDataFrame([(1, "one")], "id long, val string")
     chg = _chg(spark, [("delete", 1, 9, "ghost", None)])
-    for strat in ("join", "agg"):
-        out = _state(
-            N.merge_changes(dest, chg, ["id"], soft_delete_col="_deleted",
-                            synced_at_col="_synced", strategy=strat)
-        )
-        assert out[9]["_deleted"] is True and out[9]["val"] == "ghost", strat
-        assert out[9]["_synced"] is not None, strat
-        assert out[1]["_deleted"] is False, strat
+    out = _state(
+        N.merge_changes(dest, chg, ["id"], soft_delete_col="_deleted",
+                        synced_at_col="_synced")
+    )
+    assert out[9]["_deleted"] is True and out[9]["val"] == "ghost"
+    assert out[9]["_synced"] is not None
+    assert out[1]["_deleted"] is False
     # hard-delete mode: still a no-op
     out = _state(N.merge_changes(dest, chg, ["id"]))
     assert set(out) == {1}

@@ -247,31 +247,6 @@ MAX_EXCHANGES = {
 }
 
 
-def check_agg_merge_single_exchange(spark) -> list[str]:
-    """The agg-strategy merge must stay a single exchange with no join —
-    the property that halves shuffle count on the CDC pipeline hot path."""
-    from pyspark.sql import functions as F
-
-    from peerdb_spark import normalize as N
-
-    dest = spark.range(100).select(F.col("id"), F.lit("x").alias("v"))
-    chg = spark.range(50).select(
-        F.col("id"), F.lit("y").alias("v"), F.lit("update").alias("_kind"),
-        F.col("id").alias("_checkpoint_id"), F.current_timestamp().alias("_commit_ts"),
-    )
-    plan = (
-        N.merge_changes(dest, chg, ["id"], strategy="agg")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    msgs = []
-    msgs.append(
-        ("ok" if plan.count("Exchange") <= 1 else "FAIL")
-        + f": agg merge exchanges {plan.count('Exchange')} <= 1"
-    )
-    msgs.append(("ok" if "Join" not in plan else "FAIL") + ": agg merge has no join")
-    return msgs
-
-
 def check_lsh_verify_composition(spark, sf_dir: str) -> list[str]:
     """The declared ngram-jaccard query must be the composed LSH→verify
     pipeline. The declared query's localCheckpoints hide the candidate
@@ -375,11 +350,6 @@ def main() -> int:
     spark = get_spark("audit_plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     failures = 0
-    print("merge_changes(strategy='agg'):")
-    for m in check_agg_merge_single_exchange(spark):
-        if m.startswith("FAIL"):
-            failures += 1
-        print(f"  {m}")
     print("lsh_verified_pairs (unmaterialized composition):")
     for m in check_lsh_verify_composition(spark, args.sf):
         if m.startswith("FAIL"):

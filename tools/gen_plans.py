@@ -21,7 +21,7 @@ COMMENT = {
         "only the final group-by aggregates exchange."
     ),
     "cdc_normalize_merge": (
-        "The flagship merge (join strategy). The LWW dedup window and the "
+        "The flagship merge. The LWW dedup window and the "
         "full-outer merge join hash-partition on the same pk, so Spark reuses "
         "the exchange: one shuffle per side, total 2."
     ),
