@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from peerdb_spark import normalize as N
 from peerdb_spark.schema_evolution import _parse_ddl
-from peerdb_spark.storage import ParquetTable
+from peerdb_spark.storage import SCHEMA_FILE, ParquetTable, load_schema, read_parquet, save_schema
 
 # Input changelog schema (FIXTURES.md F3)
 CHANGELOG_SCHEMA = T.StructType(
@@ -109,6 +109,18 @@ _RAW_EMPTY_SCHEMA = T.StructType(
 )
 
 
+@dataclass(frozen=True)
+class RangeMeta:
+    """What the parquet footers of a raw batch range prove, read on the
+    driver without a Spark job (RawTable.range_meta)."""
+
+    rows: int
+    # the exact destination set, or None when the statistics cannot prove it
+    dsts: list[str] | None
+    # False only when every row group's record-type max is below KIND_RELATION
+    may_have_relations: bool
+
+
 class RawTable:
     """Append-only raw staging table, parquet partitioned by batch id.
 
@@ -119,6 +131,12 @@ class RawTable:
     directory. Replay guards must use is_batch_committed(); append() itself
     clears a partial (marker-less) directory before re-writing so a replayed
     batch never double-appends partial rows.
+
+    The first append also stores the data-file schema at the root
+    (storage.SCHEMA_FILE); reads request it, so they launch no
+    schema-inference job (a directory written by an older version has
+    none and is inferred). The batch id stays a discovered partition
+    column.
     """
 
     MARKER = "_PEERDB_COMMITTED"
@@ -144,9 +162,10 @@ class RawTable:
         # would serialize the JSON/uuid projection and the parquet encode on
         # a few tasks — fan out first; no-op for well-split feeds, and the
         # parallel write also gives normalize a well-split read
-        changelog_to_raw(ensure_parallelism(changelog), batch_id).write.mode(
-            "append"
-        ).partitionBy(RAW_BATCH).parquet(self.path)
+        raw = changelog_to_raw(ensure_parallelism(changelog), batch_id)
+        raw.write.mode("append").partitionBy(RAW_BATCH).parquet(self.path)
+        if not os.path.exists(os.path.join(self.path, SCHEMA_FILE)):
+            save_schema(self.path, raw.drop(RAW_BATCH).schema)
         # an EMPTY batch (heartbeat / idle micro-batch) writes no partition
         # dir at all — create it so the commit marker still lands and the
         # batch id is durably recorded as synced (the reference records
@@ -156,20 +175,45 @@ class RawTable:
         with open(os.path.join(part, self.MARKER), "w") as fh:
             fh.write("")
 
-    def batch_rows(self, start_batch: int, end_batch: int) -> int:
-        """Total rows staged in a batch range, from parquet FOOTERS only
-        (no data read) — the cheap size gate the auto hot-key probe uses."""
+    def range_meta(self, start_batch: int, end_batch: int) -> RangeMeta:
+        """Row count, destination set and relation-record presence of a
+        batch range, from parquet FOOTERS only (no data read, no Spark job).
+
+        The destination set is exact when every non-empty row group's
+        destination column has min == max and no nulls (always so for a
+        single-destination mirror); a range whose files mix destinations
+        gets None and the caller scans. Relation records are
+        ruled out when every row group's record-type max is below
+        KIND_RELATION. A missing or partial statistic only ever sends the
+        caller to its scan, never to a wrong answer."""
         import pyarrow.parquet as pq
 
-        total = 0
+        rows, dsts, exact, may_rel = 0, set(), True, False
         for b in range(start_batch, end_batch + 1):
             d = self.batch_dir(b)
             if not os.path.isdir(d):
                 continue
             for name in os.listdir(d):
-                if name.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
-        return total
+                if not name.endswith(".parquet"):
+                    continue
+                md = pq.read_metadata(os.path.join(d, name))
+                rows += md.num_rows
+                names = md.schema.names
+                i_dst, i_type = names.index(RAW_DST), names.index(RAW_TYPE)
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    if rg.num_rows == 0:
+                        continue
+                    st = rg.column(i_dst).statistics
+                    if (st is not None and st.has_min_max and st.has_null_count
+                            and st.null_count == 0 and st.min == st.max):
+                        dsts.add(st.min)
+                    else:
+                        exact = False
+                    st = rg.column(i_type).statistics
+                    if st is None or not st.has_min_max or st.max >= N.KIND_RELATION:
+                        may_rel = True
+        return RangeMeta(rows, sorted(dsts) if exact else None, may_rel)
 
     def committed_batches(self) -> list[int]:
         """Sorted batch ids whose completion marker exists — O(#retained
@@ -219,8 +263,8 @@ class RawTable:
         # every normalize is driver-side work that grows with table age).
         # If the range has no files its result is empty regardless of what
         # other partitions hold, so the typed-empty frame is exact; if it
-        # has any file, root-level schema inference succeeds (file-less
-        # sibling partition dirs contribute no leaf files and no rows).
+        # has any file, the root-level read succeeds (file-less sibling
+        # partition dirs contribute no leaf files and no rows).
         def _has_parquet(root: str) -> bool:
             return any(
                 f.endswith(".parquet")
@@ -235,7 +279,7 @@ class RawTable:
         )
         if not range_has_files:
             return self.spark.createDataFrame([], _RAW_EMPTY_SCHEMA)
-        df = self.spark.read.parquet(self.path)
+        df = read_parquet(self.spark, self.path, load_schema(self.path))
         # partition-pruned: RAW_BATCH is a directory partition column
         return df.where(F.col(RAW_BATCH).between(start_batch, end_batch))
 
@@ -621,7 +665,7 @@ class CdcPipeline:
             # young-mirror behavior existing 'auto' users saw)
             if self._dest_row_count() == 0:
                 return True
-            pending = self.raw.batch_rows(lo, hi)
+            pending = self.raw.range_meta(lo, hi).rows
             # due iff pending >= max(auto_min_rows, ratio * dest): the
             # floor gates first (below it a merge cannot amortize its
             # bucket reread no matter how small the destination), then
@@ -672,29 +716,30 @@ class CdcPipeline:
         lo, hi = rng
         return self.state_as_of(dst, hi, start_batch=lo, base=base)
 
-    def _batch_meta(self, raw: DataFrame) -> tuple[list[str], list]:
+    def _batch_meta(self, raw: DataFrame, meta: RangeMeta) -> tuple[list[str], list]:
         """Pre-merge driver metadata: the distinct destination list AND the
-        (rare, metadata-sized) relation records, ts-ordered. Two NARROW
-        scans instead of the r11 fused groupBy (which referenced RAW_DATA
-        for every row, so the parquet reader materialized the full JSON
-        payload column across the whole range): the dst list reads ONLY the
-        dictionary-encoded dst column, and the relation harvest carries a
-        pushed `type == KIND_RELATION` predicate — parquet row-group
-        min/max stats on the type column skip ALL data pages in the common
-        no-schema-change batch (§6: pushdown must reach the scan). Wall-
-        neutral at sf0.1 (two tiny jobs ≈ one medium one); strictly less
-        I/O as the range grows. Driver-side result stays bounded by
+        (rare, metadata-sized) relation records, ts-ordered. Each half
+        comes from the range's footer statistics (`meta`) when they prove
+        it, so a steady batch launches no job here; only the unproven half
+        runs its narrow scan. The dst scan reads ONLY the dictionary-encoded
+        dst column; the relation harvest carries a pushed `type ==
+        KIND_RELATION` predicate, so row-group stats skip the data pages of
+        every relation-free file. Driver-side result stays bounded by
         #tables + #schema-changes."""
-        dsts = [r[0] for r in raw.select(RAW_DST).distinct().collect()]
-        rel_rows = (
-            raw.where(F.col(RAW_TYPE) == N.KIND_RELATION)
-            .select(RAW_DST, RAW_DATA, RAW_TS)
-            .collect()
-        )
-        rels = [
-            {RAW_DST: r[RAW_DST], RAW_DATA: r[RAW_DATA], RAW_TS: r[RAW_TS]}
-            for r in rel_rows
-        ]
+        dsts = meta.dsts
+        if dsts is None:
+            dsts = [r[0] for r in raw.select(RAW_DST).distinct().collect()]
+        rels = []
+        if meta.may_have_relations:
+            rel_rows = (
+                raw.where(F.col(RAW_TYPE) == N.KIND_RELATION)
+                .select(RAW_DST, RAW_DATA, RAW_TS)
+                .collect()
+            )
+            rels = [
+                {RAW_DST: r[RAW_DST], RAW_DATA: r[RAW_DATA], RAW_TS: r[RAW_TS]}
+                for r in rel_rows
+            ]
         # same-ts tiebreak on the delta payload — the r11 fused scan's
         # within-destination sort_array(struct(ts, data)) order (cross-dst
         # tie order never mattered: deltas apply per destination)
@@ -831,17 +876,17 @@ class CdcPipeline:
         sequentially inside one transaction per destination; independent
         parquet tables have no cross-table transaction to preserve."""
         raw = self.raw.read_batches(start_batch, end_batch)
-        # distinct destinations + relation records in ONE scan
-        # (ref: flow/connectors/postgres/client.go:52-53)
-        dsts, rels = self._batch_meta(raw)
+        # one driver-side footer pass: the row count (the auto hot-key
+        # probe's size gate, shared by all tables in the range) and, when
+        # the statistics prove them, the distinct destinations and the
+        # absence of relation records (ref: flow/connectors/postgres/
+        # client.go:52-53)
+        meta = self.raw.range_meta(start_batch, end_batch)
+        dsts, rels = self._batch_meta(raw, meta)
         self._apply_relation_records(rels)
         if self.auto_evolve:
             self._auto_evolve(raw, dsts)
-
-        # cheap size gate for the auto hot-key probe, shared by all tables
-        # in the range: parquet footer row counts, no data read (computed
-        # once, outside the merge thread pool)
-        range_rows = self.raw.batch_rows(start_batch, end_batch)
+        range_rows = meta.rows
 
         def _one(dst: str) -> None:
             cfg = self.tables.get(dst)

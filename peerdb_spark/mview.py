@@ -216,7 +216,8 @@ class ViewTable:
     durable storage (CdcPipeline's bucketed ParquetTable destinations).
     Folds (pre, post) touched-pk images produced by the merge step
     (normalize.merge_into_table(return_images=True)); same versioned-
-    pointer crash contract and single-writer assumption as MviewTable."""
+    pointer crash contract and single-writer assumption as MviewTable.
+    The pointer also records each version's schema, so reads infer none."""
 
     def __init__(self, spark, path: str, dims: list[str], value_col: str):
         import os
@@ -236,12 +237,13 @@ class ViewTable:
     def read(self) -> DataFrame | None:
         import os
 
-        from peerdb_spark.rollup import read_pointer
+        from peerdb_spark.rollup import read_pointer, read_snapshot
 
         m = read_pointer(self._pointer)
         if m["version"] == 0:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{m['version']}"))
+        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}"),
+                             m.get("schema"))
 
     def backfill(self, live_rows: DataFrame) -> bool:
         """Seed the view from EXISTING table state (attaching mid-life):
@@ -265,7 +267,7 @@ class ViewTable:
 
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({**m, "version": nxt}, fh)
+            json.dump({**m, "version": nxt, "schema": contrib.schema.jsonValue()}, fh)
         os.replace(tmp, self._pointer)
         return True
 
@@ -282,7 +284,8 @@ class ViewTable:
         )
         nxt = m["version"] + 1
         new_view.write.mode("overwrite").parquet(os.path.join(self.path, f"v{nxt}"))
-        publish_pointer(self._pointer, {**m, "version": nxt}, batch_id)
+        publish_pointer(self._pointer,
+                        {**m, "version": nxt, "schema": new_view.schema.jsonValue()}, batch_id)
         from peerdb_spark.rollup import retire_snapshot
 
         retire_snapshot(self.path, nxt)
@@ -329,12 +332,13 @@ class MviewTable:
     def _read(self, which: str) -> DataFrame | None:
         import os
 
+        from peerdb_spark.rollup import read_snapshot
+
         m = self._meta()
         if m["version"] == 0:
             return None
-        return self.spark.read.parquet(
-            os.path.join(self.path, f"v{m['version']}", which)
-        )
+        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}", which),
+                             m.get("schema", {}).get(which))
 
     def mirror(self) -> DataFrame | None:
         """Full mirror state incl. delete tombstones (they beat stragglers)."""
@@ -367,7 +371,8 @@ class MviewTable:
         # pointer swings, so readers never see a half-published version
         new_mirror.write.mode("overwrite").parquet(os.path.join(vdir, "mirror"))
         new_view.write.mode("overwrite").parquet(os.path.join(vdir, "view"))
-        publish_pointer(self._pointer, {**m, "version": nxt}, batch_id)
+        schema = {"mirror": new_mirror.schema.jsonValue(), "view": new_view.schema.jsonValue()}
+        publish_pointer(self._pointer, {**m, "version": nxt, "schema": schema}, batch_id)
         from peerdb_spark.rollup import retire_snapshot
 
         retire_snapshot(self.path, nxt)

@@ -25,6 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from peerdb_spark.storage import read_parquet
 
 MEASURES = ["cnt", "sum_v", "min_v", "max_v"]
 
@@ -127,6 +130,13 @@ def read_pointer(pointer_path: str) -> dict:
     return m
 
 
+def read_snapshot(spark, path: str, schema: dict | None) -> DataFrame:
+    """Read a published snapshot with the schema its pointer recorded
+    (`DataType.jsonValue()` form), so a read launches no schema-inference
+    job; pointers written by older versions hold none and infer it."""
+    return read_parquet(spark, path, None if schema is None else T.StructType.fromJson(schema))
+
+
 def is_applied(m: dict, batch_id: int) -> bool:
     return batch_id <= m["applied_until"] or batch_id in m["applied_extra"]
 
@@ -168,8 +178,9 @@ class RollupTable:
     """Durable maintained rollup with EXACTLY-ONCE folding.
 
     State layout: versioned snapshot dirs (`v{n}/` parquet) plus a
-    `_CURRENT` pointer file holding `{version, applied_until,
-    applied_extra}` — the applied-batch set compacted to a contiguous
+    `_CURRENT` pointer file holding `{version, schema, applied_until,
+    applied_extra}` — the schema is the one v{n} was written with, so reads
+    infer nothing — and the applied-batch set compacted to a contiguous
     watermark (ids stay monotone under Structured Streaming, so the
     pointer is O(1) in steady state; legacy `applied`-list pointers are
     upgraded on read) — published with an atomic rename. A fold writes the next snapshot
@@ -221,13 +232,13 @@ class RollupTable:
         m = self._meta()
         if m["version"] == 0:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{m['version']}"))
+        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}"),
+                             m.get("schema"))
 
     def fold(self, batch: DataFrame, batch_id: int) -> bool:
         """Fold one batch; returns False when batch_id was already applied
         (redelivery no-op). Publish order: snapshot fully written, then
         pointer renamed — never a torn read."""
-        import json
         import os
 
         m = self._meta()
@@ -239,6 +250,7 @@ class RollupTable:
         merged = rollup_merge(self.read(), delta, self.dims)
         nxt = m["version"] + 1
         merged.write.mode("overwrite").parquet(os.path.join(self.path, f"v{nxt}"))
-        publish_pointer(self._pointer, {**m, "version": nxt}, batch_id)
+        publish_pointer(self._pointer,
+                        {**m, "version": nxt, "schema": merged.schema.jsonValue()}, batch_id)
         retire_snapshot(self.path, nxt)
         return True

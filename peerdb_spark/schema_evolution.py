@@ -10,9 +10,10 @@ Reference semantics (studied, not copied):
   (default backfill, flow/connectors/postgres/cdc.go:1490-1560).
 
 Spark realization: destination parquet tables evolve by unioning the new
-column into the stored schema sidecar; reads apply the evolved schema with
-mergeSchema so historical files surface NULLs. No data rewrite — O(1) DDL,
-same as a warehouse ALTER TABLE ADD COLUMN.
+column into the stored schema sidecar; every read requests the sidecar
+schema (storage.ParquetTable.read_raw), so historical files surface NULLs
+and upcast to widened types. No data rewrite — O(1) DDL, same as a
+warehouse ALTER TABLE ADD COLUMN.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from peerdb_spark.storage import ParquetTable
+from peerdb_spark.storage import ParquetTable, save_schema
 
 
 @dataclass
@@ -50,7 +51,7 @@ def delta_from_relation_record(data_json: str, dst_table: str) -> SchemaDelta:
 
 
 # lossless type-widening lattice: every hop preserves all existing values
-# (the casts read_evolved applies to pre-widening files are exact)
+# (the casts a sidecar-schema read applies to pre-widening files are exact)
 _WIDENINGS: dict[str, set[str]] = {
     "tinyint": {"smallint", "int", "bigint", "double", "string"},
     "smallint": {"int", "bigint", "double", "string"},
@@ -71,8 +72,9 @@ def is_safe_widening(old_ddl: str, new_ddl: str) -> bool:
 def apply_delta(table: ParquetTable, delta: SchemaDelta) -> list[str]:
     """Apply add-column and type-widening deltas to the table's schema
     sidecar; returns the column names actually changed (repeat deltas dedup
-    to no-ops). Widening never rewrites data files: read_evolved casts
-    pre-widening files to the sidecar type on read, which is exact because
+    to no-ops). Widening never rewrites data files: reads request the
+    sidecar schema and the parquet reader casts pre-widening files to it
+    (mergeSchema would refuse int/bigint footers), which is exact because
     only LOSSLESS widenings are accepted (is_safe_widening — e.g. int→
     bigint yes, bigint→int or bigint→double refused)."""
     schema = table._load_schema()
@@ -100,12 +102,7 @@ def apply_delta(table: ParquetTable, delta: SchemaDelta) -> list[str]:
         new_fields[idx] = T.StructField(name, _parse_ddl(ddl), True)
         added.append(name)
     if added:
-        import os
-
-        tmp = table._schema_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(T.StructType(new_fields).json())
-        os.replace(tmp, table._schema_path)  # atomic publish
+        save_schema(table.path, T.StructType(new_fields))
     return added
 
 
@@ -139,25 +136,6 @@ def _parse_ddl(ddl: str) -> T.DataType:
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(ddl)
-
-
-def read_evolved(table: ParquetTable):
-    """Read with the evolved schema: files written before a delta surface
-    NULL for added columns and upcast to widened types. The sidecar schema
-    is passed as the REQUESTED read schema — the parquet reader fills
-    missing columns with NULL and promotes lossless type differences
-    (int32 files under a bigint request), where mergeSchema would refuse
-    to merge int/bigint footers outright."""
-    schema = table._load_schema()
-    if schema is None:
-        return table.spark.read.option("mergeSchema", "true").parquet(table.path)
-    from peerdb_spark.storage import BUCKET_COL
-
-    req = T.StructType(
-        [*schema.fields, T.StructField(BUCKET_COL, T.IntegerType(), True)]
-    )
-    df = table.spark.read.schema(req).parquet(table.path)
-    return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
 def detect_payload_drift(

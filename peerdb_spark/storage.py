@@ -36,11 +36,13 @@ path if a deployment needs MVCC-style reads of the raw mirror.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 BUCKET_COL = "_peerdb_bucket"
 
@@ -48,6 +50,35 @@ BUCKET_COL = "_peerdb_bucket"
 # inconclusive (e.g. pid recycled). Normal batches finish in seconds; an hour
 # of silence means the writer is gone and readers may roll its crash forward.
 LEASE_STALE_SECONDS = 3600.0
+
+
+# a directory's stored schema; underscore-prefixed, so parquet readers skip it
+SCHEMA_FILE = "_peerdb_schema.json"
+
+
+def save_schema(dir_path: str, schema: T.StructType) -> None:
+    os.makedirs(dir_path, exist_ok=True)
+    path = os.path.join(dir_path, SCHEMA_FILE)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(schema.json())
+    os.replace(tmp, path)  # atomic publish (no torn sidecar)
+
+
+def load_schema(dir_path: str) -> T.StructType | None:
+    path = os.path.join(dir_path, SCHEMA_FILE)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return T.StructType.fromJson(json.load(f))
+
+
+def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None) -> DataFrame:
+    """Parquet read with a stored schema; only a directory without one (as
+    written by older versions) falls back to footer inference, which costs
+    a Spark job per read."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def bucket_expr(pk_cols: list[str], n_buckets: int):
@@ -97,22 +128,13 @@ class ParquetTable:
     # -- helpers ----------------------------------------------------------
     @property
     def _schema_path(self) -> str:
-        return os.path.join(self.path, "_peerdb_schema.json")
+        return os.path.join(self.path, SCHEMA_FILE)
 
     def _save_schema(self, df: DataFrame) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._schema_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(df.schema.json())
-        os.replace(tmp, self._schema_path)  # atomic publish (no torn sidecar)
+        save_schema(self.path, df.schema)
 
-    def _load_schema(self):
-        from pyspark.sql import types as T
-
-        if os.path.exists(self._schema_path):
-            with open(self._schema_path) as f:
-                return T.StructType.fromJson(__import__("json").loads(f.read()))
-        return None
+    def _load_schema(self) -> T.StructType | None:
+        return load_schema(self.path)
 
     # -- bucket manifest (extendible-hashing leaf set) ----------------------
     @property
@@ -123,16 +145,12 @@ class ParquetTable:
         """Current leaf bucket ids. Defaults to the base residues for a
         never-split (or legacy) table — identical behavior to the static
         scheme, no migration."""
-        import json
-
         if os.path.exists(self._manifest_path):
             with open(self._manifest_path) as f:
                 return list(json.load(f)["leaves"])
         return list(range(self.n_buckets))
 
     def _save_leaves(self, leaves: list[int]) -> None:
-        import json
-
         os.makedirs(self.path, exist_ok=True)
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
@@ -261,15 +279,24 @@ class ParquetTable:
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
     def read_raw(self) -> DataFrame:
-        """Read including the bucket partition column (for pruned merges)."""
+        """Read including the bucket partition column (for pruned merges).
+
+        The schema sidecar (written on every write, evolved in place by
+        schema_evolution.apply_delta) is the REQUESTED read schema: no
+        inference job, files written before an add-column delta surface
+        NULL for it, and pre-widening files upcast to the widened type.
+        Inferring instead would take the schema of whichever footer Spark
+        samples — after a delta that can be a pre-delta file, and the
+        column then vanishes from reads and from the next merge's rewrite
+        of its bucket. Only a legacy table without a sidecar is inferred."""
         self._repair_if_safe()  # a reader after a CRASH sees restored buckets
+        schema = self._load_schema()
         if not self.exists:
             # a table whose rows were all deleted still reads as empty with
-            # its last known schema (schema sidecar written on every write)
-            schema = self._load_schema()
+            # its last known schema
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path, schema)
 
     # -- write modes ------------------------------------------------------
     def overwrite(self, df: DataFrame) -> None:
@@ -407,15 +434,13 @@ class ParquetTable:
         #    the (idempotent) manifest swap and drop the leftovers. A parked
         #    dir with no marker is a fully completed split's final-rmtree
         #    leftover.
-        import json as _json
-
         for name in sorted(os.listdir(self.path)):
             if not (name.startswith(".split-pending-") and name.endswith(".json")):
                 continue
             marker = os.path.join(self.path, name)
             try:
                 with open(marker) as f:
-                    info = _json.load(f)
+                    info = json.load(f)
                 parent, children = int(info["parent"]), [int(c) for c in info["children"]]
             except (ValueError, KeyError, OSError):
                 os.remove(marker)  # torn marker: pre-publish tmp can't exist
@@ -525,7 +550,6 @@ class ParquetTable:
         re-run). Child ids are unique table-wide and a parent can split at
         most once ever, so rollback can never delete committed data."""
         assert self.n_buckets and self.pk_cols, "bucketed table required"
-        import json
         import shutil
         import uuid
 
@@ -542,8 +566,13 @@ class ParquetTable:
                 return (c1, c2)
             h = F.xxhash64(*[F.col(c) for c in self.pk_cols])
             child = (F.pmod(h, F.lit(2 * m)) + F.lit(2 * m)).cast("int")
+            # the bucket dir holds data columns only (the bucket id is its
+            # directory name)
+            schema = self._load_schema()
+            if schema is not None:
+                schema = T.StructType([f for f in schema.fields if f.name != BUCKET_COL])
             staged = (
-                self.spark.read.parquet(pdir)
+                read_parquet(self.spark, pdir, schema)
                 .withColumn(BUCKET_COL, child)
                 .repartition(2, F.col(BUCKET_COL))
             )

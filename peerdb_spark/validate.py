@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from peerdb_spark.storage import ParquetTable
+
 
 @dataclass
 class CheckResult:
@@ -152,7 +154,9 @@ def validate_mirror(
         # resync exactly like the reference (tables recreated)
         if not resync:
             try:
-                existing = spark.read.parquet(cfg.path)
+                # the stored schema, not a sampled footer, which can predate
+                # an add-column delta
+                existing = ParquetTable(spark, cfg.path).read()
                 dst_fields = {f.name: f.dataType for f in existing.schema.fields}
             except Exception:
                 dst_fields = None  # fresh destination: nothing to validate

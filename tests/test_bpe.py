@@ -162,6 +162,26 @@ def test_bpe_encode_ranked_equals_fold_on_trained_tables(spark):
     check()
 
 
+def test_bpe_encode_words_never_yields_null_or_empty_token_arrays(spark):
+    """bpe_encode explodes the vocab's tokens with explode_OUTER only to
+    keep Catalyst from inferring a `size(tokens) > 0` filter into the corpus
+    scan; that equals a plain explode only while no word encodes to a NULL
+    or empty array. Pin it for both strategies, the empty word included
+    (Spark's split('', '') gives [''], and the ranked kernel mirrors it)."""
+    from peerdb_spark.functions.bpe import bpe_encode_words
+
+    words = ["", "a", "low", "lower", "lowest", "newest", "wide"]
+    merges, _ = python_bpe(Counter(["low", "lower", "newest", "wide"]), k=6)
+    wdf = spark.createDataFrame([(w,) for w in words], "w string")
+    for strategy in ("fold", "ranked"):
+        got = {r["w"]: r["tokens"]
+               for r in bpe_encode_words(wdf, merges, strategy=strategy).collect()}
+        assert set(got) == set(words)
+        assert got[""] == [""], strategy
+        for w in words[1:]:
+            assert got[w] and all(got[w]) and "".join(got[w]) == w, (strategy, w)
+
+
 def test_bpe_encode_ranked_large_merge_table(spark):
     """The scale path: a ≥1,000-merge trained table (the fold path's plan
     would be 1,000 chained array folds — unbuildable at real vocab sizes)

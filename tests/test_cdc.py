@@ -526,3 +526,136 @@ def test_auto_hot_key_salt_engages(spark, tmp_path, monkeypatch):
         spark, cfg.path, ["id"], 4).read().collect()}
     assert got[7] == "v99"  # hot key's last writer (c=100 hits pk 100)
     assert got[200] == "e"
+
+
+def _meta_matches_scan(pipe, lo, hi):
+    """range_meta + _batch_meta agree with the forced Spark scans (the
+    result when no footer statistic proves anything) and with the row
+    count; returns the footer meta so a case can pin which half it proved."""
+    raw = pipe.raw.read_batches(lo, hi)
+    meta = pipe.raw.range_meta(lo, hi)
+    dsts, rels = pipe._batch_meta(raw, meta)
+    want_dsts, want_rels = pipe._batch_meta(raw, cdc.RangeMeta(meta.rows, None, True))
+    assert sorted(dsts) == sorted(want_dsts)
+    assert rels == want_rels
+    assert meta.rows == raw.count()
+    return meta
+
+
+def test_footer_batch_meta_matches_spark_scan(spark, tmp_path):
+    """The footer statistics prove the destination set and the absence of
+    relation records exactly when they can, and fall back to the scan
+    otherwise: one destination, two destinations sharing a file, relation
+    and message records, an empty heartbeat batch, string checkpoints."""
+    rel = {"added": [{"name": "c2", "type": "int"}]}
+    cfgs = [
+        cdc.CdcTableConfig("t1", ["id"], VAL_SCHEMA, str(tmp_path / "t1"), n_buckets=4),
+        cdc.CdcTableConfig("t2", ["id"], VAL_SCHEMA, str(tmp_path / "t2"), n_buckets=4),
+    ]
+    pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), cfgs)
+    ins = [("insert", i, "t1", {"id": i, "val": f"a{i}", "amt": 1.0}, None, [])
+           for i in range(1, 9)]
+    pipe.sync_batch(_changelog(spark, ins), 0)
+    meta = _meta_matches_scan(pipe, 0, 0)
+    assert meta == cdc.RangeMeta(8, ["t1"], False)
+
+    # two destinations sharing files (32 interleaved rows, fanned out over
+    # fewer files by the raw writer), plus a relation record for t1 whose
+    # added column the batch's t1 rows carry: both halves fall back to the
+    # scan, and the delta must still apply before the merge
+    both = [("relation", 20, "t1", rel, None, [])]
+    for i in range(16):
+        both += [
+            ("insert", 21 + 2 * i, "t1", {"id": 9 + i, "val": "a", "amt": 1.0, "c2": i}, None, []),
+            ("insert", 22 + 2 * i, "t2", {"id": i, "val": "b", "amt": 2.0}, None, []),
+        ]
+    pipe.sync_batch(_changelog(spark, both).coalesce(1), 1)
+    meta = _meta_matches_scan(pipe, 1, 1)
+    assert meta.dsts is None and meta.may_have_relations
+    assert _meta_matches_scan(pipe, 0, 1).rows == 41
+    pipe.normalize_batches(0, 1)
+    got = {r["id"]: r["c2"] for r in pipe.read_table("t1").collect()}
+    assert got == {**{i: None for i in range(1, 9)}, **{9 + i: i for i in range(16)}}
+    assert sorted(r["id"] for r in pipe.read_table("t2").collect()) == list(range(16))
+
+    # a message record (kind 4) may look like a relation to the statistics:
+    # the relation scan runs and finds none
+    msg = [("message", 30, "t1", {"prefix": "p", "content": "x"}, None, [])]
+    pipe.sync_batch(_changelog(spark, msg), 2)
+    meta = _meta_matches_scan(pipe, 2, 2)
+    assert meta == cdc.RangeMeta(1, ["t1"], True)
+
+    # an empty heartbeat batch stages no file
+    pipe.sync_batch(_changelog(spark, []), 3)
+    assert _meta_matches_scan(pipe, 3, 3) == cdc.RangeMeta(0, [], False)
+
+    # string (GTID-style) checkpoints
+    gtid = cdc.changelog_schema_with_checkpoint(T.StringType())
+    rows = [("insert", f"3E11FA47-71CA:{i}", TS, i, "t2", "t2",
+             json.dumps({"id": 10 + i, "val": "g", "amt": 0.5}), None, [])
+            for i in range(1, 4)]
+    pipe2 = cdc.CdcPipeline(spark, str(tmp_path / "raw_gtid"), cfgs)
+    pipe2.sync_batch(spark.createDataFrame(rows, gtid), 0)
+    assert _meta_matches_scan(pipe2, 0, 0) == cdc.RangeMeta(3, ["t2"], False)
+
+
+def _jobs_while(sc, fn):
+    """(fn(), number of Spark jobs fn submitted)."""
+    import uuid
+
+    group, prev = f"probe-{uuid.uuid4().hex}", sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_restart_reads_stored_schemas_and_legacy_dirs_infer(spark, tmp_path):
+    """A fresh CdcPipeline and ViewTable over existing directories read with
+    the schemas stored at write time, so building the reads launches no
+    Spark job. A raw directory, destination and view pointer holding no
+    schema, as older versions wrote them, still read the same rows through
+    footer inference."""
+    import os
+
+    from peerdb_spark.mview import ViewTable
+
+    def start():
+        cfg = cdc.CdcTableConfig("t1", ["id"], VAL_SCHEMA, str(tmp_path / "t1"), n_buckets=4)
+        return (cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg]),
+                ViewTable(spark, str(tmp_path / "view"), ["val"], "amt"))
+
+    pipe, view = start()
+    pipe.attach_view("t1", view)
+    rows = [("insert", i, "t1", {"id": i, "val": "ab"[i % 2], "amt": float(i)}, None, [])
+            for i in range(1, 7)]
+    pipe.process_batch(_changelog(spark, rows), 0)
+
+    def reads():
+        return pipe.read_table("t1"), pipe.raw.read_batches(0, 0), view.read()
+
+    def collect(dfs):
+        return [sorted(map(tuple, df.collect())) for df in dfs]
+
+    pipe, view = start()
+    dfs, jobs = _jobs_while(spark.sparkContext, reads)
+    assert jobs == 0
+    assert [df.columns for df in dfs] == [["id", "val", "amt"], [
+        cdc.RAW_UID, cdc.RAW_TS, cdc.RAW_DST, cdc.RAW_DATA, cdc.RAW_TYPE, cdc.RAW_MATCH,
+        cdc.RAW_UNCHANGED, "_peerdb_checkpoint_id", cdc.RAW_BATCH], ["val", "cnt", "sum_v"]]
+    want = collect(dfs)
+    assert want[0] == [(i, "ab"[i % 2], float(i)) for i in range(1, 7)]
+    assert want[2] == [("a", 3, 12.0), ("b", 3, 9.0)]
+
+    os.remove(tmp_path / "raw" / "_peerdb_schema.json")
+    os.remove(tmp_path / "t1" / "_peerdb_schema.json")
+    pointer = tmp_path / "view" / "_CURRENT"
+    legacy = json.loads(pointer.read_text())
+    del legacy["schema"]
+    pointer.write_text(json.dumps(legacy))
+    pipe, view = start()
+    dfs, jobs = _jobs_while(spark.sparkContext, reads)
+    assert jobs == 3  # one footer-inference job per read
+    assert collect(dfs) == want

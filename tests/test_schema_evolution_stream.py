@@ -10,7 +10,6 @@ from pyspark.sql import types as T
 
 from peerdb_spark import cdc
 from peerdb_spark.registry import Catalog
-from peerdb_spark.schema_evolution import read_evolved
 from peerdb_spark.storage import ParquetTable
 
 VAL = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
@@ -50,7 +49,7 @@ def test_relation_record_adds_column_mid_stream(spark, tmp_path):
     pipe.normalize_batches(1, 1)
 
     table = ParquetTable(spark, cfg.path, ["id"], 4)
-    got = {r["id"]: (r["v"], r["c2"]) for r in read_evolved(table).collect()}
+    got = {r["id"]: (r["v"], r["c2"]) for r in table.read().collect()}
     assert got == {1: ("a2", 7), 2: ("b", None), 3: ("c", 42)}
     # audit recorded once
     audit = cat.schema_delta_audit("m1")
@@ -65,7 +64,7 @@ def test_relation_record_adds_column_mid_stream(spark, tmp_path):
     b2 = _feed(spark, [_row("insert", 6, json.dumps({"id": 4, "v": "d", "c2": 9}))])
     pipe2.sync_batch(b2, 2)
     pipe2.normalize_batches(2, 2)
-    got = {r["id"]: (r["v"], r["c2"]) for r in read_evolved(table).collect()}
+    got = {r["id"]: (r["v"], r["c2"]) for r in table.read().collect()}
     assert got[4] == ("d", 9)
 
 
@@ -211,7 +210,6 @@ def test_type_widening_delta_end_to_end(spark, tmp_path):
         apply_delta,
         delta_from_relation_record,
         is_safe_widening,
-        read_evolved,
     )
     from peerdb_spark.storage import ParquetTable
 
@@ -226,9 +224,9 @@ def test_type_widening_delta_end_to_end(spark, tmp_path):
 
     big = 2**40
     t.append(spark.createDataFrame([(3, big)], "pk long, v long"))
-    got = {r["pk"]: r["v"] for r in read_evolved(t).collect()}
+    got = {r["pk"]: r["v"] for r in t.read().collect()}
     assert got == {1: 10, 2: 20, 3: big}
-    assert dict(read_evolved(t).dtypes)["v"] == "bigint"
+    assert dict(t.read().dtypes)["v"] == "bigint"
 
     import pytest as _pytest
     with _pytest.raises(ValueError, match="lossy"):
@@ -297,3 +295,39 @@ def test_payload_drift_hypothesis_random_keys(spark):
         return _parse_datatype_string(ddl)
 
     check()
+
+
+def test_added_column_survives_a_later_merge_of_its_bucket(spark, tmp_path):
+    """A relation record adds c2 and one update in the same batch sets it:
+    only that key's bucket is rewritten, the other buckets keep files that
+    predate c2. Reads must still surface c2, and a later batch touching
+    another key of the same bucket must carry c2 = 42 through the bucket
+    rewrite (a read that infers its schema from a sampled pre-delta footer
+    drops c2 from both)."""
+    from peerdb_spark.storage import bucket_expr
+
+    cfg = cdc.CdcTableConfig("t", ["id"], VAL, str(tmp_path / "dst"), n_buckets=4)
+    pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
+    pipe.sync_batch(_feed(spark, [
+        _row("insert", i, json.dumps({"id": i, "v": f"v{i}"})) for i in range(1, 41)
+    ]), 0)
+    pipe.normalize_batches(0, 0)
+
+    pipe.sync_batch(_feed(spark, [
+        _row("relation", 41, json.dumps({"added": [{"name": "c2", "type": "int"}]})),
+        _row("update", 42, json.dumps({"id": 7, "v": "v7", "c2": 42})),
+    ]), 1)
+    pipe.normalize_batches(1, 1)
+    assert pipe.read_table("t").columns == ["id", "v", "c2"]
+
+    bucket = {r["id"]: r["b"] for r in spark.range(1, 41).select(
+        "id", bucket_expr(["id"], 4).alias("b")).collect()}
+    other = next(k for k in range(1, 41) if k != 7 and bucket[k] == bucket[7])
+    pipe.sync_batch(_feed(spark, [
+        _row("update", 43, json.dumps({"id": other, "v": "changed"})),
+    ]), 2)
+    pipe.normalize_batches(2, 2)
+    got = {r["id"]: (r["v"], r["c2"]) for r in pipe.read_table("t").collect()}
+    assert got[7] == ("v7", 42)
+    assert got[other] == ("changed", None)
+    assert len(got) == 40

@@ -9,7 +9,7 @@ from pyspark.sql import types as T
 
 from peerdb_spark import cdc, normalize as N
 from peerdb_spark.registry import Catalog, MirrorConfig
-from peerdb_spark.schema_evolution import SchemaDelta, apply_delta, read_evolved
+from peerdb_spark.schema_evolution import SchemaDelta, apply_delta
 from peerdb_spark.sinks import elasticsearch_actions, emit_kafka_rows
 from peerdb_spark.snapshot import resync_table, snapshot_table
 from peerdb_spark.sql_surface import SqlSurface
@@ -168,12 +168,12 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert added == ["score"]
     # repeat delta → no-op
     assert apply_delta(t, SchemaDelta("t", [("score", "double")])) == []
-    out = read_evolved(t)
+    out = t.read()
     assert "score" in out.columns
     assert all(r["score"] is None for r in out.collect())
     # new data carries the column; old rows still NULL
     t.append(spark.createDataFrame([(3, "c", 9.5)], "id long, v string, score double"))
-    rows = {r["id"]: r["score"] for r in read_evolved(t).collect()}
+    rows = {r["id"]: r["score"] for r in t.read().collect()}
     assert rows[3] == 9.5 and rows[1] is None
 
 

@@ -81,7 +81,6 @@ def main() -> None:
     t0 = time.time()
     n_pairs = pairs.count()
     dt = time.time() - t0
-    planted = sum(1 for i in range(9, n, 10) if True)  # n//10 planted pairs
     print(
         f"factor={factor} rows={n} pairs={n_pairs} planted={n // 10} "
         f"wall={dt:.2f}s rows_per_sec={int(n / dt)}"
