@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from peerdb_spark import normalize as N
 from peerdb_spark.schema_evolution import _parse_ddl
-from peerdb_spark.storage import SCHEMA_FILE, ParquetTable, load_schema, read_parquet, save_schema
+from peerdb_spark.storage import SCHEMA_FILE, ParquetTable, load_schema, save_schema
 
 # Input changelog schema (FIXTURES.md F3)
 CHANGELOG_SCHEMA = T.StructType(
@@ -254,34 +254,22 @@ class RawTable:
         return dropped
 
     def read_batches(self, start_batch: int, end_batch: int) -> DataFrame:
-        # a raw table holding ONLY empty (heartbeat) batches has committed
-        # partition dirs but no parquet files — schema inference would fail;
-        # normalize over such a range is a no-op on an empty typed frame.
-        # The existence probe is scoped to the REQUESTED batch range's
-        # partition dirs (O(range), not O(total retained files) — a raw
-        # table ages unboundedly under retention, and walking it all on
-        # every normalize is driver-side work that grows with table age).
-        # If the range has no files its result is empty regardless of what
-        # other partitions hold, so the typed-empty frame is exact; if it
-        # has any file, the root-level read succeeds (file-less sibling
-        # partition dirs contribute no leaf files and no rows).
-        def _has_parquet(root: str) -> bool:
-            return any(
-                f.endswith(".parquet")
-                for _r, _d, fs in os.walk(root)
-                for f in fs
-            )
-
-        range_has_files = any(
-            _has_parquet(os.path.join(self.path, f"{RAW_BATCH}={b}"))
-            for b in range(start_batch, end_batch + 1)
-            if os.path.isdir(os.path.join(self.path, f"{RAW_BATCH}={b}"))
-        )
-        if not range_has_files:
+        """The raw rows of a batch range. Only the range's partition dirs
+        that hold parquet files are read, with `basePath` at the root so
+        the batch id stays a discovered partition column: the listing is
+        O(range), never O(retained batches) — a root read past Spark's
+        parallel-discovery threshold (32 dirs) launches a listing job.
+        A range with no files (empty heartbeat batches, or batches never
+        synced) is an empty typed frame; inference would fail on it."""
+        dirs = [
+            d for d in map(self.batch_dir, range(start_batch, end_batch + 1))
+            if any(f.endswith(".parquet") for _r, _d, fs in os.walk(d) for f in fs)
+        ]
+        if not dirs:
             return self.spark.createDataFrame([], _RAW_EMPTY_SCHEMA)
-        df = read_parquet(self.spark, self.path, load_schema(self.path))
-        # partition-pruned: RAW_BATCH is a directory partition column
-        return df.where(F.col(RAW_BATCH).between(start_batch, end_batch))
+        schema = load_schema(self.path)
+        reader = self.spark.read.option("basePath", self.path)
+        return (reader if schema is None else reader.schema(schema)).parquet(*dirs)
 
     def _payload(self) -> "F.Column":
         # deletes carry the row image in match_data
@@ -427,6 +415,11 @@ def cut_batches(changelog: DataFrame, max_batch_size: int) -> DataFrame:
     return changelog.join(packed, "_txid")
 
 
+# the 'auto' cadence merges once the pending raw tail holds at least this
+# share of the destination's rows (CdcPipeline._cadence_due)
+AUTO_RATIO = 0.10
+
+
 @dataclass
 class CdcTableConfig:
     dst_table: str
@@ -448,13 +441,6 @@ class CdcTableConfig:
     # ≤ threshold rows ≈ a few hundred MB, the task-sized unit the 100 TB
     # design wants. 0 disables.
     split_threshold_rows: int = 4_000_000
-    # >0: after each normalize of this table, rewrite any bucket holding
-    # more than this many data files down to one (storage.compact — the
-    # ClickHouse-background-merge analogue). Lazy cadences append a file
-    # per touched bucket per deferred range; this bounds file-count growth
-    # through the same crash-safe swap the merge uses. The check is a
-    # footer-free file listing, so the common no-op costs O(buckets) stats.
-    compact_files_per_bucket: int = 0
 
 
 class CdcPipeline:
@@ -474,7 +460,6 @@ class CdcPipeline:
         mirror_name: str = "",
         auto_evolve: bool = False,
         normalize_every: int | str = 1,
-        auto_ratio: float = 0.10,
         auto_min_rows: int = 100_000,
     ):
         """normalize_every=k > 1 selects the LAZY normalize cadence (the
@@ -490,7 +475,7 @@ class CdcPipeline:
 
         normalize_every="auto" selects the SELF-TUNING cadence (the LSM
         compaction-trigger shape): normalize when the pending raw tail
-        holds >= max(auto_min_rows, auto_ratio x destination rows) —
+        holds >= max(auto_min_rows, AUTO_RATIO x destination rows) —
         both sides from parquet FOOTER counts, no data read.
         auto_min_rows is a FLOOR: below it no merge runs regardless of
         destination size (a merge smaller than the floor cannot amortize
@@ -504,12 +489,9 @@ class CdcPipeline:
         merges go through read_table either way. Destination row counts
         change only at merges, so they are cached on the pipeline and
         re-swept (one footer pass) only after a normalize."""
-        if normalize_every == "auto":
-            if not (0 < auto_ratio <= 1):
-                raise ValueError("auto_ratio must be in (0, 1]")
-        elif not isinstance(normalize_every, int) or normalize_every < 1:
+        if normalize_every != "auto" and (
+                not isinstance(normalize_every, int) or normalize_every < 1):
             raise ValueError("normalize_every must be >= 1 or 'auto'")
-        self.auto_ratio = auto_ratio
         self.auto_min_rows = auto_min_rows
         # cached destination footprint for the 'auto' trigger; None =
         # recompute on next _cadence_due (invalidated whenever the
@@ -608,14 +590,13 @@ class CdcPipeline:
     def sync_batch(self, changelog: DataFrame, batch_id: int) -> None:
         self.raw.append(changelog, batch_id)
 
-    def process_batch(self, changelog: DataFrame, batch_id: int,
-                      parallelism: int = 1) -> bool:
+    def process_batch(self, changelog: DataFrame, batch_id: int) -> bool:
         """Sync one batch, then normalize iff the cadence says so — the
         single-call product path for both the eager default
         (normalize_every=1: identical to sync + normalize per batch) and
         the lazy cadence. Returns True when a normalize ran."""
         self.sync_batch(changelog, batch_id)
-        return self.maybe_normalize(batch_id, parallelism=parallelism)
+        return self.maybe_normalize(batch_id)
 
     def _pending_range(self, upto_batch: int | None = None):
         """(lo, hi) of the synced-but-unmerged raw tail, or None. Falls
@@ -640,19 +621,22 @@ class CdcPipeline:
             return None
         return lo, max(tail)
 
-    def maybe_normalize(self, upto_batch: int, force: bool = False,
-                        parallelism: int = 1) -> bool:
-        """Normalize the pending tail when it spans >= normalize_every
-        batches (or force=True and any tail exists — the drain call a
-        stream issues on pause/teardown). Idempotent: a replayed range
-        merges to the same state, and the watermark only moves forward."""
+    def maybe_normalize(self, upto_batch: int, force: bool = False) -> bool:
+        """Normalize the pending tail up to `upto_batch` when the cadence
+        says so (or force=True and any tail exists — the drain call a
+        stream issues on pause/teardown). The one place that decides
+        whether and what to merge: the eager default, the k / 'auto'
+        cadences and the stream runner's trail-by-N lag all land here.
+        Idempotent: a replayed range merges to the same state, the
+        watermark only moves forward, and a batch already covered by it
+        submits no Spark job."""
         rng = self._pending_range(upto_batch)
         if rng is None:
             return False
         lo, hi = rng
         if not force and not self._cadence_due(lo, hi):
             return False
-        self.normalize_batches(lo, hi, parallelism=parallelism)
+        self.normalize_batches(lo, hi)
         return True
 
     def _cadence_due(self, lo: int, hi: int) -> bool:
@@ -672,7 +656,7 @@ class CdcPipeline:
             # the ratio term stretches the cadence as the mirror grows
             if pending < self.auto_min_rows:
                 return False
-            return pending >= self.auto_ratio * self._dest_row_count()
+            return pending >= AUTO_RATIO * self._dest_row_count()
         return hi - lo + 1 >= self.normalize_every
 
     def _table(self, cfg: CdcTableConfig) -> ParquetTable:
@@ -682,8 +666,8 @@ class CdcPipeline:
 
     def _dest_row_count(self) -> int:
         """Total destination rows across the mirror's tables, from parquet
-        footers only — cached because it changes only when a normalize /
-        compaction rewrites buckets (normalize_batches invalidates), so the
+        footers only — cached because it changes only when a normalize
+        rewrites buckets (normalize_batches invalidates), so the
         'auto' trigger costs one footer sweep per MERGE, not per batch."""
         if self._dest_rows is None:
             dest = 0
@@ -863,18 +847,10 @@ class CdcPipeline:
             synced_at_col=cfg.synced_at_col,
         )
 
-    def normalize_batches(
-        self, start_batch: int, end_batch: int, parallelism: int = 1
-    ) -> None:
-        """Merge a raw batch range into every destination it touches.
-
-        `parallelism` > 1 submits the per-table merges from a thread pool —
-        Spark schedules concurrent jobs fairly, so a 100-table mirror's many
-        small merges overlap instead of running as sequential jobs (each
-        table's merge touches only its own paths; the driver-side loop was
-        the bottleneck, not the cluster). The reference normalizes tables
-        sequentially inside one transaction per destination; independent
-        parquet tables have no cross-table transaction to preserve."""
+    def normalize_batches(self, start_batch: int, end_batch: int) -> None:
+        """Merge a raw batch range into every destination it touches, one
+        table after another (the reference normalizes tables sequentially,
+        one transaction per destination)."""
         raw = self.raw.read_batches(start_batch, end_batch)
         # one driver-side footer pass: the row count (the auto hot-key
         # probe's size gate, shared by all tables in the range) and, when
@@ -886,12 +862,10 @@ class CdcPipeline:
         self._apply_relation_records(rels)
         if self.auto_evolve:
             self._auto_evolve(raw, dsts)
-        range_rows = meta.rows
-
-        def _one(dst: str) -> None:
+        for dst in dsts:
             cfg = self.tables.get(dst)
             if cfg is None:
-                return
+                continue
             changes = self._changes_for(raw, dst, cfg)
             table = self._table(cfg)
             # AUTO hot-key guard: flip the LWW salt on only when one pk holds
@@ -899,7 +873,7 @@ class CdcPipeline:
             # map-side-combinable count probe), so the guard self-selects at
             # cluster width and costs nothing on even or small batches
             salt = 0
-            if range_rows >= N.HOT_KEY_MIN_ROWS and N.detect_hot_key(
+            if meta.rows >= N.HOT_KEY_MIN_ROWS and N.detect_hot_key(
                 changes, cfg.pk_cols, N.HOT_KEY_THRESHOLD, N.HOT_KEY_MIN_ROWS
             ):
                 salt = N.DEFAULT_SKEW_SALT
@@ -919,19 +893,6 @@ class CdcPipeline:
                     post = post.where(~F.coalesce(F.col(cfg.soft_delete_col), F.lit(False)))
                 for v in views:
                     v.fold(pre, post, batch_id=end_batch)
-            if cfg.compact_files_per_bucket:
-                table.compact(cfg.compact_files_per_bucket)
-
-        if parallelism <= 1 or len(dsts) <= 1:
-            for dst in dsts:
-                _one(dst)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                # surface the first failure (result() re-raises)
-                for fut in [pool.submit(_one, d) for d in dsts]:
-                    fut.result()
         # advance the cadence watermark only after every destination's
         # merge committed — a crash mid-loop replays the whole range (the
         # merges are idempotent and converge)

@@ -424,12 +424,25 @@ def bpe_encode(
             .groupBy(id_col, "w")
             .agg(F.count(F.lit(1)).alias("n_w"))
         )
+    return token_counts(wc, merges, [id_col], strategy=strategy)
+
+
+def token_counts(
+    word_counts: DataFrame,
+    merges: list[tuple],
+    by: list[str],
+    strategy: str = "auto",
+) -> DataFrame:
+    """(*by, w, n_w) word counts → (*by, token, n): encode the DISTINCT
+    vocab once, join the word counts to it and sum n_w per token. With
+    `by=[]` this is the corpus-global token count, which skips the
+    (id, token) exchange a per-doc count pays."""
     # the merge folds are CPU-heavy per word (chained array folds); AQE
     # coalesces the small distinct-word relation to 1-2 partitions, which
     # serializes them — spread the vocab across the cluster first
-    n_part = wc.sparkSession.sparkContext.defaultParallelism
+    n_part = word_counts.sparkSession.sparkContext.defaultParallelism
     vocab = bpe_encode_words(
-        wc.select("w").distinct().repartition(n_part), merges, strategy=strategy
+        word_counts.select("w").distinct().repartition(n_part), merges, strategy=strategy
     )
     # explode_OUTER, deliberately (r13, found by the x10 probe): a plain
     # explode lets InferFiltersFromGenerate derive `size(tokens) > 0 AND
@@ -439,7 +452,7 @@ def bpe_encode(
     # the ranked kernel was immune only because mapInPandas is a pushdown
     # barrier). tokens is never NULL or empty here (split() yields [''] on
     # the empty word, the ranked kernel mirrors it), so outer == inner.
-    per_word = wc.join(vocab, "w").select(
-        id_col, F.explode_outer("tokens").alias("token"), "n_w"
+    per_word = word_counts.join(vocab, "w").select(
+        *by, F.explode_outer("tokens").alias("token"), "n_w"
     )
-    return per_word.groupBy(id_col, "token").agg(F.sum("n_w").alias("n"))
+    return per_word.groupBy(*by, "token").agg(F.sum("n_w").alias("n"))

@@ -843,21 +843,10 @@ class CorpusStateView:
         self.min_tokens = min_tokens
         os.makedirs(path, exist_ok=True)
 
-    @property
-    def _pointer(self) -> str:
-        import os
-
-        return os.path.join(self.path, "_CURRENT")
-
     def read(self) -> DataFrame | None:
-        import os
+        from peerdb_spark.rollup import read_version
 
-        from peerdb_spark.rollup import read_pointer
-
-        m = read_pointer(self._pointer)
-        if m["version"] == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{m['version']}"))
+        return read_version(self.spark, self.path)
 
     def _featurize(self, rows: DataFrame) -> DataFrame:
         from peerdb_spark.functions.dedup import content_hash, simhash
@@ -884,36 +873,19 @@ class CorpusStateView:
         """Seed from EXISTING mirror state when attaching mid-life (the
         ViewTable.backfill contract: consumes no batch id, no-op once a
         version exists; replayed merges self-correct via state images)."""
-        import os
+        from peerdb_spark.rollup import publish_version, read_pointer
 
-        from peerdb_spark.rollup import read_pointer
-
-        m = read_pointer(self._pointer)
+        m = read_pointer(self.path)
         if m["version"] > 0:
             return False
-        nxt = m["version"] + 1
-        self._featurize(live_rows).write.mode("overwrite").parquet(
-            os.path.join(self.path, f"v{nxt}"))
-        import json
-
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({**m, "version": nxt}, fh)
-        os.replace(tmp, self._pointer)
+        publish_version(self.path, m, self._featurize(live_rows))
         return True
 
     def fold(self, pre_image: DataFrame, post_image: DataFrame,
              batch_id: int) -> bool:
-        import os
+        from peerdb_spark.rollup import is_applied, publish_version, read_pointer
 
-        from peerdb_spark.rollup import (
-            is_applied,
-            publish_pointer,
-            read_pointer,
-            retire_snapshot,
-        )
-
-        m = read_pointer(self._pointer)
+        m = read_pointer(self.path)
         if is_applied(m, batch_id):
             return False
         # the images are lazy semi-join slices over the just-merged table;
@@ -937,11 +909,7 @@ class CorpusStateView:
             new_state = cur.join(
                 F.broadcast(touched), self.id_col, "left_anti"
             ).unionByName(feats)
-        nxt = m["version"] + 1
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(self.path, f"v{nxt}"))
-        publish_pointer(self._pointer, {**m, "version": nxt}, batch_id)
-        retire_snapshot(self.path, nxt)
+        publish_version(self.path, m, new_state, batch_id)
         return True
 
     def accepted(self) -> DataFrame:

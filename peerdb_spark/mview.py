@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from peerdb_spark.rollup import is_applied, publish_version, read_pointer, read_version
+
 
 def group_contrib(rows: DataFrame, dims: list[str], value_col: str) -> DataFrame:
     """(dims, cnt, sum_v): one batch-sized hash agg with map-side partials."""
@@ -228,22 +230,8 @@ class ViewTable:
         self.value_col = value_col
         os.makedirs(path, exist_ok=True)
 
-    @property
-    def _pointer(self) -> str:
-        import os
-
-        return os.path.join(self.path, "_CURRENT")
-
     def read(self) -> DataFrame | None:
-        import os
-
-        from peerdb_spark.rollup import read_pointer, read_snapshot
-
-        m = read_pointer(self._pointer)
-        if m["version"] == 0:
-            return None
-        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}"),
-                             m.get("schema"))
+        return read_version(self.spark, self.path)
 
     def backfill(self, live_rows: DataFrame) -> bool:
         """Seed the view from EXISTING table state (attaching mid-life):
@@ -252,43 +240,20 @@ class ViewTable:
         whose effects the backfill already contains folds pre==post and
         nets to zero (images are state-based, so this is self-correcting).
         No-op when the view already has a version."""
-        import os
-
-        from peerdb_spark.rollup import read_pointer
-
-        m = read_pointer(self._pointer)
+        m = read_pointer(self.path)
         if m["version"] > 0:
             return False
-        contrib = group_contrib(live_rows, self.dims, self.value_col)
-        nxt = m["version"] + 1
-        contrib.write.mode("overwrite").parquet(os.path.join(self.path, f"v{nxt}"))
-        # publish without marking any batch id applied
-        import json
-
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({**m, "version": nxt, "schema": contrib.schema.jsonValue()}, fh)
-        os.replace(tmp, self._pointer)
+        publish_version(self.path, m, group_contrib(live_rows, self.dims, self.value_col))
         return True
 
     def fold(self, pre_image: DataFrame, post_image: DataFrame, batch_id: int) -> bool:
-        import os
-
-        from peerdb_spark.rollup import is_applied, publish_pointer, read_pointer
-
-        m = read_pointer(self._pointer)
+        m = read_pointer(self.path)
         if is_applied(m, batch_id):
             return False
         new_view = mview_fold(
             self.read(), pre_image, post_image, self.dims, self.value_col
         )
-        nxt = m["version"] + 1
-        new_view.write.mode("overwrite").parquet(os.path.join(self.path, f"v{nxt}"))
-        publish_pointer(self._pointer,
-                        {**m, "version": nxt, "schema": new_view.schema.jsonValue()}, batch_id)
-        from peerdb_spark.rollup import retire_snapshot
-
-        retire_snapshot(self.path, nxt)
+        publish_version(self.path, m, new_view, batch_id)
         return True
 
 
@@ -318,42 +283,16 @@ class MviewTable:
         self.value_col = value_col
         os.makedirs(path, exist_ok=True)
 
-    def _meta(self) -> dict:
-        from peerdb_spark.rollup import read_pointer
-
-        return read_pointer(self._pointer)
-
-    @property
-    def _pointer(self) -> str:
-        import os
-
-        return os.path.join(self.path, "_CURRENT")
-
-    def _read(self, which: str) -> DataFrame | None:
-        import os
-
-        from peerdb_spark.rollup import read_snapshot
-
-        m = self._meta()
-        if m["version"] == 0:
-            return None
-        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}", which),
-                             m.get("schema", {}).get(which))
-
     def mirror(self) -> DataFrame | None:
         """Full mirror state incl. delete tombstones (they beat stragglers)."""
-        return self._read("mirror")
+        return read_version(self.spark, self.path, "mirror")
 
     def view(self) -> DataFrame | None:
         """The maintained grouped aggregate (live rows only)."""
-        return self._read("view")
+        return read_version(self.spark, self.path, "view")
 
     def fold(self, batch: DataFrame, batch_id: int) -> bool:
-        import os
-
-        from peerdb_spark.rollup import is_applied, publish_pointer
-
-        m = self._meta()
+        m = read_pointer(self.path)
         if is_applied(m, batch_id):
             return False
         pre, post, new_mirror = lww_merge_touched(
@@ -364,16 +303,8 @@ class MviewTable:
             self.view(), pre.where(live), post.where(live),
             self.dims, self.value_col,
         )
-        nxt = m["version"] + 1
-        vdir = os.path.join(self.path, f"v{nxt}")
         # mirror first: the view write re-reads pre/post, whose plans scan
         # the PREVIOUS version's parquet — both writes land before the
         # pointer swings, so readers never see a half-published version
-        new_mirror.write.mode("overwrite").parquet(os.path.join(vdir, "mirror"))
-        new_view.write.mode("overwrite").parquet(os.path.join(vdir, "view"))
-        schema = {"mirror": new_mirror.schema.jsonValue(), "view": new_view.schema.jsonValue()}
-        publish_pointer(self._pointer, {**m, "version": nxt, "schema": schema}, batch_id)
-        from peerdb_spark.rollup import retire_snapshot
-
-        retire_snapshot(self.path, nxt)
+        publish_version(self.path, m, {"mirror": new_mirror, "view": new_view}, batch_id)
         return True

@@ -2938,15 +2938,10 @@ FROM ({finals})
 SQL_BPE_TRAIN_BATCHED = _bpe_train_batched_sql()
 
 
-def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus TOKENIZATION with a trained merge table (functions/bpe.py:
-    bpe_encode): train 4 merges, encode every document, output the global
-    token frequency table (top 40, deterministic order). Two independent
-    formulations certify each other: Spark encodes the distinct-word vocab
-    and joins docs to it (the 100 TB shape — text never re-crosses a
-    shuffle); the oracle unrolls the 4 training rounds and explodes the
-    final vocab's symbol stream weighted by word frequency."""
-    from peerdb_spark.functions.bpe import bpe_train
+def _bpe_encode_global(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
+    """Train 4 merges on the documents, encode the corpus with `strategy`
+    and rank the global token counts (top 40, deterministic order)."""
+    from peerdb_spark.functions.bpe import bpe_train, token_counts
     from peerdb_spark.functions.text import tokens as _tokens
 
     docs = ensure_parallelism(_t(spark, sf_dir, "documents")[0])
@@ -2968,31 +2963,30 @@ def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wf = wc.groupBy("w").agg(F.sum("n_w").alias("freq"))
     merges, _ = bpe_train(None, "text", k=4, word_freqs=wf)
-    from peerdb_spark.functions.bpe import bpe_encode_words
-    # encode the DISTINCT vocab (bpe_encode_words, the fold kernel under
-    # test) and aggregate the GLOBAL counts straight off the exploded
-    # word counts: sum over docs of per-doc counts == sum of n_w per
-    # token occurrence, so the (doc_id, token) hash exchange the generic
-    # bpe_encode wrapper pays for its per-doc output is provably pure
-    # overhead for this global top-40 (§2.3 aggregate before you
-    # shuffle / §1.2 don't compute what you throw away; r13 A/B below,
-    # oracle hash-identical). The per-doc surface stays gated through
-    # tests/test_bpe.py and the kernels are unchanged.
-    n_part = spark.sparkContext.defaultParallelism
-    vocab = bpe_encode_words(wc.select("w").distinct().repartition(n_part), merges)
-    per_word = wc.join(vocab, "w").select(
-        # explode_OUTER: a plain explode's inferred size(tokens)>0 filter
-        # pushes the merge-fold below the vocab distinct and re-evaluates
-        # it per corpus row (see bpe.bpe_encode; tokens is never null or
-        # empty, so outer == inner). Measured 4.4 -> 1.2 s at x10.
-        F.explode_outer("tokens").alias("token"), "n_w")
-    glob = per_word.groupBy("token").agg(F.sum("n_w").alias("n"))
+    # the GLOBAL counts come straight off the per-doc word counts: sum over
+    # docs of per-doc counts == sum of n_w per token occurrence, so the
+    # (doc_id, token) exchange the per-doc bpe_encode pays is pure
+    # overhead for this global top-40 (§2.3 aggregate before you shuffle;
+    # r13 A/B, oracle hash-identical). The per-doc surface stays gated
+    # through tests/test_bpe.py.
+    glob = token_counts(wc, merges, [], strategy=strategy)
     w = Window.orderBy(F.desc("n"), "token")
     return (
         glob.select("token", F.col("n").cast("long").alias("n"),
                     F.row_number().over(w).cast("int").alias("rank"))
         .where(F.col("rank") <= 40)
     )
+
+
+def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus TOKENIZATION with a trained merge table (functions/bpe.py:
+    bpe_encode): train 4 merges, encode every document, output the global
+    token frequency table (top 40, deterministic order). Two independent
+    formulations certify each other: Spark encodes the distinct-word vocab
+    and joins docs to it (the 100 TB shape — text never re-crosses a
+    shuffle); the oracle unrolls the 4 training rounds and explodes the
+    final vocab's symbol stream weighted by word frequency."""
+    return _bpe_encode_global(spark, sf_dir, "auto")
 
 
 def q_bpe_encode_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3003,42 +2997,7 @@ def q_bpe_encode_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_encode_tokens' oracle, so the gate value-verifies the Python
     kernel against the unrolled SQL training rounds, not just against the
     fold path (which tests/test_bpe.py already pins it to)."""
-    from peerdb_spark.functions.bpe import bpe_train
-    from peerdb_spark.functions.text import tokens as _tokens
-
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents")[0])
-    wc = (
-        docs.select("doc_id", F.explode(_tokens("text")).alias("w"))
-        # single pinned exchange shared with the aggregate (see
-        # q_bpe_encode_tokens)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id", "w")
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-        .localCheckpoint(eager=True)
-    )
-    wf = wc.groupBy("w").agg(F.sum("n_w").alias("freq"))
-    merges, _ = bpe_train(None, "text", k=4, word_freqs=wf)
-    # same global-aggregation shape as q_bpe_encode_tokens (see the
-    # rationale there): encode the distinct vocab with the RANKED kernel
-    # and sum n_w per exploded token — one corpus-sized exchange removed,
-    # oracle hash-identical
-    from peerdb_spark.functions.bpe import bpe_encode_words
-    n_part = spark.sparkContext.defaultParallelism
-    vocab = bpe_encode_words(wc.select("w").distinct().repartition(n_part),
-                             merges, strategy="ranked")
-    per_word = wc.join(vocab, "w").select(
-        # explode_OUTER: a plain explode's inferred size(tokens)>0 filter
-        # pushes the merge-fold below the vocab distinct and re-evaluates
-        # it per corpus row (see bpe.bpe_encode; tokens is never null or
-        # empty, so outer == inner). Measured 4.4 -> 1.2 s at x10.
-        F.explode_outer("tokens").alias("token"), "n_w")
-    glob = per_word.groupBy("token").agg(F.sum("n_w").alias("n"))
-    w = Window.orderBy(F.desc("n"), "token")
-    return (
-        glob.select("token", F.col("n").cast("long").alias("n"),
-                    F.row_number().over(w).cast("int").alias("rank"))
-        .where(F.col("rank") <= 40)
-    )
+    return _bpe_encode_global(spark, sf_dir, "ranked")
 
 
 def _bpe_encode_sql(k: int = 4, topn: int = 40) -> str:

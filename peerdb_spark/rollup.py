@@ -23,6 +23,10 @@ aggregate over the union — exactly because every measure is mergeable.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -112,15 +116,17 @@ def _compact_applied(m: dict) -> dict:
     return {**m, "applied_until": until, "applied_extra": extra}
 
 
-def read_pointer(pointer_path: str) -> dict:
-    """Read a versioned-state `_CURRENT` pointer (shared by RollupTable and
-    mview.MviewTable); upgrades legacy `applied`-list pointers."""
-    import json
-    import os
+POINTER = "_CURRENT"
 
-    if not os.path.exists(pointer_path):
+
+def read_pointer(table_path: str) -> dict:
+    """Read the `_CURRENT` pointer of a versioned table (RollupTable,
+    mview.ViewTable / MviewTable, corpus.CorpusStateView); upgrades legacy
+    `applied`-list pointers."""
+    pointer = os.path.join(table_path, POINTER)
+    if not os.path.exists(pointer):
         return {"version": 0, "applied_until": -1, "applied_extra": []}
-    with open(pointer_path) as fh:
+    with open(pointer) as fh:
         m = json.load(fh)
     if "applied" in m:  # pre-compaction pointer layout
         ids = sorted(m.pop("applied"))
@@ -130,10 +136,18 @@ def read_pointer(pointer_path: str) -> dict:
     return m
 
 
-def read_snapshot(spark, path: str, schema: dict | None) -> DataFrame:
-    """Read a published snapshot with the schema its pointer recorded
-    (`DataType.jsonValue()` form), so a read launches no schema-inference
-    job; pointers written by older versions hold none and infer it."""
+def read_version(spark, table_path: str, part: str | None = None) -> DataFrame | None:
+    """The published snapshot of a versioned table (`part`: one relation
+    of a multi-relation version), or None before the first publish. It
+    reads with the schema the pointer recorded (`DataType.jsonValue()`
+    form), so it launches no schema-inference job; pointers written by
+    older versions hold none and infer it."""
+    m = read_pointer(table_path)
+    if m["version"] == 0:
+        return None
+    path, schema = os.path.join(table_path, f"v{m['version']}"), m.get("schema")
+    if part is not None:
+        path, schema = os.path.join(path, part), (schema or {}).get(part)
     return read_parquet(spark, path, None if schema is None else T.StructType.fromJson(schema))
 
 
@@ -141,18 +155,31 @@ def is_applied(m: dict, batch_id: int) -> bool:
     return batch_id <= m["applied_until"] or batch_id in m["applied_extra"]
 
 
-def publish_pointer(pointer_path: str, m: dict, batch_id: int) -> None:
-    """Record batch_id as applied at version m['version'], atomically."""
-    import json
-    import os
-
+def publish_version(table_path: str, m: dict, data: DataFrame | dict[str, DataFrame],
+                    batch_id: int | None = None) -> None:
+    """Write version m['version'] + 1 fully, then swing the pointer to it
+    with an atomic rename, recording its schema and batch_id as applied
+    (None, for a backfill, marks no batch), then retire_snapshot. `data`
+    is one relation, or {part: relation} written in order under
+    v{n}/part."""
+    nxt = m["version"] + 1
+    vdir = os.path.join(table_path, f"v{nxt}")
+    if isinstance(data, DataFrame):
+        data.write.mode("overwrite").parquet(vdir)
+        schema = data.schema.jsonValue()
+    else:
+        for part, df in data.items():
+            df.write.mode("overwrite").parquet(os.path.join(vdir, part))
+        schema = {part: df.schema.jsonValue() for part, df in data.items()}
+    applied = m["applied_extra"] if batch_id is None else [*m["applied_extra"], batch_id]
     nm = _compact_applied(
-        {**m, "applied_extra": sorted([*m["applied_extra"], batch_id])}
-    )
-    tmp = pointer_path + ".tmp"
+        {**m, "version": nxt, "schema": schema, "applied_extra": sorted(applied)})
+    pointer = os.path.join(table_path, POINTER)
+    tmp = pointer + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(nm, fh)
-    os.replace(tmp, pointer_path)
+    os.replace(tmp, pointer)
+    retire_snapshot(table_path, nxt)
 
 
 def retire_snapshot(table_path: str, published_version: int) -> None:
@@ -163,9 +190,6 @@ def retire_snapshot(table_path: str, published_version: int) -> None:
     complete (document: reads must not outlive TWO folds). Deleting the
     just-replaced version immediately — the old behavior — raced exactly
     that reader."""
-    import os
-    import shutil
-
     stale = published_version - 2
     if stale < 1:
         return
@@ -207,8 +231,6 @@ class RollupTable:
 
     def __init__(self, spark, path: str, dims: list[str],
                  every_seconds: int, time_col: str, value_col: str):
-        import os
-
         self.spark = spark
         self.path = path
         self.dims = dims
@@ -217,40 +239,18 @@ class RollupTable:
         self.value_col = value_col
         os.makedirs(path, exist_ok=True)
 
-    @property
-    def _pointer(self) -> str:
-        import os
-
-        return os.path.join(self.path, "_CURRENT")
-
-    def _meta(self) -> dict:
-        return read_pointer(self._pointer)
-
     def read(self) -> DataFrame | None:
-        import os
-
-        m = self._meta()
-        if m["version"] == 0:
-            return None
-        return read_snapshot(self.spark, os.path.join(self.path, f"v{m['version']}"),
-                             m.get("schema"))
+        return read_version(self.spark, self.path)
 
     def fold(self, batch: DataFrame, batch_id: int) -> bool:
         """Fold one batch; returns False when batch_id was already applied
         (redelivery no-op). Publish order: snapshot fully written, then
         pointer renamed — never a torn read."""
-        import os
-
-        m = self._meta()
+        m = read_pointer(self.path)
         if is_applied(m, batch_id):
             return False
         delta = rollup_delta(
             batch, self.time_col, self.every_seconds, self.dims, self.value_col
         )
-        merged = rollup_merge(self.read(), delta, self.dims)
-        nxt = m["version"] + 1
-        merged.write.mode("overwrite").parquet(os.path.join(self.path, f"v{nxt}"))
-        publish_pointer(self._pointer,
-                        {**m, "version": nxt, "schema": merged.schema.jsonValue()}, batch_id)
-        retire_snapshot(self.path, nxt)
+        publish_version(self.path, m, rollup_merge(self.read(), delta, self.dims), batch_id)
         return True

@@ -393,9 +393,11 @@ class SqlSurface:
     ) -> None:
         """Wire EXECUTE MIRROR to a CdcPipeline: each EXECUTE pulls the
         changelog rows past the recorded checkpoint, cuts them into
-        transaction-atomic batches (cut_batches), syncs + normalizes each,
-        and advances the catalog batch id and checkpoint watermark — the
-        run-now signal on a CDC flow (ref: cdc_flow.go signal handling).
+        transaction-atomic batches (cut_batches), runs each through
+        pipeline.process_batch (sync, then normalize on the pipeline's
+        cadence), and advances the catalog batch id and checkpoint
+        watermark — the run-now signal on a CDC flow (ref: cdc_flow.go
+        signal handling).
 
         The checkpoint watermark is read back from the RAW table written by
         the sync (stable data), never from a re-scan of the live changelog —
@@ -470,17 +472,17 @@ class SqlSurface:
             base = self.catalog.get_batch_id(mirror_name)
             for i, bn in enumerate(nums):
                 bid = base + i + 1
-                pipeline.sync_batch(
+                merged = pipeline.process_batch(
                     batched.where(F.col("_batch_no") == bn).drop("_batch_no"), bid
                 )
-                pipeline.normalize_batches(bid, bid)
                 s = stats[bn]
                 self.catalog.record_batch_metrics(
                     mirror_name, bid, s["n"], s["lo"], s["hi"]
                 )
-                # normalize-staleness gauge for AlertIfTooLongSinceLastNormalize
-                # (ref: flow/alerting/alerting.go:243-283)
-                self.catalog.set_last_normalize_ts(mirror_name, time.time())
+                if merged:
+                    # normalize-staleness gauge for AlertIfTooLongSinceLastNormalize
+                    # (ref: flow/alerting/alerting.go:243-283)
+                    self.catalog.set_last_normalize_ts(mirror_name, time.time())
             self.catalog.set_batch_id(mirror_name, base + len(nums))
             # watermark = max end of the batches actually pulled (never a
             # live re-scan — same rule as qrep.run, see ADVICE round 1)

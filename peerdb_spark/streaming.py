@@ -50,7 +50,6 @@ class CdcStreamRunner:
         retain_batches: int | None = None,
         catalog=None,
         mirror_name: str = "",
-        normalize_parallelism: int = 1,
         normalize_every: int | str = 1,
     ):
         """normalize_every=k > 1 selects the pipeline's LAZY normalize
@@ -66,6 +65,9 @@ class CdcStreamRunner:
         backpressure model (flow/activities/flowable.go:398-418: normalize
         runs N batches behind sync, bounded) — sync stays fast while merges
         trail; call catch_up() to drain the tail when the stream idles.
+        Either way the runner only hands the pipeline a merge horizon
+        (trigger id − lag); CdcPipeline.maybe_normalize decides whether
+        and what to merge.
 
         retain_batches keeps that many most-recent raw batches and drops the
         rest after each normalize (the reference's raw-table retention /
@@ -91,7 +93,6 @@ class CdcStreamRunner:
             spark, raw_path, tables, catalog=catalog, mirror_name=mirror_name,
             normalize_every=normalize_every,
         )
-        self.normalize_parallelism = normalize_parallelism
         self.max_files_per_trigger = max_files_per_trigger
         self.normalize_lag = normalize_lag
         # alternate checkpoint types (string GTID / resume-token offsets)
@@ -108,49 +109,21 @@ class CdcStreamRunner:
         if not self.pipeline.raw.is_batch_committed(batch_id):
             self.pipeline.sync_batch(batch_df, batch_id)
         self._last_synced = batch_id
-        ne = self.pipeline.normalize_every
-        if ne == "auto" or ne > 1:
-            # lazy cadence: merge only every k-th trigger (or when the
-            # auto amortization trigger fires); the pipeline
-            # tracks its own watermark, so replays and restarts resume
-            merged = self.pipeline.maybe_normalize(
-                batch_id, parallelism=self.normalize_parallelism
-            )
-            if merged and self.retain_batches is not None:
-                # only drop batches the merge has covered AND outside the
-                # retention window (explicit None check: batch ids start
-                # at 0, so a watermark of 0 is a real position, not unset)
-                wm = self.pipeline._last_normalized
-                upto = min(batch_id - self.retain_batches + 1,
-                           (wm + 1) if wm is not None else 0)
-                self.pipeline.raw.drop_batches(upto)
-            return
-        # merge is deterministic → replay converges to the same table state
-        target = batch_id - self.normalize_lag
-        if target >= 0:
-            self.pipeline.normalize_batches(
-                target, target, parallelism=self.normalize_parallelism
-            )
-            if self.retain_batches is not None:
-                # only ever drops batches already normalized: threshold
-                # <= target - (retain - lag - 1) <= target
-                self.pipeline.raw.drop_batches(batch_id - self.retain_batches + 1)
+        # the pipeline tracks its own merge watermark, so a replayed
+        # trigger (already merged) submits nothing and a restart resumes
+        merged = self.pipeline.maybe_normalize(batch_id - self.normalize_lag)
+        if merged and self.retain_batches is not None:
+            # only drop batches the merge has covered AND outside the
+            # retention window (the watermark is set: a merge just ran)
+            wm = self.pipeline._last_normalized
+            self.pipeline.raw.drop_batches(
+                min(batch_id - self.retain_batches + 1, wm + 1))
 
     def catch_up(self) -> None:
         """Normalize the trailing batches the lag/cadence left behind (the
         reference drains its normalize channel on flow pause/teardown)."""
-        ne = self.pipeline.normalize_every
-        if (ne == "auto" or ne > 1) and self._last_synced is not None:
-            self.pipeline.maybe_normalize(
-                self._last_synced, force=True,
-                parallelism=self.normalize_parallelism,
-            )
-            return
-        if self.normalize_lag and self._last_synced is not None:
-            lo = max(0, self._last_synced - self.normalize_lag + 1)
-            self.pipeline.normalize_batches(
-                lo, self._last_synced, parallelism=self.normalize_parallelism
-            )
+        if self._last_synced is not None:
+            self.pipeline.maybe_normalize(self._last_synced, force=True)
 
     def start(self, available_now: bool = False, processing_time: str = "10 seconds"):
         reader = (

@@ -125,36 +125,23 @@ def test_batch_range_pruning(spark, pipeline):
 
 
 def test_parallel_normalize_multi_table(spark, tmp_path):
-    """Threaded per-table merges produce exactly the sequential result over a
-    3-table fan-out batch."""
-    import json
-
-    from pyspark.sql import types as T
-
-    from peerdb_spark.storage import ParquetTable
-
+    """One normalize of a 3-table fan-out batch fills every destination
+    with exactly its own rows."""
     val = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
-    import datetime as dt
     rows = []
     for t in ("ta", "tb", "tc"):
         for i in range(20):
             rows.append(("insert", i, dt.datetime(2024, 1, 1), i, t, t,
                          json.dumps({"id": i, "v": f"{t}{i}"}), None, None))
     feed = spark.createDataFrame(rows, cdc.CHANGELOG_SCHEMA)
-    cfgs_p = [cdc.CdcTableConfig(t, ["id"], val, str(tmp_path / f"p_{t}"), n_buckets=2)
-              for t in ("ta", "tb", "tc")]
-    cfgs_s = [cdc.CdcTableConfig(t, ["id"], val, str(tmp_path / f"s_{t}"), n_buckets=2)
-              for t in ("ta", "tb", "tc")]
-    par = cdc.CdcPipeline(spark, str(tmp_path / "rawp"), cfgs_p)
-    seq = cdc.CdcPipeline(spark, str(tmp_path / "raws"), cfgs_s)
-    par.sync_batch(feed, 0)
-    seq.sync_batch(feed, 0)
-    par.normalize_batches(0, 0, parallelism=3)
-    seq.normalize_batches(0, 0)
+    cfgs = [cdc.CdcTableConfig(t, ["id"], val, str(tmp_path / t), n_buckets=2)
+            for t in ("ta", "tb", "tc")]
+    pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), cfgs)
+    pipe.sync_batch(feed, 0)
+    pipe.normalize_batches(0, 0)
     for t in ("ta", "tb", "tc"):
-        a = sorted(map(tuple, ParquetTable(spark, str(tmp_path / f"p_{t}"), ["id"], 2).read().collect()))
-        b = sorted(map(tuple, ParquetTable(spark, str(tmp_path / f"s_{t}"), ["id"], 2).read().collect()))
-        assert a == b and len(a) == 20
+        got = sorted(map(tuple, ParquetTable(spark, str(tmp_path / t), ["id"], 2).read().collect()))
+        assert got == [(i, f"{t}{i}") for i in range(20)]
 
 
 def test_cdc_composite_pk_and_exotic_identifiers(spark, tmp_path):
@@ -610,6 +597,31 @@ def _jobs_while(sc, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_batches_lists_only_the_requested_range(spark, tmp_path):
+    """A raw root holding more partitions than Spark's parallel-discovery
+    threshold (32) is never listed as a whole: building a one-batch read
+    submits no Spark job."""
+    import os
+
+    from peerdb_spark.storage import save_schema
+
+    root = str(tmp_path / "raw")
+    feed = _changelog(spark, [("insert", i, "t1", {"id": i, "val": "x", "amt": 0.0}, None, None)
+                              for i in range(80)])
+    raw = cdc.changelog_to_raw(feed, 0).withColumn(
+        cdc.RAW_BATCH, (F.col("_peerdb_checkpoint_id") % 40).cast("int"))
+    raw.write.partitionBy(cdc.RAW_BATCH).parquet(root)
+    save_schema(root, raw.drop(cdc.RAW_BATCH).schema)
+    table = cdc.RawTable(spark, root)
+    for b in range(40):
+        open(os.path.join(table.batch_dir(b), table.MARKER), "w").close()
+    assert table.committed_batches() == list(range(40))
+    df, jobs = _jobs_while(spark.sparkContext, lambda: table.read_batches(39, 39))
+    assert jobs == 0
+    assert sorted(r["_peerdb_checkpoint_id"] for r in df.collect()) == [39, 79]
+    assert dict(df.dtypes)[cdc.RAW_BATCH] == "int"
 
 
 def test_restart_reads_stored_schemas_and_legacy_dirs_infer(spark, tmp_path):

@@ -1,16 +1,15 @@
 """Lazy normalize cadence as a first-class CdcPipeline policy (round 10):
 normalize_every=k defers the merge while sync stays per-batch, read_table
-serves the exact would-be-normalized state between merges, the watermark
-survives restarts, and the compaction threshold bounds file growth.
+serves the exact would-be-normalized state between merges, and the
+watermark survives restarts.
 
 Reference shape: the ClickHouse destination gets this for free from
 ReplacingMergeTree background merges (flow/connectors/clickhouse/
-normalize.go:119-126); here the cadence, read-through view and compaction
-are explicit, crash-safe pipeline configuration.
+normalize.go:119-126); here the cadence and read-through view are
+explicit, crash-safe pipeline configuration.
 """
 
 import datetime as dt
-import json
 
 import pytest
 
@@ -37,10 +36,9 @@ def _batch(spark, batch_id, n=6):
     return _changelog(spark, [(k, c, d, p, o, u) for (k, c, d, p, o, u) in rows])
 
 
-def _mk(spark, root, name, normalize_every=1, compact=0):
+def _mk(spark, root, name, normalize_every=1):
     cfg = cdc.CdcTableConfig(
-        "t", ["id"], VAL_SCHEMA, f"{root}/{name}/dst", n_buckets=4,
-        compact_files_per_bucket=compact)
+        "t", ["id"], VAL_SCHEMA, f"{root}/{name}/dst", n_buckets=4)
     return cdc.CdcPipeline(spark, f"{root}/{name}/raw", [cfg],
                            normalize_every=normalize_every)
 
@@ -112,48 +110,6 @@ def test_replayed_range_is_idempotent_under_cadence(spark, tmp_path):
     assert _state(p.read_table("t")) == before
 
 
-def test_compaction_threshold_bounds_files(spark, tmp_path):
-    """A merge self-compacts the buckets it rewrites, so the threshold's
-    job is the buckets a narrow batch does NOT touch: small files from
-    append writers (qrep append mode) or wide-task merge outputs at
-    cluster parallelism accumulate there unbounded. The knob rewrites any
-    bucket over the threshold after each normalize — including untouched
-    ones — and the relation is unchanged."""
-    import pyspark.sql.functions as F
-
-    root = str(tmp_path)
-    pc = _mk(spark, root, "comp", normalize_every=2, compact=2)
-    pn = _mk(spark, root, "nocomp", normalize_every=2)
-    for b in (1, 2):
-        pc.process_batch(_batch(spark, b), b)
-        pn.process_batch(_batch(spark, b), b)
-    tc = ParquetTable(spark, pc.tables["t"].path, ["id"], 4)
-    tn = ParquetTable(spark, pn.tables["t"].path, ["id"], 4)
-    # pick 3 append keys in a bucket that batches 3/4 (keys 2..4, n=1)
-    # will NOT touch, so the merge's own rewrite can't hide the files
-    bucket_of = {
-        r["id"]: r["b"]
-        for r in spark.range(200).select(
-            "id", tc.assign_bucket_expr().alias("b")).collect()
-    }
-    touched = {bucket_of[k] for k in (2, 3, 4)}
-    target = next(b for b in range(4) if b not in touched)
-    keys = [k for k in range(100, 200) if bucket_of[k] == target][:3]
-    assert len(keys) == 3
-    for k in keys:  # one small file per append, all in the target bucket
-        extra = spark.createDataFrame(
-            [(k, "appended", 0.5)], "id long, val string, amt double")
-        tc.append(extra)
-        tn.append(extra)
-    assert tc.files_per_bucket()[target] > 2  # condition exists
-    for b in (3, 4):
-        pc.process_batch(_batch(spark, b, n=1), b)
-        pn.process_batch(_batch(spark, b, n=1), b)
-    assert tn.files_per_bucket()[target] > 2  # unbounded without the knob
-    assert max(tc.files_per_bucket().values()) <= 2
-    assert _state(tc.read()) == _state(tn.read())
-
-
 def test_runner_policy_validation(spark, tmp_path):
     from peerdb_spark.streaming import CdcStreamRunner
 
@@ -189,17 +145,17 @@ def test_stream_runner_lazy_cadence(spark, tmp_path):
     assert _state(got) == _expect(4)
 
 
-def test_auto_cadence_stretches_with_destination_growth(spark, tmp_path):
+def test_auto_cadence_stretches_with_destination_growth(spark, tmp_path, monkeypatch):
     """normalize_every='auto' (round 10): the LSM-style trigger merges
-    when the pending tail holds >= max(auto_min_rows, auto_ratio x
+    when the pending tail holds >= max(auto_min_rows, AUTO_RATIO x
     destination rows) (footer counts only). With the floor at one batch,
     a young mirror merges every batch; as the destination grows, merges
     stretch out — and read_table stays exact throughout."""
+    monkeypatch.setattr(cdc, "AUTO_RATIO", 0.5)
     cfg = cdc.CdcTableConfig("t", ["id"], VAL_SCHEMA,
                              str(tmp_path / "a/dst"), n_buckets=4)
     pipe = cdc.CdcPipeline(spark, str(tmp_path / "a/raw"), [cfg],
-                           normalize_every="auto", auto_ratio=0.5,
-                           auto_min_rows=40)
+                           normalize_every="auto", auto_min_rows=40)
 
     def disjoint(b):  # each batch inserts a FRESH key range → dest grows
         rows = [("insert", b * 1000 + i, "t",
@@ -289,7 +245,7 @@ def test_attached_view_freshness_under_lazy_cadence(spark, tmp_path):
     assert view_dict(view) == before
 
 
-def test_auto_cadence_floor_gates_before_ratio(spark, tmp_path):
+def test_auto_cadence_floor_gates_before_ratio(spark, tmp_path, monkeypatch):
     """r11 regression (ADVICE r10 medium) + r12 bootstrap (ADVICE r11
     low): the trigger is pending >= max(auto_min_rows, ratio x dest),
     EXCEPT while no destination exists yet (dest == 0), where every
@@ -301,11 +257,11 @@ def test_auto_cadence_floor_gates_before_ratio(spark, tmp_path):
     (3) over a GROWN destination, pending over the floor but under
         ratio x dest still defers (the old inverted code merged here,
         degenerating to near-eager merges exactly at large destinations)."""
+    monkeypatch.setattr(cdc, "AUTO_RATIO", 1.0)
     cfg = cdc.CdcTableConfig("t", ["id"], VAL_SCHEMA,
                              str(tmp_path / "f/dst"), n_buckets=4)
     pipe = cdc.CdcPipeline(spark, str(tmp_path / "f/raw"), [cfg],
-                           normalize_every="auto", auto_ratio=1.0,
-                           auto_min_rows=150)
+                           normalize_every="auto", auto_min_rows=150)
 
     def disjoint(b):
         rows = [("insert", b * 1000 + i, "t",
@@ -352,8 +308,6 @@ def test_auto_cadence_validation():
 
     from peerdb_spark import cdc as C
 
-    with pytest.raises(ValueError, match="auto_ratio"):
-        C.CdcPipeline(None, "/tmp/x", [], normalize_every="auto",
-                      auto_ratio=0)
-    with pytest.raises(ValueError, match="normalize_every"):
-        C.CdcPipeline(None, "/tmp/x", [], normalize_every="sometimes")
+    for bad in ("sometimes", 0):
+        with pytest.raises(ValueError, match="normalize_every"):
+            C.CdcPipeline(None, "/tmp/x", [], normalize_every=bad)

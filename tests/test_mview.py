@@ -423,7 +423,7 @@ def test_pointer_publish_crash_injection(spark, tmp_path):
     def failing(a, b):
         raise OSError("injected crash at pointer publish")
 
-    # publish_pointer imports os locally -> patch the global os module
+    # the pointer publish renames through os.replace -> patch the os module
     with mock.patch("os.replace", failing):
         try:
             t.fold(b2, batch_id=1)

@@ -217,6 +217,40 @@ def test_replay_with_partial_raw_partition_recovers(spark, tmp_path):
     assert t.read().count() == 5
 
 
+def test_replayed_trigger_does_not_merge_again(spark, tmp_path):
+    """Structured Streaming redelivers the last trigger after a restart.
+    When that trigger's batch is already synced AND merged, the replay
+    must submit no Spark job and leave the destination's files alone —
+    the pipeline's merge watermark, not the trigger, decides."""
+    from tests.test_cdc import _jobs_while
+
+    dest = str(tmp_path / "t")
+    runner = CdcStreamRunner(
+        spark,
+        changelog_dir=str(tmp_path / "chg"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        tables=[cdc.CdcTableConfig("t", ["id"], VAL, dest, n_buckets=4)],
+        raw_path=str(tmp_path / "raw"),
+    )
+    batch_df = spark.createDataFrame(
+        [("insert", i, TS, i, "t", "t", json.dumps({"id": i, "v": f"v{i}"}), None, None)
+         for i in range(5)],
+        cdc.CHANGELOG_SCHEMA,
+    )
+
+    def files():
+        return {os.path.join(r, f): os.stat(os.path.join(r, f)).st_mtime_ns
+                for r, _d, fs in os.walk(dest) for f in fs}
+
+    runner._foreach_batch(batch_df, 3)
+    before = files()
+    assert before
+    _, jobs = _jobs_while(spark.sparkContext, lambda: runner._foreach_batch(batch_df, 3))
+    assert jobs == 0
+    assert files() == before
+    assert ParquetTable(spark, dest, ["id"], 4).read().count() == 5
+
+
 def test_stream_raw_retention(spark, tmp_path):
     """retain_batches drops normalized raw partitions as the stream advances;
     destination state is unaffected (it lives in the bucketed table)."""

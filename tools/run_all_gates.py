@@ -1,4 +1,5 @@
-"""One-command gate runner: tests + oracle parity + plan audit + bench.
+"""One-command gate runner: tests + benchmark self-tests + oracle parity +
+plan audit + bench.
 
 Usage: python tools/run_all_gates.py
 Exit code nonzero if any gate fails; bench JSON printed last.
@@ -24,6 +25,8 @@ def run(name: str, cmd: list[str]) -> bool:
 def main() -> int:
     results = [
         run("tests", [sys.executable, "-m", "pytest", "tests/", "-q"]),
+        run("perfbench", [sys.executable, "-m", "pytest", "perfbench/tests", "-q",
+                          "-p", "no:cacheprovider"]),
         run("oracle", [sys.executable, "tools/check_oracle.py"]),
         run("plans", [sys.executable, "tools/audit_plans.py"]),
         run("bench", [sys.executable, "bench.py"]),
@@ -33,4 +36,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
