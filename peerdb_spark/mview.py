@@ -61,38 +61,32 @@ def mview_fold(
     with the one-shot aggregate first (ViewTable.backfill) — folding
     deltas into None would silently drop the pre-existing contributions.
 
+    Shape: the images become signed rows — post (dims, +1, +v), pre
+    (dims, −1, −v) — aggregated ONCE together with the view's hot groups;
+    the touched-group probe is their distinct dims, so the broadcast stays
+    O(touched groups). The result keeps the incoming view's cnt/sum_v types
+    (group_contrib's when `view` is None): a fold never widens a decimal.
+
     Materialization contract: this function takes NO checkpoints of its
-    own — the returned view is one lazy plan over its inputs (delta is
-    referenced by both key probes and the union; the references recompute,
-    which is cheap when pre/post derive from an already-materialized
-    mirror). A caller chaining folds should materialize each round's
-    RESULT (`view = mview_fold(...).localCheckpoint(eager=True)` — one job
-    per round, the cheapest linear-plan scheme) or pass
-    `materialize_state=True` to pin the incoming view instead.
+    own — the returned view is one lazy plan over its inputs. A caller
+    chaining folds should materialize each round's RESULT (`view =
+    mview_fold(...).localCheckpoint(eager=True)` — one job per round, the
+    cheapest linear-plan scheme) or pass `materialize_state=True` to pin
+    the incoming view instead.
     """
-    neg = group_contrib(pre_image, dims, value_col).select(
-        *dims, (-F.col("cnt")).alias("cnt"), (-F.col("sum_v")).alias("sum_v")
-    )
-    delta = (
-        group_contrib(post_image, dims, value_col)
-        .unionByName(neg)
-        .groupBy(*dims)
-        .agg(F.sum("cnt").alias("cnt"), F.sum("sum_v").alias("sum_v"))
-    )
-    if view is None:
-        return delta.where(F.col("cnt") != 0)
-    if materialize_state:
-        view = view.localCheckpoint(eager=True)
-    touched = delta.select(*dims)
-    cold = view.join(F.broadcast(touched), dims, "left_anti")
-    hot = view.join(F.broadcast(touched), dims, "left_semi")
-    merged = (
-        hot.unionByName(delta)
-        .groupBy(*dims)
-        .agg(F.sum("cnt").alias("cnt"), F.sum("sum_v").alias("sum_v"))
-        .where(F.col("cnt") != 0)
-    )
-    return cold.unionByName(merged)
+    v = F.col(value_col)
+    rows = post_image.select(*dims, F.lit(1).alias("cnt"), v.alias("sum_v")).unionByName(
+        pre_image.select(*dims, F.lit(-1).alias("cnt"), (-v).alias("sum_v")))
+    types = (view if view is not None else group_contrib(pre_image, dims, value_col)).schema
+    if view is not None:
+        if materialize_state:
+            view = view.localCheckpoint(eager=True)
+        touched = F.broadcast(rows.select(*dims).distinct())
+        rows = view.join(touched, dims, "left_semi").unionByName(rows)
+    out = (rows.groupBy(*dims)
+           .agg(*[F.sum(c).cast(types[c].dataType).alias(c) for c in ("cnt", "sum_v")])
+           .where(F.col("cnt") != 0))
+    return out if view is None else view.join(touched, dims, "left_anti").unionByName(out)
 
 
 def enrich_images(

@@ -30,7 +30,7 @@ the batch; AQE handles skewed pks. Record-kind codes: 0=insert, 1=update,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from peerdb_spark.storage import BUCKET_COL, ParquetTable, bucket_expr
@@ -384,17 +384,30 @@ def merge_into_table(
     # PK-changing updates split BEFORE dedup so the synthetic old-pk delete
     # participates in last-writer-wins under its own key.
     split = split_pk_updates(changes, pk)
-    if table.exists and table.n_buckets and not return_images:
-        # Decode once (§5): the bucket probe below executes this lazy
-        # localCheckpoint, so the merge write job reads the already-decoded
-        # batch instead of re-running the raw range's from_json decode.
-        # Batch-sized state, same posture as the return_images checkpoint;
-        # measured -8% normalize wall on the sf0.1 600k-event pipeline.
-        split = split.localCheckpoint(eager=False)
+    # manifest-aware leaf assignment (storage.assign_bucket_expr): for a
+    # never-split table this is exactly the static pmod; after splits it
+    # routes each pk to its current extendible-hashing leaf
+    bexpr = table.assign_bucket_expr() if table.exists and table.n_buckets else None
+    obs = Observation()
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        # the touched-bucket probe rides this eager checkpoint as an observed
+        # metric (no job of its own). split and deduped hold the same
+        # pk -> bucket set, and collect_set is idempotent under stage retries
+        if bexpr is not None:
+            df = df.observe(obs, F.collect_set(bexpr).alias("b"))
+        return df.localCheckpoint(eager=True)
+
+    # the LWW window executes once (the r11 double-execution question): in
+    # the deduped checkpoint with images, else in the merge write, which
+    # reads the decoded batch from the split checkpoint (§5: decode once)
+    if bexpr is not None and not return_images:
+        split = checkpoint(split)
     deduped = latest_changes(split, pk, skew_salt=skew_salt)
     if return_images:
-        deduped = deduped.localCheckpoint(eager=True)  # merge + both key probes
-        keys = deduped.select(*pk).distinct()
+        deduped = checkpoint(deduped)
+        # one row per pk (the LWW window): the key slice needs no distinct
+        keys = deduped.select(*pk)
     if not table.exists:
         boot = merge_changes(None, deduped, pk, data_cols, soft_delete_col, synced_at_col,
                              dedup=False)
@@ -410,24 +423,8 @@ def merge_into_table(
             return post.where(F.lit(False)), post
         return None
     if table.n_buckets:
-        # manifest-aware leaf assignment (storage.assign_bucket_expr): for a
-        # never-split table this is exactly the static pmod; after splits it
-        # routes each pk to its current extendible-hashing leaf
-        bexpr = table.assign_bucket_expr()
         deduped = deduped.withColumn(BUCKET_COL, bexpr)
-        # distinct buckets touched: tiny driver-side list (≤ #leaves ints).
-        # Probed on the PRE-dedup split batch, not `deduped`: the LWW window
-        # keeps exactly one row per pk (row_number = 1), so the pk→bucket
-        # set is identical — and the probe job then skips the window's full
-        # hash exchange + sort entirely (a map-side partial distinct over
-        # one int column; the window itself now executes once, in the merge
-        # write, closing the r11 double-execution question with a strictly
-        # cheaper answer than checkpointing the deduped batch).
-        probe = deduped if return_images else split
-        buckets = [
-            r[0]
-            for r in probe.select(bexpr.alias(BUCKET_COL)).distinct().collect()
-        ]
+        buckets = sorted(obs.get["b"])
         dest = table.read_buckets(buckets).drop(BUCKET_COL)
         if return_images:
             pre = dest.join(F.broadcast(keys), pk, "left_semi").localCheckpoint(

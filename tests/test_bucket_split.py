@@ -125,6 +125,47 @@ def test_merge_into_split_table_converges(spark, tmp_path):
         assert got[400 + i] == f"ins{i}"
 
 
+def test_observed_bucket_probe_equals_distinct_probe(spark, tmp_path, monkeypatch):
+    """merge_into_table reads its touched buckets from an observation on
+    the batch checkpoint. That set must equal the distinct bucket probe it
+    replaced: replace_partitions discards the staged rows of every bucket
+    it is not given, so a missing bucket loses data. Checked on a
+    never-split and a split table, with and without images, and for an
+    empty batch, which must touch no bucket."""
+    seen = []
+    replace = ParquetTable.replace_partitions
+
+    def spy(self, df, buckets):
+        seen.append(sorted(buckets))
+        return replace(self, df, buckets)
+
+    monkeypatch.setattr(ParquetTable, "replace_partitions", spy)
+    changes = spark.createDataFrame(
+        [(5, "u5", "update", 100, None), (9, None, "delete", 101, None),
+         (5, "u5b", "update", 102, None), (450, "i450", "insert", 103, None)],
+        CHG_SCHEMA,
+    )
+    for split in (False, True):
+        for images in (False, True):
+            t = _mk(spark, str(tmp_path / f"t{split}{images}"))
+            if split:
+                for b in (0, 3):
+                    t.split_bucket(b)
+            want = sorted(r[0] for r in changes.select(t.assign_bucket_expr()).distinct().collect())
+            assert 0 < len(want) < len(t.leaf_buckets())
+            N.merge_into_table(t, changes, return_images=images)
+            assert seen.pop() == want
+            got = {r.pk: r.v for r in t.read().collect()}
+            assert (got[5], 9 in got, got[450], len(got)) == ("u5b", False, "i450", 400)
+
+            files = _bucket_files(t.path)
+            images_out = N.merge_into_table(t, changes.where(F.lit(False)), return_images=images)
+            assert seen.pop() == []
+            assert _bucket_files(t.path) == files
+            if images:
+                assert [im.count() for im in images_out] == [0, 0]
+
+
 def test_threshold_triggers_split_after_merge_and_bounds_bucket_size(spark, tmp_path):
     t = _mk(spark, str(tmp_path / "t"), n_rows=300, threshold=120)
     # grow the table through merges; every touched oversized bucket splits

@@ -671,3 +671,32 @@ def test_restart_reads_stored_schemas_and_legacy_dirs_infer(spark, tmp_path):
     dfs, jobs = _jobs_while(spark.sparkContext, reads)
     assert jobs == 3  # one footer-inference job per read
     assert collect(dfs) == want
+
+
+def test_steady_normalize_with_attached_view_job_budget(spark, tmp_path):
+    """A small batch normalized into an existing bucketed table with one
+    attached view submits at most 12 Spark jobs (the merge and the fold
+    each used to add a distinct and a key-dedup shuffle: 19), and the view
+    still equals the aggregate over the table."""
+    from peerdb_spark.mview import ViewTable
+
+    cfg = cdc.CdcTableConfig("t1", ["id"], VAL_SCHEMA, str(tmp_path / "t1"), n_buckets=4)
+    pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
+    view = ViewTable(spark, str(tmp_path / "view"), ["val"], "amt")
+    pipe.attach_view("t1", view)
+    pipe.process_batch(_changelog(spark, [
+        ("insert", i, "t1", {"id": i, "val": "abc"[i % 3], "amt": float(i)}, None, [])
+        for i in range(1, 31)]), 0)
+    pipe.sync_batch(_changelog(spark, [
+        ("update", 40, "t1", {"id": 3, "val": "b", "amt": 100.0}, None, []),
+        ("delete", 41, "t1", None, {"id": 4}, []),
+        ("insert", 42, "t1", {"id": 50, "val": "d", "amt": 0.5}, None, []),
+    ]), 1)
+    _, jobs = _jobs_while(spark.sparkContext, lambda: pipe.normalize_batches(1, 1))
+    assert jobs <= 12
+    want = {}
+    for r in pipe.read_table("t1").collect():
+        cnt, s = want.get(r["val"], (0, 0.0))
+        want[r["val"]] = (cnt + 1, s + r["amt"])
+    assert {r["val"]: (r["cnt"], r["sum_v"]) for r in view.read().collect()} == want
+    assert want == {"a": (9, 162.0), "b": (10, 241.0), "c": (10, 155.0), "d": (1, 0.5)}

@@ -348,6 +348,31 @@ def test_dim_update_moves_all_fact_rows(spark):
     assert as_dict(view) == {"FR": (2, 140)}
 
 
+def test_folds_keep_a_decimal_view_schema(spark, tmp_path):
+    """A decimal(10,2) value backfills sum_v as decimal(20,2); every fold
+    publishes that same schema with the exact sums (the view used to widen
+    to decimal(38,2) on its first fold)."""
+    from decimal import Decimal as D
+
+    from peerdb_spark.mview import ViewTable
+
+    rows = "id long, grp string, amt decimal(10,2)"
+    v = ViewTable(spark, str(tmp_path / "v"), ["grp"], "amt")
+    v.backfill(spark.createDataFrame([(1, "a", D("1.25")), (2, "b", D("2.50"))], rows))
+    schema = v.read().schema
+    assert schema.simpleString() == "struct<grp:string,cnt:bigint,sum_v:decimal(20,2)>"
+    batches = [
+        ([(1, "a", D("1.25"))], [(1, "a", D("3.10"))]),   # a: 1.25 -> 3.10
+        ([(2, "b", D("2.50"))], [(2, "a", D("0.05"))]),   # b empties into a
+        ([], [(3, "c", D("99999999.99"))]),
+    ]
+    for batch_id, (pre, post) in enumerate(batches, 1):
+        v.fold(spark.createDataFrame(pre, rows), spark.createDataFrame(post, rows), batch_id)
+        assert v.read().schema == schema
+    assert {r["grp"]: (r["cnt"], r["sum_v"]) for r in v.read().collect()} == {
+        "a": (2, D("3.15")), "c": (1, D("99999999.99"))}
+
+
 def test_attach_view_backfill_on_populated_table(spark, tmp_path):
     """Attaching a view to a table that ALREADY has rows must seed from the
     one-shot aggregate (backfill=True) — and a replayed normalize range
