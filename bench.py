@@ -8,18 +8,31 @@ per-query dict prints on earlier lines, and the complete record —
 including per-query run spread — is also written to BENCH_local.json next
 to this file.
 
+`python bench.py --only a,b` times just the named queries (any declared
+query, or `cdc_pipeline_e2e`) with the same warmups, confirmed best-of-2
+and state cleanup as the full sweep, prints one JSON line
+{"queries": ..., ["stages": ..., "errors": ...]} and leaves
+BENCH_local.json alone — the A/B path for optimization work.
+
 Execution is forced with the noop sink (full JVM materialization, no driver
 collect) so timings measure the engine, not result serialization.
 """
 
 from __future__ import annotations
 
+import argparse
+import gc
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+# the flagship CDC pipeline number; not a declared query, timed by
+# _bench_cdc_pipeline
+CDC_E2E = "cdc_pipeline_e2e"
 
 
 def _bench_cdc_pipeline(spark, sf_dir: str) -> tuple[float, dict[str, float]]:
@@ -115,15 +128,178 @@ def _bench_cdc_pipeline(spark, sf_dir: str) -> tuple[float, dict[str, float]]:
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def main() -> None:
+def _warm(spark, sf_dir: str) -> None:
+    """Warm the JVM + parquet footers once so per-query timings measure work,
+    not first-touch costs (the driver compares totals across rounds). The
+    first text-heavy expression per JVM pays ~2.5s of one-time class
+    loading and the first mapInPandas pays Python-worker startup — warm
+    both on 50-row slices so they don't land on whichever query runs first."""
+    from peerdb_spark.queries import QUERIES
+
+    try:
+        QUERIES["passthrough_agg"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        from pyspark.sql import functions as F
+
+        from peerdb_spark.functions import text as TX
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
+        docs.select(
+            TX.lang_id(F.col("text")), TX.quality_score(F.col("text"))
+        ).write.format("noop").mode("overwrite").save()
+
+        def _noop_batches(it):
+            yield from it
+
+        docs.select("doc_id").mapInPandas(
+            _noop_batches, "doc_id long"
+        ).write.format("noop").mode("overwrite").save()
+
+        # the first broadcast-hash join over array<float> embeddings pays
+        # its own codegen/broadcast warmup (~3s showing up on whichever
+        # embedding query runs first — measured on knn_graph); warm it on
+        # a 50-row slice
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
+        k = emb.select(F.col("vec_id").alias("k"), "embedding")
+        k.join(F.broadcast(emb.select(F.col("vec_id").alias("k"))), "k").write.format(
+            "noop"
+        ).mode("overwrite").save()
+    except Exception:  # noqa: BLE001 — warmup only
+        pass
+
+
+def _clear_lingering_state(spark) -> None:
+    """Deterministically drop executor-side state a query leaves behind
+    (r11, closing the r10 'mongo_changestream_decode drift' — What's
+    wrong #1): fixture localCheckpoints park MEMORY_AND_DISK blocks
+    that the async ContextCleaner frees only when a DRIVER gc happens
+    to collect the python-side refs, so a query running after several
+    checkpoint-heavy media fixtures could read 3x slower (measured:
+    mongo_changestream_decode 1.4 s fresh -> 4.9 s after the five r10
+    media/video fixtures -> 1.3-1.5 s with this cleanup, ~0.1 s/call).
+    The r8->r10 'drift on untouched code' was exactly this: each round
+    ADDED checkpoint-heavy fixtures earlier in the headline list."""
+    try:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+        while it.hasNext():
+            it.next()._2().unpersist(False)
+        spark.catalog.clearCache()
+    except Exception:  # noqa: BLE001 — cleanup must never fail the bench
+        pass
+    gc.collect()
+
+
+def _time_query(spark, sf_dir: str, name: str) -> list[float]:
+    """Untimed warm pass, then warm BEST-OF-2 timed runs (round-8
+    protocol): first-execution costs (plan compile, page-cache misses, a
+    GC triggered by the previous query) otherwise add ±20% run-to-run
+    noise, and a single timed run still caught roaming 2-3 s spikes that
+    three rounds of judges each re-timed by hand as phantom regressions.
+    min() of two warm runs is the steady-state number comparable across
+    rounds. Returns every timed run."""
+    from peerdb_spark.queries import QUERIES
+
+    # the warm frame stays referenced until the timed runs end, so the async
+    # ContextCleaner cannot free its checkpoint blocks mid-measurement;
+    # _sweep clears them once this returns
+    warm = QUERIES[name](spark, sf_dir)
+    warm.write.format("noop").mode("overwrite").save()
+
+    def _timed_run() -> float:
+        # timed run includes DataFrame construction: some queries do eager
+        # driver-side work (bounded collects, checkpoint materialization)
+        # that is part of their real cost
+        t0 = time.time()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+
+    # CONFIRMED best (round-10 protocol, closing the phantom-mover class
+    # r8/r9 judges kept hand-re-timing): the reported number must be
+    # reproduced by a second run within 25%, else keep re-timing (≤4
+    # runs) — a host hiccup spanning both of two runs can no longer print
+    # as a 1.5-1.7x "regression" on untouched code. The per-query spread
+    # (max/min over all timed runs) is recorded in BENCH_local.json so a
+    # judge separates noise from regression without re-timing anything.
+    runs = [_timed_run(), _timed_run()]
+    while len(runs) < 4:
+        b1, b2 = sorted(runs)[:2]
+        if b2 / b1 <= 1.25:
+            break
+        runs.append(_timed_run())
+    return runs
+
+
+def _sweep(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """Time `names` in order, each followed by _clear_lingering_state —
+    relying on the async ContextCleaner made later queries' timings
+    depend on driver GC timing (the r8-r10 cross-round "drift" class).
+    Returns the record's per-query sections: "queries" (best s),
+    "spread" (max/min over timed runs), "runs_needed" (when > 2),
+    "stages" (the cdc_pipeline_e2e split) and "errors"."""
+    rec: dict[str, dict] = {
+        k: {} for k in ("queries", "spread", "runs_needed", "stages", "errors")
+    }
+    for name in names:
+        try:
+            if name == CDC_E2E:
+                rec["queries"][name], rec["stages"][name] = _bench_cdc_pipeline(
+                    spark, sf_dir
+                )
+            else:
+                runs = _time_query(spark, sf_dir, name)
+                rec["queries"][name] = round(min(runs), 3)
+                rec["spread"][name] = round(max(runs) / min(runs), 2)
+                if len(runs) > 2:
+                    rec["runs_needed"][name] = len(runs)
+        except Exception as e:  # noqa: BLE001 — one broken query must not zero the bench
+            rec["errors"][name] = f"{type(e).__name__}: {e}"[:300]
+        _clear_lingering_state(spark)
+    return rec
+
+
+def _steady_queries(sf_dir: str) -> dict[str, float]:
+    """Per-query minima from the committed BENCH_steady.json. Guard (r12
+    advice): a steady file merged at a different SF would make every
+    suspect threshold wrong — only consult it at the matching SF, compared
+    as numbers so a `sf1` directory matches a steady `1.0`."""
+    try:
+        with open(os.path.join(HERE, "BENCH_steady.json")) as fh:
+            steady = json.load(fh)
+        bench_sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+        if steady.get("sf") is not None and float(steady["sf"]) != bench_sf:
+            return {}
+    except (OSError, ValueError):
+        return {}
+    return steady.get("queries", {})
+
+
+def main(argv: list[str] | None = None) -> int:
+    from peerdb_spark.queries import QUERIES
+
+    ap = argparse.ArgumentParser(description="Time the headline query inventory.")
+    ap.add_argument(
+        "--only",
+        help="comma-separated query names (or cdc_pipeline_e2e) to time alone; "
+        "prints one JSON line and writes no BENCH_local.json",
+    )
+    args = ap.parse_args(argv)
+    only = None if args.only is None else args.only.split(",")
+    unknown = [n for n in only or [] if n != CDC_E2E and n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown query name(s): {', '.join(unknown)}")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from peerdb_spark import get_spark
-    from peerdb_spark.queries import QUERIES
 
     spark = get_spark("peerdb_spark_bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    _warm(spark, sf_dir)
+
+    if only is not None:
+        rec = _sweep(spark, sf_dir, only)
+        print(json.dumps({k: rec[k] for k in ("queries", "stages", "errors") if rec[k]}))
+        return 1 if rec["errors"] else 0
 
     # headline set: the engine's core CDC/QRep path + the scale-relevant
     # LLM-pipeline operators (every remaining inventory query is exercised by
@@ -239,57 +415,19 @@ def main() -> None:
         "media_h264_bslice",
     ]
 
-    # warm the JVM + parquet footers once so per-query timings measure work,
-    # not first-touch costs (the driver compares totals across rounds). The
-    # first text-heavy expression per JVM pays ~2.5s of one-time class
-    # loading and the first mapInPandas pays Python-worker startup — warm
-    # both on 50-row slices so they don't land on whichever query runs first.
-    try:
-        QUERIES["passthrough_agg"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        from pyspark.sql import functions as F
-
-        from peerdb_spark.functions import text as TX
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-        docs.select(
-            TX.lang_id(F.col("text")), TX.quality_score(F.col("text"))
-        ).write.format("noop").mode("overwrite").save()
-
-        import pandas as _pd
-
-        def _noop_batches(it):
-            for pdf in it:
-                yield pdf
-
-        docs.select("doc_id").mapInPandas(
-            _noop_batches, "doc_id long"
-        ).write.format("noop").mode("overwrite").save()
-
-        # the first broadcast-hash join over array<float> embeddings pays
-        # its own codegen/broadcast warmup (~3s showing up on whichever
-        # embedding query runs first — measured on knn_graph); warm it on
-        # a 50-row slice
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
-        k = emb.select(F.col("vec_id").alias("k"), "embedding")
-        k.join(F.broadcast(emb.select(F.col("vec_id").alias("k"))), "k").write.format(
-            "noop"
-        ).mode("overwrite").save()
-    except Exception:  # noqa: BLE001 — warmup only
-        pass
-
     # host-calibration factor (round-8 protocol, SCALING.md): a fixed
     # CPU-bound JVM workload timed warm best-of-2. Cross-round comparisons
     # divide per-query times by (calibration_r_N / calibration_r_M) before
     # calling anything a regression — three consecutive judges each hand
     # re-timed "regressions" that were whole-host drift.
-    from pyspark.sql import functions as _F
+    from pyspark.sql import functions as F
 
     def _calibrate() -> float:
         t0 = time.time()
         # bit_xor: overflow-free under ANSI (sum of 1B hashes overflows);
         # 1B rows keeps the signal ~1 s — long enough to be stable
         spark.range(1_000_000_000, numPartitions=cpus).select(
-            _F.bit_xor(_F.xxhash64("id"))
+            F.bit_xor(F.xxhash64("id"))
         ).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
@@ -299,90 +437,10 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — calibration must not break the bench
         calibration = None
 
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    stages: dict[str, dict[str, float]] = {}
-    spreads: dict[str, float] = {}
-    extra_runs: dict[str, int] = {}
     # the flagship pipeline number runs first, on a fresh JVM heap — running
     # it after 19 query DAGs adds up to 2x GC noise to the measurement
-    try:
-        timings["cdc_pipeline_e2e"], stages["cdc_pipeline_e2e"] = _bench_cdc_pipeline(
-            spark, sf_dir
-        )
-    except Exception as e:  # noqa: BLE001 — one broken query must not zero the bench
-        errors["cdc_pipeline_e2e"] = f"{type(e).__name__}: {e}"[:300]
-    import gc
-
-    def _clear_lingering_state() -> None:
-        """Deterministically drop executor-side state a query leaves behind
-        (r11, closing the r10 'mongo_changestream_decode drift' — What's
-        wrong #1): fixture localCheckpoints park MEMORY_AND_DISK blocks
-        that the async ContextCleaner frees only when a DRIVER gc happens
-        to collect the python-side refs, so a query running after several
-        checkpoint-heavy media fixtures could read 3x slower (measured:
-        mongo_changestream_decode 1.4 s fresh -> 4.9 s after the five r10
-        media/video fixtures -> 1.3-1.5 s with this cleanup, ~0.1 s/call).
-        The r8->r10 'drift on untouched code' was exactly this: each round
-        ADDED checkpoint-heavy fixtures earlier in the headline list."""
-        try:
-            sc = spark.sparkContext
-            it = sc._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-            spark.catalog.clearCache()
-        except Exception:  # noqa: BLE001 — cleanup must never fail the bench
-            pass
-        gc.collect()
-
-    for name in headline:
-        df = None
-        try:
-            # untimed warm pass, then warm BEST-OF-2 timed runs (round-8
-            # protocol): first-execution costs (plan compile, page-cache
-            # misses, a GC triggered by the previous query) otherwise add
-            # ±20% run-to-run noise, and a single timed run still caught
-            # roaming 2-3 s spikes that three rounds of judges each
-            # re-timed by hand as phantom regressions. min() of two warm
-            # runs is the steady-state number comparable across rounds.
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-
-            def _timed_run() -> float:
-                # timed run includes DataFrame construction: some queries
-                # do eager driver-side work (bounded collects, checkpoint
-                # materialization) that is part of their real cost
-                t0 = time.time()
-                df2 = QUERIES[name](spark, sf_dir)
-                df2.write.format("noop").mode("overwrite").save()
-                return time.time() - t0
-
-            # CONFIRMED best (round-10 protocol, closing the phantom-mover
-            # class r8/r9 judges kept hand-re-timing): the reported number
-            # must be reproduced by a second run within 25%, else keep
-            # re-timing (≤4 runs) — a host hiccup spanning both of two
-            # runs can no longer print as a 1.5-1.7x "regression" on
-            # untouched code. The per-query spread (max/min over all timed
-            # runs) is recorded in BENCH_local.json so a judge separates
-            # noise from regression without re-timing anything.
-            runs = [_timed_run(), _timed_run()]
-            while len(runs) < 4:
-                b1, b2 = sorted(runs)[:2]
-                if b2 / b1 <= 1.25:
-                    break
-                runs.append(_timed_run())
-            timings[name] = round(min(runs), 3)
-            spreads[name] = round(max(runs) / min(runs), 2)
-            if len(runs) > 2:
-                extra_runs[name] = len(runs)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"{type(e).__name__}: {e}"[:300]
-        # drop the query's DataFrame refs, then clear lingering blocks
-        # DETERMINISTICALLY — relying on the async ContextCleaner made
-        # later queries' timings depend on driver GC timing (the r8-r10
-        # cross-round "drift" class)
-        del df
-        _clear_lingering_state()
+    rec = _sweep(spark, sf_dir, [CDC_E2E, *headline])
+    timings, stages, errors = rec["queries"], rec["stages"], rec["errors"]
 
     # END-OF-SESSION RE-TIME PASS (round 12, closing r11 verdict Next #1):
     # the r11 driver record carried a contiguous four-query host-stall
@@ -393,64 +451,29 @@ def main() -> None:
     # window. Stall windows are transient; a genuine regression is still
     # slow at session end. So: after the full sweep, re-time every query
     # whose confirmed best exceeds 1.5x its committed BENCH_steady.json
-    # entry (one extra warm best-of-2), min-merge into the record, and
-    # mark it `retimed` in BENCH_local.json. A query that stays slow here
-    # keeps its number — and the end-calibration line tells the judge
-    # whether the whole host was degraded.
+    # entry (the same warm confirmed best-of-2), min-merge into the
+    # record, and mark it `retimed` in BENCH_local.json. A query that
+    # stays slow here keeps its number — and the end-calibration line
+    # tells the judge whether the whole host was degraded.
+    steady = _steady_queries(sf_dir)
+
+    def _slow() -> list[str]:
+        return sorted(
+            n for n, t in timings.items() if steady.get(n, 0) > 0 and t > 1.5 * steady[n]
+        )
+
+    # {name: [confirmed_best_during_sweep, end_of_session_best]} — the
+    # recorded timing is the min of the two
     retimed: dict[str, list[float]] = {}
-    try:
-        _here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(_here, "BENCH_steady.json")) as fh:
-            _steady_q = json.load(fh).get("queries", {})
-    except (OSError, ValueError):
-        _steady_q = {}
-    # guard (r12 advice): a steady file merged at a different SF would make
-    # every suspect threshold wrong — only consult it at the matching SF,
-    # compared as numbers so a `sf1` directory matches a steady `1.0`
-    try:
-        with open(os.path.join(_here, "BENCH_steady.json")) as fh:
-            _steady_sf = json.load(fh).get("sf")
-        _bench_sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-        if _steady_sf is not None and float(_steady_sf) != _bench_sf:
-            _steady_q = {}
-    except (OSError, ValueError):
-        _steady_q = {}
-    _suspects = [
-        n
-        for n, t in timings.items()
-        if _steady_q.get(n, 0) > 0 and t > 1.5 * _steady_q[n]
-    ]
-    for name in _suspects:
-        try:
-            if name == "cdc_pipeline_e2e":
-                t_new, st_new = _bench_cdc_pipeline(spark, sf_dir)
-                if t_new < timings[name]:
-                    retimed[name] = [timings[name], round(t_new, 3)]
-                    timings[name] = round(t_new, 3)
-                    stages[name] = st_new
-                continue
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # warm
-
-            def _retimed_run() -> float:
-                t0 = time.time()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                return time.time() - t0
-
-            runs2 = [_retimed_run(), _retimed_run()]
-            best2 = min(runs2)
-            if best2 < timings[name]:
-                retimed[name] = [timings[name], round(best2, 3)]
-                timings[name] = round(best2, 3)
-                spreads[name] = round(
-                    max(spreads.get(name, 1.0), max(runs2) / best2), 2
-                )
-            del df
-        except Exception:  # noqa: BLE001 — the re-time pass must not break the bench
-            pass
-        _clear_lingering_state()
+    again = _sweep(spark, sf_dir, _slow())
+    for name, t in again["queries"].items():
+        if t < timings[name]:
+            retimed[name] = [timings[name], t]
+            timings[name] = t
+            if name in again["stages"]:
+                stages[name] = again["stages"][name]
+            if name in again["spread"]:
+                rec["spread"][name] = max(rec["spread"].get(name, 1.0), again["spread"][name])
 
     # calibration re-measured at the END: a judge comparing per-query
     # numbers can see whether the host drifted DURING the run (the r10
@@ -464,11 +487,7 @@ def main() -> None:
     # session-long host degradation (the end calibration disambiguates) —
     # surface it in the contract line instead of letting it blend into
     # host-noise narrative
-    still_slow = sorted(
-        n
-        for n, t in timings.items()
-        if _steady_q.get(n, 0) > 0 and t > 1.5 * _steady_q[n]
-    )
+    still_slow = _slow()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_query_wall_clock_total",
@@ -493,21 +512,20 @@ def main() -> None:
     # can always read — the driver's stdout tail-capture truncated the r9
     # JSON mid-queries-dict
     full = dict(out)
-    full["spread"] = spreads
-    if extra_runs:
-        full["runs_needed"] = extra_runs
-    if retimed:
-        # {name: [confirmed_best_during_sweep, end_of_session_best]} —
-        # the recorded timing is the min of the two
-        full["retimed"] = retimed
-    if still_slow:
-        full["still_slow"] = still_slow
+    full["spread"] = rec["spread"]
+    for key, val in (
+        ("runs_needed", rec["runs_needed"]),
+        ("retimed", retimed),
+        ("still_slow", still_slow),
+    ):
+        if val:
+            full[key] = val
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_local.json"), "w") as fh:
+        with open(os.path.join(HERE, "BENCH_local.json"), "w") as fh:
             json.dump(full, fh, indent=1)
     except OSError:
         pass
+
     # Output order matters (r10 verdict #2 — the driver keeps only a
     # 2000-char tail of stdout and parses the LAST line as JSON; three
     # rounds of full-record last lines overflowed that window and parsed
@@ -554,7 +572,8 @@ def main() -> None:
             compact["queries_omitted"] = len(timings) - len(_qpack)
             break
     print(json.dumps(compact, separators=(",", ":")))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -49,7 +49,6 @@ def mview_fold(
     post_image: DataFrame,
     dims: list[str],
     value_col: str,
-    materialize_state: bool = False,
 ) -> DataFrame:
     """Fold one merge batch's pre/post images into the maintained view.
 
@@ -67,20 +66,17 @@ def mview_fold(
     O(touched groups). The result keeps the incoming view's cnt/sum_v types
     (group_contrib's when `view` is None): a fold never widens a decimal.
 
-    Materialization contract: this function takes NO checkpoints of its
-    own — the returned view is one lazy plan over its inputs. A caller
-    chaining folds should materialize each round's RESULT (`view =
-    mview_fold(...).localCheckpoint(eager=True)` — one job per round, the
-    cheapest linear-plan scheme) or pass `materialize_state=True` to pin
-    the incoming view instead.
+    Materialization contract: this function takes NO checkpoints — the
+    returned view is one lazy plan over its inputs, so a caller chaining
+    folds materializes each round's RESULT (`view =
+    mview_fold(...).localCheckpoint(eager=True)`, one job per round) to
+    keep the plan linear.
     """
     v = F.col(value_col)
     rows = post_image.select(*dims, F.lit(1).alias("cnt"), v.alias("sum_v")).unionByName(
         pre_image.select(*dims, F.lit(-1).alias("cnt"), (-v).alias("sum_v")))
     types = (view if view is not None else group_contrib(pre_image, dims, value_col)).schema
     if view is not None:
-        if materialize_state:
-            view = view.localCheckpoint(eager=True)
         touched = F.broadcast(rows.select(*dims).distinct())
         rows = view.join(touched, dims, "left_semi").unionByName(rows)
     out = (rows.groupBy(*dims)

@@ -543,7 +543,8 @@ class PgOutputDecoder:
         Behavior-identical to _feed's DML branch (same row dicts, same
         error messages, same v2 buffering) with the _Reader method calls,
         generator machinery, and intermediate (kind, bytes) tuple list
-        flattened out (~2.5x on insert-heavy WAL; tools/wal_stream_probe).
+        flattened out (~2.5x on insert-heavy WAL: SCALING.md section
+        "Round-12: WAL streaming decode").
         Returns the row, or None when it buffered under a streamed xid."""
         buf = payload
         tag = buf[0]

@@ -6,15 +6,19 @@ UPSERT: merge = read + join + rewrite, and rewriting 100 TB per batch is not
 viable. Solution (mirrors what the reference's ClickHouse path gets from
 `ORDER BY` sharding and what lakehouses get from clustering): destination
 tables are hash-bucketed by primary key into `_peerdb_bucket=`N partitions.
-A merge then:
+A merge (`normalize.merge_into_table`) then:
 
-1. computes the distinct buckets touched by the incoming batch (a batch of
-   250k rows touches ≤ n_buckets partitions, typically all, but a skewed or
-   small batch touches few);
+1. observes the set of buckets the incoming batch touches on the job that
+   checkpoints the deduplicated batch (an `Observation` over the bucket
+   expression — no separate probe job). A batch of 250k rows touches
+   ≤ n_buckets partitions, typically all, but a skewed or small batch
+   touches few;
 2. reads ONLY those partitions (directory-partition pruning — Spark prunes
    on `_peerdb_bucket` before touching any file);
-3. merges and dynamically overwrites ONLY those partitions
-   (`partitionOverwriteMode=dynamic`).
+3. writes the merged rows of those buckets to a staging directory, then
+   swaps each touched bucket directory in (`ParquetTable.replace_partitions`:
+   park the old directory, move the staged one in, drop the parked one), so
+   a bucket whose merge result is empty is replaced too.
 
 Per-batch cost is O(touched buckets / total buckets × table size), and both
 sides of the merge join are already co-partitioned by bucket. With table-size

@@ -17,6 +17,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gen_plans import plan_string  # noqa: E402 — tools/ is this script's own directory
+
 CHECKS: list[tuple[str, list[tuple[str, str, bool]]]] = [
     ("qrep_watermark_range", [
         ("range filter pushed to parquet", r"PushedFilters: \[.*GreaterThanOrEqual\(l_orderkey", True),
@@ -258,9 +260,8 @@ def check_lsh_verify_composition(spark, sf_dir: str) -> list[str]:
     from peerdb_spark.session import load_tables
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    plan = (
+    plan = plan_string(
         DD.lsh_verified_pairs(docs, "text", "doc_id", min_jaccard=0.05, materialize=False)
-        ._jdf.queryExecution().executedPlan().toString()
     )
     msgs = []
     for label, pat, want in [
@@ -285,10 +286,7 @@ def check_bpe_ranked_plan_flat(spark) -> list[str]:
         merges = [
             (chr(97 + i % 26), chr(97 + (i // 26) % 26)) for i in range(n)
         ]
-        return (
-            bpe_encode_words(wdf, merges, strategy="ranked")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+        return plan_string(bpe_encode_words(wdf, merges, strategy="ranked"))
 
     small, big = plan(16), plan(4096)
     msgs = []
@@ -323,10 +321,7 @@ def check_mview_round_plan(spark) -> list[str]:
     batch = spark.createDataFrame([(1, 2, "update", "b", 9)], schema)
     pre, post, _m = lww_merge_touched(mirror, batch, "pk", "ck")
     live = F.col("kind") != "delete"
-    plan = (
-        mview_fold(view, pre.where(live), post.where(live), ["grp"], "v")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = plan_string(mview_fold(view, pre.where(live), post.where(live), ["grp"], "v"))
     msgs = []
     for label, pat, want in [
         ("touched-key probes are broadcast joins", r"BroadcastHashJoin", True),
@@ -366,7 +361,7 @@ def main() -> int:
             failures += 1
         print(f"  {m}")
     for name, checks in CHECKS:
-        plan = QUERIES[name](spark, args.sf)._jdf.queryExecution().executedPlan().toString()
+        plan = plan_string(QUERIES[name](spark, args.sf))
         nexch = plan.count("Exchange")
         msgs = []
         for label, pat, want in checks:

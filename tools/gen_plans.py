@@ -1,9 +1,22 @@
-"""Regenerate PLANS.md: physical-plan evidence for the scale-critical
-operators, with commentary. Companion to tools/audit_plans.py (which asserts
-the same properties as a gate)."""
+"""Physical-plan capture for the declared queries.
+
+With no output directory, regenerate PLANS.md: plan evidence for the
+scale-critical operators, with commentary. Companion to
+tools/audit_plans.py, which asserts the same properties as a gate and reads
+plans through `plan_string` below.
+
+With --out, capture mode: write each query's `explain("formatted")` plan to
+<out>/<name><suffix>.txt, for plan diffs before/after a change. Fixture-
+building side effects run as usual (the plan of the RETURNED frame is what
+the driver executes).
+
+Usage: python tools/gen_plans.py [--sf DIR]
+       python tools/gen_plans.py --out plans/rN [--suffix _before] [--only a,b] [--sf DIR]
+"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -266,13 +279,17 @@ COMMENT = {
 }
 
 
-def main() -> None:
-    from peerdb_spark import get_spark
-    from peerdb_spark.queries import QUERIES
+def plan_string(df, formatted: bool = False) -> str:
+    """The physical plan Spark executes for `df`: the executed-plan tree, or
+    with `formatted` the text of `df.explain("formatted")`."""
+    qe = df._jdf.queryExecution()
+    if not formatted:
+        return qe.executedPlan().toString()
+    jvm = df.sparkSession._jvm
+    return qe.explainString(jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("gen_plans", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
+
+def write_plans_md(spark, queries, sf: str) -> None:
     out = [
         "# PLANS — physical-plan evidence for the scale-critical operators",
         "",
@@ -281,9 +298,7 @@ def main() -> None:
         "",
     ]
     for name, comment in COMMENT.items():
-        df = QUERIES[name](spark, sf)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        lines = [ln.rstrip() for ln in plan.splitlines()]
+        lines = [ln.rstrip() for ln in plan_string(queries[name](spark, sf)).splitlines()]
         lines = [ln if len(ln) <= 150 else ln[:147] + "..." for ln in lines]
         out += [f"## {name}", "", comment, "", "```", *lines[:40]]
         if len(lines) > 40:
@@ -295,5 +310,42 @@ def main() -> None:
     print("PLANS.md regenerated")
 
 
+def capture(spark, queries, names: list[str], sf: str, out_dir: str, suffix: str) -> int:
+    os.makedirs(out_dir, exist_ok=True)
+    failures = 0
+    for name in names:
+        try:
+            plan = plan_string(queries[name](spark, sf), formatted=True)
+        except Exception as e:  # noqa: BLE001 — record the failure, keep going
+            plan = f"PLAN CAPTURE FAILED: {type(e).__name__}: {e}"
+            failures += 1
+        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as fh:
+            fh.write(plan)
+        print(f"captured {name}")
+    return 1 if failures else 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Capture physical plans of the declared queries.")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--out", help="capture mode: directory for <name><suffix>.txt plans")
+    ap.add_argument("--suffix", default="", help="capture mode: file-name suffix, e.g. _before")
+    ap.add_argument("--only", help="capture mode: comma-separated names (default: every query)")
+    args = ap.parse_args(argv)
+    if args.out is None and (args.only or args.suffix):
+        ap.error("--only and --suffix need --out")
+
+    from peerdb_spark import get_spark
+    from peerdb_spark.queries import QUERIES
+
+    spark = get_spark("gen_plans", cpus=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.out is None:
+        write_plans_md(spark, QUERIES, args.sf)
+        return 0
+    names = args.only.split(",") if args.only else list(QUERIES)
+    return capture(spark, QUERIES, names, args.sf, args.out, args.suffix)
+
+
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -14,7 +14,13 @@ Two growth modes:
   distinct-key growth, not replicated structure. Both ×1 and ×N are
   synthesized by the same generator so the ratio is generator-vs-generator.
 
-Usage: python tools/scale_probe.py [N] [--keep] [--cardinality]
+The `hamming_pairs_parquet` row exercises the 100 TB hamming-LSH posture:
+hash64_hamming_pairs(materialize=False) straight off a parquet-backed
+fingerprint relation (500k·N rows, synthesized in either mode). It fails
+the run unless the plan has no Python node and no in-memory checkpoint
+scan, and every planted near-dup pair is found.
+
+Usage: python tools/scale_probe.py [N] [--keep] [--cardinality] [--only=a,b]
 Writes a markdown table to stdout; SCALING.md records a vetted run.
 """
 
@@ -26,6 +32,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from gen_plans import plan_string  # noqa: E402 — tools/ is this script's own directory
 
 BASE = "/root/testdata/sf0.1"
 WORK = "/tmp/peerdb_scale"
@@ -112,8 +120,30 @@ def synthesize_embeddings(spark, factor: int, out_dir: str) -> str:
     return out
 
 
+def synthesize_fingerprints(spark, factor: int) -> str:
+    """500k·N rows of (media_id, vhash) with xxhash64-derived hashes; ids
+    with id % 10 == 9 repeat id-1's hash with one bit flipped — planted
+    hamming-1 near-dups (well inside max_hamming=3) so the banding has
+    real structure to find."""
+    from pyspark.sql import functions as F
+
+    out = f"{WORK}/fp_x{factor}.parquet"
+    if os.path.exists(out):
+        return out
+    ninth = F.col("media_id") % 10 == 9
+    seed = F.when(ninth, F.col("media_id") - 1).otherwise(F.col("media_id"))
+    flip = F.when(
+        ninth, F.expr("CAST(1 AS BIGINT) << CAST(media_id % 64 AS INT)")
+    ).otherwise(F.lit(0))
+    spark.range(500_000 * factor).select(F.col("id").alias("media_id")).select(
+        "media_id", F.xxhash64(seed.cast("string")).bitwiseXOR(flip).alias("vhash")
+    ).write.mode("overwrite").parquet(out)
+    return out
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from peerdb_spark import get_spark
@@ -219,7 +249,32 @@ def main() -> None:
             docs(p).select(F.length("text").alias("n")), "n",
             [100, 2500, 5000, 7500, 9900],
         ),
+        "hamming_pairs_parquet": lambda p: _hamming_pairs(1 if p == base_dir else factor),
     }
+
+    # pair count of the latest hamming_pairs_parquet run per factor,
+    # checked against the planted near-dups after the table
+    hamming_runs: dict[int, Observation] = {}
+
+    def _hamming_pairs(f):
+        # parquet-backed state, NO checkpoint: the banding re-scans the
+        # cheap columnar state in its three branches (bucket-size guard +
+        # both join sides) instead of holding (id, hash) in executor memory
+        fp = spark.read.parquet(synthesize_fingerprints(spark, f))
+        pairs = DD.hash64_hamming_pairs(
+            fp, "vhash", "media_id", bands=4, max_hamming=3, materialize=False
+        )
+        plan = plan_string(pairs, formatted=True)
+        n_py = sum(plan.count(k) for k in (
+            "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"))
+        n_rdd = plan.count("Scan ExistingRDD")
+        if n_py or n_rdd:
+            raise SystemExit(
+                f"hamming_pairs_parquet x{f}: {n_py} python nodes, {n_rdd} "
+                "ExistingRDD scans (want 0 and 0): materialize=False must not checkpoint"
+            )
+        hamming_runs[f] = obs = Observation()
+        return pairs.observe(obs, F.count(F.lit(1)).alias("pairs"))
 
     from peerdb_spark.functions import graph as GR
     from peerdb_spark.functions import stats as ST
@@ -304,6 +359,13 @@ def main() -> None:
         ratio = ts / tb if tb > 0 else float("inf")
         flag = "" if ratio <= factor * 1.6 else "  ⚠ SUPER-LINEAR"
         print(f"| {name} | {tb:.2f} | {ts:.2f} | {ratio:.1f}{flag} |")
+
+    for f, obs in sorted(hamming_runs.items()):
+        n_pairs, planted = obs.get["pairs"], 500_000 * f // 10
+        print(f"hamming_pairs_parquet x{f}: pairs={n_pairs} planted={planted} "
+              "python_nodes=0 existing_rdd_scans=0")
+        if n_pairs < planted:
+            raise SystemExit("hamming_pairs_parquet: planted near-dups must all be found")
 
     if "--keep" not in sys.argv:
         shutil.rmtree(WORK, ignore_errors=True)
