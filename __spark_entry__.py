@@ -4,8 +4,9 @@
   heart of the engine: LWW dedup + I/U/D merge over a deterministic
   changelog derived from lineitem).
 - queries(): one entry per implemented operator from SURVEY.md §2 plus the
-  LLM-data-pipeline operator set. Implementations live in
-  peerdb_spark/queries.py and call the engine's operator modules.
+  LLM-data-pipeline operator set. Implementations live in the family
+  modules of peerdb_spark/queries/ and call the engine's operator modules;
+  peerdb_spark/queries/__init__.py names each one with its oracle in TABLE.
 - oracle_sql(): DuckDB-equivalent SQL for every query (all are
   SQL-expressible; hash parity relies on the shared md5-based hashing in
   peerdb_spark/functions/hashing.py).

@@ -47,7 +47,7 @@ def _bench_cdc_pipeline(spark, sf_dir: str) -> tuple[float, dict[str, float]]:
     from pyspark.sql import types as T
 
     from peerdb_spark import cdc
-    from peerdb_spark.queries import lineitem_changelog
+    from peerdb_spark.queries._common import lineitem_changelog
     from peerdb_spark.session import load_tables
 
     from peerdb_spark.functions import ensure_parallelism

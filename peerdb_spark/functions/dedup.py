@@ -606,11 +606,6 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     return agg.select(F.col(id_col), fp.cast("long").alias("simhash"))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance via popcount of XOR (bit_count is a Spark builtin)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,

@@ -38,10 +38,6 @@ _CBP_INTER = (0, 16, 1, 2, 4, 8, 32, 3, 5, 10, 12, 15, 47, 7, 11, 13,
 assert sorted(_CBP_INTER) == list(range(48)), "Table 9-4 inter column must be a permutation"
 
 
-def _clip_idx(v: int, hi: int) -> int:
-    return 0 if v < 0 else (hi if v > hi else v)
-
-
 def interp_luma_block(ref: np.ndarray, x0: int, y0: int,
                       mvx: int, mvy: int, bw: int = 16, bh: int = 16) -> np.ndarray:
     """§8.4.2.2.1: (bh, bw) luma prediction block at quarter-sample MV

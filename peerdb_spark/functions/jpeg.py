@@ -242,14 +242,6 @@ def _encode_block(coefq: np.ndarray, dc_pred: int, w: _BitWriter,
     return dc
 
 
-def _plane_blocks(plane: np.ndarray, bx: int, by: int) -> np.ndarray:
-    """8×8 block at block-coords (bx, by), edge-replicated."""
-    h, w = plane.shape
-    ys = np.minimum(np.arange(by * 8, by * 8 + 8), h - 1)
-    xs = np.minimum(np.arange(bx * 8, bx * 8 + 8), w - 1)
-    return plane[np.ix_(ys, xs)]
-
-
 def _quantized_blocks(plane: np.ndarray, nbx: int, nby: int,
                       qz: np.ndarray) -> np.ndarray:
     """ALL 8×8 blocks of a plane → quantized zigzag coefficients

@@ -156,15 +156,6 @@ def word_ngrams_of(toks: Column, n: int = 3) -> Column:
     )
 
 
-def char_kgrams(col: Column | str, k: int = 8) -> Column:
-    """All character k-grams of the text as an array (empty if len < k)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), n - k + 1), lambda i: F.substring(c, i, k))
-    )
-
-
 # Rabin-Karp polynomial hash parameters (shared with the SQL oracle)
 FP_BASE = 257
 FP_P = 2_147_483_647  # 2^31 - 1

@@ -417,7 +417,6 @@ class SqlSurface:
 
         from peerdb_spark import cdc as C
         from peerdb_spark.snapshot import resync_table
-        from peerdb_spark.storage import ParquetTable
 
         def _initial_copy():
             # re-read per run: a RESYNC MIRROR statement may have armed the
@@ -432,8 +431,7 @@ class SqlSurface:
                 if tcfg is None:
                     continue
                 if cfg.resync:
-                    table = ParquetTable(self.spark, tcfg.path, tcfg.pk_cols, tcfg.n_buckets)
-                    resync_table(self.spark, src, table,
+                    resync_table(self.spark, src, pipeline._table(tcfg),
                                  soft_delete_col=tcfg.soft_delete_col)
                 else:
                     pipeline.add_table(tcfg, backfill=src)

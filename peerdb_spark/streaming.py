@@ -238,7 +238,7 @@ def session_event_aggregation(
     — the merging-session state store handles out-of-order arrivals without
     a custom stateful operator. Batch: the same expression compiles to a
     window-function plan; results match the batch sessionize query
-    (queries.q_events_sessionize) for the same gap.
+    (queries/events.py:q_events_sessionize) for the same gap.
     """
     keys = key_cols or ["user_id"]
     src = stream

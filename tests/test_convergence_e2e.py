@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from peerdb_spark import cdc
-from peerdb_spark.queries import QUERIES, lineitem_base, lineitem_changes
+from peerdb_spark.queries import QUERIES
+from peerdb_spark.queries._common import lineitem_base, lineitem_changes
 from peerdb_spark.storage import ParquetTable
 from peerdb_spark.streaming import CdcStreamRunner
 

@@ -616,7 +616,7 @@ def test_sql_text_mirrors_match_column_decoders(spark):
     ANSI-overflow shapes (count/srid slices above INT_MAX) that the
     round-8 try_cast fix turned from crashes into NULL geometries."""
     from peerdb_spark.functions import exotic_sql as XS
-    from peerdb_spark.queries import _WKB_LITS, _ls_hexes, _mpg_hexes, _pg_hexes
+    from peerdb_spark.queries.qrep import _WKB_LITS, _ls_hexes, _mpg_hexes, _pg_hexes
 
     vals = (
         list(_WKB_LITS) + _ls_hexes() + _pg_hexes() + _mpg_hexes() + [

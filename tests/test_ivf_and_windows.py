@@ -160,7 +160,7 @@ def test_ivf_indexed_probe_partition_pruned(spark, emb, tmp_path):
 def test_session_aggregation_batch_matches_manual(spark, tables):
     """Native session_window sessions must agree with the manual lag-cumsum
     sessionize (q_events_sessionize) on per-user session counts."""
-    from peerdb_spark.queries import q_events_sessionize
+    from peerdb_spark.queries.events import q_events_sessionize
     from peerdb_spark.streaming import session_event_aggregation
 
     out = session_event_aggregation(tables["events"], gap="30 minutes")

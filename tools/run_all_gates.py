@@ -14,17 +14,23 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(name: str, cmd: list[str]) -> bool:
+def run(name: str, cmd: list[str], env: dict[str, str] | None = None) -> bool:
     print(f"=== {name}: {' '.join(cmd)}")
-    r = subprocess.run(cmd, cwd=ROOT)
+    r = subprocess.run(cmd, cwd=ROOT, env=env)
     ok = r.returncode == 0
     print(f"=== {name}: {'PASS' if ok else 'FAIL'}\n")
     return ok
 
 
 def main() -> int:
+    # the ROADMAP Tier-1 command: all cores (nproc), a fixed Spark scratch
+    # dir, no pytest cache, inside the 2670 s window
+    tier1_env = {**os.environ, "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+                 "SPARK_LOCAL_DIRS": "/tmp/spark-local"}
     results = [
-        run("tests", [sys.executable, "-m", "pytest", "tests/", "-q"]),
+        run("tests", ["timeout", "-k", "10", "2670", sys.executable, "-m", "pytest",
+                      "tests/", "-q", "--continue-on-collection-errors",
+                      "-p", "no:cacheprovider"], env=tier1_env),
         run("perfbench", [sys.executable, "-m", "pytest", "perfbench/tests", "-q",
                           "-p", "no:cacheprovider"]),
         run("oracle", [sys.executable, "tools/check_oracle.py"]),

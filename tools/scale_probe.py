@@ -20,6 +20,10 @@ fingerprint relation (500k·N rows, synthesized in either mode). It fails
 the run unless the plan has no Python node and no in-memory checkpoint
 scan, and every planted near-dup pair is found.
 
+Each input (documents, embeddings, fingerprints) is built the first time a
+selected row reads it, before that row's timed runs, so `--only=` builds only
+what its rows read.
+
 Usage: python tools/scale_probe.py [N] [--keep] [--cardinality] [--only=a,b]
 Writes a markdown table to stdout; SCALING.md records a vetted run.
 """
@@ -159,15 +163,26 @@ def main() -> None:
     cardinality = "--cardinality" in sys.argv
     if cardinality:
         base_dir, big_dir = f"{WORK}/card1", f"{WORK}/card{factor}"
-        for d, f_ in ((base_dir, 1), (big_dir, factor)):
-            os.makedirs(d, exist_ok=True)
-            synthesize_documents(spark, f_, d)
-            synthesize_embeddings(spark, f_, d)
     else:
         base_dir, big_dir = BASE, WORK
-        replicate(spark, "documents", factor, {"doc_id": 10_000_000})
-        replicate(spark, "embeddings", factor, {"vec_id": 10_000_000})
-        replicate(spark, "lineitem", factor, {"l_orderkey": 100_000_000})
+    # `reads` collects the tables a row's warm run asked for
+    reads: set[str] = set()
+
+    def table_path(path: str, table: str) -> str:
+        """Parquet path of `table` for the run at `path`, built the first
+        time a selected row reads it."""
+        reads.add(table)
+        f = 1 if path == base_dir else factor
+        if table == "fingerprints":
+            return synthesize_fingerprints(spark, f)
+        if cardinality:
+            os.makedirs(path, exist_ok=True)
+            synthesize = synthesize_documents if table == "documents" else synthesize_embeddings
+            return synthesize(spark, f, path)
+        if path == BASE:
+            return f"{BASE}/{table}.parquet"
+        id_col = {"documents": "doc_id", "embeddings": "vec_id"}[table]
+        return replicate(spark, table, factor, {id_col: 10_000_000})
 
     def t(fn) -> float:
         t0 = time.time()
@@ -175,10 +190,10 @@ def main() -> None:
         return time.time() - t0
 
     def docs(path):
-        return ensure_parallelism(spark.read.parquet(f"{path}/documents.parquet"))
+        return ensure_parallelism(spark.read.parquet(table_path(path, "documents")))
 
     def emb(path):
-        return ensure_parallelism(spark.read.parquet(f"{path}/embeddings.parquet"))
+        return ensure_parallelism(spark.read.parquet(table_path(path, "embeddings")))
 
     Q = {
         "minhash_lsh_pairs": lambda p: DD.minhash_lsh_pairs(docs(p), "text", "doc_id"),
@@ -249,18 +264,19 @@ def main() -> None:
             docs(p).select(F.length("text").alias("n")), "n",
             [100, 2500, 5000, 7500, 9900],
         ),
-        "hamming_pairs_parquet": lambda p: _hamming_pairs(1 if p == base_dir else factor),
+        "hamming_pairs_parquet": lambda p: _hamming_pairs(p),
     }
 
     # pair count of the latest hamming_pairs_parquet run per factor,
     # checked against the planted near-dups after the table
     hamming_runs: dict[int, Observation] = {}
 
-    def _hamming_pairs(f):
+    def _hamming_pairs(p):
         # parquet-backed state, NO checkpoint: the banding re-scans the
         # cheap columnar state in its three branches (bucket-size guard +
         # both join sides) instead of holding (id, hash) in executor memory
-        fp = spark.read.parquet(synthesize_fingerprints(spark, f))
+        f = 1 if p == base_dir else factor
+        fp = spark.read.parquet(table_path(p, "fingerprints"))
         pairs = DD.hash64_hamming_pairs(
             fp, "vhash", "media_id", bands=4, max_hamming=3, materialize=False
         )
@@ -296,7 +312,7 @@ def main() -> None:
 
     def _media_png_roundtrip(p):
         from peerdb_spark.functions import multimodal as MM
-        from peerdb_spark.queries import synthetic_media
+        from peerdb_spark.queries.media import synthetic_media
 
         imgs = synthetic_media(docs(p)).where(
             F.col("meta.mime") == "image/raw-rgb"
@@ -353,7 +369,10 @@ def main() -> None:
             continue
         if cardinality and name == "rollup_fold3":
             continue  # events are not synthesized in cardinality mode
+        reads.clear()
         fn(base_dir).write.mode("overwrite").format("noop").save()  # warm
+        for table in sorted(reads):  # the ×N inputs, built outside the timed run
+            table_path(big_dir, table)
         tb = t(lambda: fn(base_dir))
         ts = t(lambda: fn(big_dir))
         ratio = ts / tb if tb > 0 else float("inf")
