@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from peerdb_spark import normalize as N
+from peerdb_spark.registry import atomic_write
 from peerdb_spark.schema_evolution import _parse_ddl
 from peerdb_spark.storage import SCHEMA_FILE, ParquetTable, load_schema, save_schema
 
@@ -442,6 +443,11 @@ class CdcTableConfig:
     # design wants. 0 disables.
     split_threshold_rows: int = 4_000_000
 
+    def __post_init__(self):
+        # destinations are merged bucket by bucket (normalize.merge_into_table)
+        if self.n_buckets < 1:
+            raise ValueError(f"{self.dst_table}: n_buckets must be >= 1, got {self.n_buckets}")
+
 
 class CdcPipeline:
     """Batch-mode CDC: sync (changelog→raw) then normalize (raw→destinations).
@@ -581,11 +587,7 @@ class CdcPipeline:
             return
         self._last_normalized = batch_id
         os.makedirs(self.raw.path, exist_ok=True)
-        p = os.path.join(self.raw.path, self._NORM_WM)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, p)
+        atomic_write(os.path.join(self.raw.path, self._NORM_WM), str(batch_id))
 
     def sync_batch(self, changelog: DataFrame, batch_id: int) -> None:
         self.raw.append(changelog, batch_id)

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from peerdb_spark.functions.hashing import h64
-
 # token pattern shared with the oracle: whitespace-split words
 WS = r"\s+"
 # BPE-ish unit pattern: letter runs, single digits, single punctuation marks

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from peerdb_spark.storage import BUCKET_COL, ParquetTable, bucket_expr
+from peerdb_spark.storage import BUCKET_COL, ParquetTable
 
 KIND_INSERT, KIND_UPDATE, KIND_DELETE = 0, 1, 2
 # RelationRecord: schema-change-as-data (ref: flow/model/record.go:150-153);
@@ -380,6 +380,8 @@ def merge_into_table(
     broadcast-semi-join slices of relations this merge reads/writes anyway
     (pre from the touched buckets, post from the just-written table), so
     the images are free beyond one re-read of the touched buckets."""
+    if not (table.n_buckets and table.pk_cols):
+        raise ValueError("merge_into_table needs a bucketed table")
     pk = table.pk_cols
     # PK-changing updates split BEFORE dedup so the synthetic old-pk delete
     # participates in last-writer-wins under its own key.
@@ -387,7 +389,7 @@ def merge_into_table(
     # manifest-aware leaf assignment (storage.assign_bucket_expr): for a
     # never-split table this is exactly the static pmod; after splits it
     # routes each pk to its current extendible-hashing leaf
-    bexpr = table.assign_bucket_expr() if table.exists and table.n_buckets else None
+    bexpr = table.assign_bucket_expr() if table.exists else None
     obs = Observation()
 
     def checkpoint(df: DataFrame) -> DataFrame:
@@ -422,50 +424,37 @@ def merge_into_table(
             post = table.read().join(F.broadcast(keys), pk, "left_semi")
             return post.where(F.lit(False)), post
         return None
-    if table.n_buckets:
-        deduped = deduped.withColumn(BUCKET_COL, bexpr)
-        buckets = sorted(obs.get["b"])
-        dest = table.read_buckets(buckets).drop(BUCKET_COL)
-        if return_images:
-            pre = dest.join(F.broadcast(keys), pk, "left_semi").localCheckpoint(
-                eager=True  # the buckets are REWRITTEN below — snapshot first
-            )
-        merged = merge_changes(dest, deduped.drop(BUCKET_COL), pk, data_cols,
-                               soft_delete_col, synced_at_col, dedup=False)
-        merged = merged.withColumn(BUCKET_COL, bexpr)
-        table.replace_partitions(merged, buckets)
-        if return_images:
-            post = (
-                table.read_buckets(buckets).drop(BUCKET_COL)
-                .join(F.broadcast(keys), pk, "left_semi")
-            )
-            # a pending split would move the touched buckets' rows to child
-            # ids under post's lazy plan — snapshot post first, then split.
-            # split_candidates applies the same jittered thresholds as
-            # maybe_split (one footer scan; no eager checkpoint unless a
-            # split will actually happen)
-            need = table.split_candidates(buckets)
-            if need:
-                post = post.localCheckpoint(eager=True)
-                for b in need:
-                    table.split_bucket(b)
-            return pre, post
-        # grow the layout AFTER the batch commits: each touched bucket whose
-        # row count crossed the threshold splits once (bounded per-batch
-        # work; see storage.maybe_split)
-        table.maybe_split(buckets)
-    else:
-        dest = table.read()
-        if return_images:
-            pre = dest.join(F.broadcast(keys), pk, "left_semi").localCheckpoint(
-                eager=True  # table.overwrite below replaces the files pre reads
-            )
-        merged = merge_changes(dest, deduped, pk, data_cols, soft_delete_col, synced_at_col,
-                               dedup=False)
-        table.overwrite(merged)
-        if return_images:
-            post = table.read().join(F.broadcast(keys), pk, "left_semi")
-            return pre, post
+    deduped = deduped.withColumn(BUCKET_COL, bexpr)
+    buckets = sorted(obs.get["b"])
+    dest = table.read_buckets(buckets).drop(BUCKET_COL)
+    if return_images:
+        pre = dest.join(F.broadcast(keys), pk, "left_semi").localCheckpoint(
+            eager=True  # the buckets are REWRITTEN below — snapshot first
+        )
+    merged = merge_changes(dest, deduped.drop(BUCKET_COL), pk, data_cols,
+                           soft_delete_col, synced_at_col, dedup=False)
+    merged = merged.withColumn(BUCKET_COL, bexpr)
+    table.replace_partitions(merged, buckets)
+    if return_images:
+        post = (
+            table.read_buckets(buckets).drop(BUCKET_COL)
+            .join(F.broadcast(keys), pk, "left_semi")
+        )
+        # a pending split would move the touched buckets' rows to child
+        # ids under post's lazy plan — snapshot post first, then split.
+        # split_candidates applies the same jittered thresholds as
+        # maybe_split (one footer scan; no eager checkpoint unless a
+        # split will actually happen)
+        need = table.split_candidates(buckets)
+        if need:
+            post = post.localCheckpoint(eager=True)
+            for b in need:
+                table.split_bucket(b)
+        return pre, post
+    # grow the layout AFTER the batch commits: each touched bucket whose
+    # row count crossed the threshold splits once (bounded per-batch
+    # work; see storage.maybe_split)
+    table.maybe_split(buckets)
     return None
 
 

@@ -16,6 +16,15 @@ from dataclasses import asdict, dataclass, field
 from typing import Any
 
 
+def atomic_write(path: str, text: str) -> None:
+    """Publish `text` at `path` with one rename: a reader sees the old file or
+    the new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 @dataclass
 class Peer:
     """A named data endpoint. kind: 'parquet' | 'delta' | 'jdbc' | 'memory'."""
@@ -95,10 +104,7 @@ class Catalog:
     def _write(self, rel: str, obj: Any) -> None:
         p = self._path(rel)
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(obj, f, default=str)
-        os.replace(tmp, p)  # atomic publish
+        atomic_write(p, json.dumps(obj, default=str))
 
     def _read(self, rel: str, default: Any = None) -> Any:
         p = self._path(rel)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from peerdb_spark.registry import atomic_write
 from peerdb_spark.storage import read_parquet
 
 MEASURES = ["cnt", "sum_v", "min_v", "max_v"]
@@ -174,11 +175,7 @@ def publish_version(table_path: str, m: dict, data: DataFrame | dict[str, DataFr
     applied = m["applied_extra"] if batch_id is None else [*m["applied_extra"], batch_id]
     nm = _compact_applied(
         {**m, "version": nxt, "schema": schema, "applied_extra": sorted(applied)})
-    pointer = os.path.join(table_path, POINTER)
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(nm, fh)
-    os.replace(tmp, pointer)
+    atomic_write(os.path.join(table_path, POINTER), json.dumps(nm))
     retire_snapshot(table_path, nxt)
 
 

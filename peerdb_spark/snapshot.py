@@ -11,20 +11,18 @@ Reference semantics (studied, not copied):
   (flow/workflows/cdc_flow.go:638-829, flow/activities/flowable.go:1653-1760
   RenameTables).
 
-Over parquet directories the swap is an os.replace-style directory rename —
-atomic on a POSIX filesystem, metadata-only on object stores with a manifest
-(single-driver semantics, like the reference's one-orchestrator model).
+Over parquet directories the swap is the destination's own overwrite: the
+fresh clone is staged, then one manifest publish makes it the table
+(storage.py module doc; one writer per table, like the reference's
+one-orchestrator model).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from peerdb_spark.registry import Catalog, MirrorConfig
+from peerdb_spark.registry import MirrorConfig
 from peerdb_spark.qrep import QRepEngine
 from peerdb_spark.storage import ParquetTable
 
@@ -51,18 +49,10 @@ def resync_table(
     table: ParquetTable,
     soft_delete_col: str | None = None,
 ) -> None:
-    """Full refresh with atomic swap.
-
-    1. write the fresh clone to `<path>.staging-resync`
-    2. if soft-delete mode: union tombstones present only in the old table
-       (deleted rows carried forward — RenameTables soft-delete branch)
-    3. park-promote swap using the storage repair protocol's marker names,
-       so a crash in any window is rolled forward/back by
-       `ParquetTable.repair()` exactly like an interrupted overwrite
-    """
-    resync_path = table.path + ".staging-resync"
-    staging = ParquetTable(spark, resync_path, table.pk_cols, table.n_buckets)
-
+    """Full refresh with atomic swap: `table.overwrite` of the fresh clone,
+    which commits in one manifest publish (a crash leaves the old table or
+    the new one). In soft-delete mode, tombstones present only in the old
+    table are carried forward (RenameTables soft-delete branch)."""
     fresh = source
     if soft_delete_col and table.exists:
         old = table.read()
@@ -77,11 +67,4 @@ def resync_table(
             fresh = fresh.withColumn(soft_delete_col, F.lit(False))
     elif soft_delete_col:
         fresh = fresh.withColumn(soft_delete_col, F.lit(False))
-
-    staging.overwrite(fresh)
-
-    parked = table.path + ".overwrite-old-resync"
-    if os.path.isdir(table.path):
-        os.rename(table.path, parked)
-    os.rename(resync_path, table.path)
-    shutil.rmtree(parked, ignore_errors=True)
+    table.overwrite(fresh)

@@ -41,6 +41,8 @@ import json
 import struct
 from dataclasses import dataclass, field
 
+from peerdb_spark.registry import atomic_write
+
 # pgoutput timestamps: microseconds since 2000-01-01 UTC
 _PG_EPOCH = dt.datetime(2000, 1, 1)
 
@@ -745,10 +747,7 @@ def decode_pgoutput(messages_df, slot_col: str = "slot", lsn_col: str = "lsn",
                 os.makedirs(sdir, exist_ok=True)
                 path = os.path.join(
                     sdir, f"stream_{slot}_{_uuid.uuid4().hex}.json")
-                tmp = path + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(state, fh)
-                os.replace(tmp, path)
+                atomic_write(path, json.dumps(state))
                 body = json.dumps({"state_file": path})
             else:
                 body = json.dumps(state)

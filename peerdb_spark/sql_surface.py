@@ -16,10 +16,9 @@ catalog/engines; cursors page a DataFrame via toLocalIterator.
 
 from __future__ import annotations
 
-import json
 import re
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession

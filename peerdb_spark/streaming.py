@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from peerdb_spark.cdc import CHANGELOG_SCHEMA, CdcPipeline, CdcTableConfig
+from peerdb_spark.registry import atomic_write
 
 
 class CdcStreamRunner:
@@ -425,11 +426,7 @@ class WalStreamRunner(CdcStreamRunner):
             },
             "streams": self._stream_states,
         }
-        path = self._state_path(batch_id)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(blob, fh)
-        os.replace(tmp, path)
+        atomic_write(self._state_path(batch_id), json.dumps(blob))
         # prune the superseded record AND any executor-written stream-state
         # files only IT references (a replay can only target the last
         # uncommitted batch, which reads state_{batch_id - 1})

@@ -12,12 +12,13 @@ copied); here the engine owns its parquet destinations, so it owns the split.
 """
 
 import os
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from peerdb_spark import normalize as N
-from peerdb_spark.storage import BUCKET_COL, ParquetTable
+from peerdb_spark.storage import BUCKET_COL, MANIFEST_FILE, ParquetTable
+from tests.test_storage_crash import _assert_clean, _crash_at
 
 CHG_SCHEMA = "pk long, v string, _kind string, _checkpoint_id long, _commit_ts timestamp"
 
@@ -52,8 +53,9 @@ def test_split_preserves_rows_and_rewrites_only_parent(spark, tmp_path):
     # manifest swapped parent for children
     leaves = set(t.leaf_buckets())
     assert parent not in leaves and {c1, c2} <= leaves
-    # data identical
+    # data identical, also to a plain parquet read of the directory
     assert sorted((r.pk, r.v) for r in t.read().collect()) == before
+    assert sorted((r.pk, r.v) for r in spark.read.parquet(t.path).collect()) == before
     # ONLY the parent's directory changed: every other bucket keeps its
     # exact parquet files (the property that makes splits O(1 bucket))
     files_after = _bucket_files(t.path)
@@ -67,13 +69,21 @@ def test_split_preserves_rows_and_rewrites_only_parent(spark, tmp_path):
 
 
 def test_legacy_table_without_manifest_matches_static_scheme(spark, tmp_path):
-    t = _mk(spark, str(tmp_path / "t"))
-    # a never-split table writes no manifest at all — that IS the legacy
-    # on-disk format, so pre-split tables need no migration
+    """A table older versions wrote — bucket dirs, a schema sidecar, no
+    manifest — reads its rows, routes keys by the static scheme, survives a
+    crashed first write, accepts a merge, and after it holds a full manifest
+    and nothing it does not name."""
+    from peerdb_spark.storage import bucket_expr, save_schema
+
+    path = str(tmp_path / "t")
+    rows = spark.range(400).select(F.col("id").alias("pk"),
+                                   F.concat(F.lit("v"), F.col("id")).alias("v"))
+    legacy = rows.withColumn(BUCKET_COL, bucket_expr(["pk"], 4))
+    legacy.write.partitionBy(BUCKET_COL).parquet(path)
+    save_schema(path, legacy.schema)
+    t = ParquetTable(spark, path, ["pk"], n_buckets=4)
     assert not os.path.exists(t._manifest_path)
     assert t.leaf_buckets() == [0, 1, 2, 3]
-    from peerdb_spark.storage import bucket_expr
-
     df = spark.range(200).select(F.col("id").alias("pk"))
     mism = (
         df.withColumn("a", t.assign_bucket_expr())
@@ -82,6 +92,44 @@ def test_legacy_table_without_manifest_matches_static_scheme(spark, tmp_path):
         .count()
     )
     assert mism == 0
+    assert sorted((r.pk, r.v) for r in ParquetTable(spark, path).read().collect()) == \
+        [(i, f"v{i}") for i in range(400)]
+    # a first write that crashes after one staged file moved in leaves the
+    # legacy rows readable: the table's files are named before any moves
+    with _crash_at(1, path, calls=[(os, "rename")]), pytest.raises(OSError):
+        t.overwrite(rows.withColumn("v", F.lit("x")))
+    assert sorted((r.pk, r.v) for r in ParquetTable(spark, path).read().collect()) == \
+        [(i, f"v{i}") for i in range(400)]
+    N.merge_into_table(t, spark.createDataFrame(
+        [(i, f"m{i}", "update", 1000 + i, None) for i in range(0, 400, 9)], CHG_SCHEMA))
+    got = {r.pk: r.v for r in spark.read.parquet(path).collect()}
+    assert len(got) == 400 and got[9] == "m9" and got[10] == "v10"
+    assert t.leaf_buckets() == [0, 1, 2, 3]
+    _assert_clean(t)
+
+
+def test_legacy_split_manifest_reads_and_merges(spark, tmp_path):
+    """Older versions kept only the leaf ids of a split table in the
+    manifest; such a table reads the same rows, routes by its leaves and
+    accepts a merge."""
+    import json
+
+    t = _mk(spark, str(tmp_path / "t"))
+    t.split_bucket(1)
+    leaves = t.leaf_buckets()
+    with open(t._manifest_path, "w") as f:
+        json.dump({"base": 4, "leaves": leaves}, f)
+    legacy = ParquetTable(spark, t.path, ["pk"], n_buckets=4)
+    assert legacy.leaf_buckets() == leaves
+    raw = legacy.read_raw().withColumn("_a", legacy.assign_bucket_expr())
+    assert raw.where(F.col(BUCKET_COL) != F.col("_a")).count() == 0
+    assert sorted((r.pk, r.v) for r in legacy.read().collect()) == \
+        sorted((i, f"v{i}") for i in range(400))
+    N.merge_into_table(legacy, spark.createDataFrame(
+        [(i, f"m{i}", "update", 1000 + i, None) for i in range(1, 400, 4)], CHG_SCHEMA))
+    got = {r.pk: r.v for r in legacy.read().collect()}
+    assert len(got) == 400 and got[5] == "m5" and got[6] == "v6"
+    assert legacy.leaf_buckets() == leaves
 
 
 def test_empty_leaf_splits_manifest_only(spark, tmp_path):
@@ -112,6 +160,11 @@ def test_merge_into_split_table_converges(spark, tmp_path):
     )
     N.merge_into_table(t, changes)
     got = {r.pk: r.v for r in t.read().collect()}
+    # a reader that knows neither the keys nor the bucket count, and a plain
+    # parquet read, see the same rows
+    assert {r.pk: r.v for r in ParquetTable(spark, t.path).read().collect()} == got
+    assert sorted(spark.read.parquet(t.path).drop(BUCKET_COL).collect()) == \
+        sorted(t.read().collect())
     for i in range(400):
         if i % 50 == 1:
             # deletes carry the highest checkpoints, so LWW ranks them
@@ -206,74 +259,6 @@ def test_return_images_path_snapshots_post_before_split(spark, tmp_path):
     assert len(t.leaf_buckets()) > 4  # the split did happen
 
 
-def test_fault_injection_sweep_split_protocol(spark, tmp_path):
-    """Interrupt split_bucket at every os.rename / os.replace / shutil.move /
-    os.remove call index in turn; after each crash a plain read must return
-    the EXACT original rows (no loss, no duplicates) and re-running
-    maybe_split must converge to the committed split."""
-    from unittest import mock
-
-    from peerdb_spark import storage as S
-
-    expected = sorted((i, f"v{i}") for i in range(400))
-
-    step = 0
-    while True:
-        path = str(tmp_path / f"s{step}")
-        t = _mk(spark, path, threshold=50)
-        calls = {"n": 0}
-        real_rename, real_replace = os.rename, os.replace
-        real_move, real_remove = shutil.move, os.remove
-
-        # lease acquire/release are excluded from injection: an in-process
-        # exception always reaches the finally-release, and a process crash
-        # leaves a DEAD-pid lease that _writer_alive already lets readers
-        # repair past — neither is a window this sweep can model in-process
-        def _gate(path, _step=step, _calls=calls):
-            if "writer-lease" in str(path):
-                return
-            if _calls["n"] == _step:
-                raise OSError("injected crash")
-            _calls["n"] += 1
-
-        def f_rename(a, b):
-            _gate(a); return real_rename(a, b)
-
-        def f_replace(a, b):
-            _gate(a); return real_replace(a, b)
-
-        def f_move(a, b):
-            _gate(a); return real_move(a, b)
-
-        def f_remove(a):
-            _gate(a); return real_remove(a)
-
-        crashed = False
-        with mock.patch.object(S.os, "rename", f_rename), mock.patch.object(
-            S.os, "replace", f_replace
-        ), mock.patch("shutil.move", f_move), mock.patch.object(
-            S.os, "remove", f_remove
-        ):
-            try:
-                t.split_bucket(0)
-            except OSError:
-                crashed = True
-        # read-path repair must yield a consistent table either way
-        got = sorted((r.pk, r.v) for r in t.read().collect())
-        assert got == expected, (step, crashed, len(got))
-        # recovery converges: split every remaining oversized leaf
-        t.maybe_split()
-        got = sorted((r.pk, r.v) for r in t.read().collect())
-        assert got == expected, (step, crashed, len(got))
-        assert max(t.rows_per_bucket().values() or [0]) <= 400
-        raw = t.read_raw().withColumn("_a", t.assign_bucket_expr())
-        assert raw.where(F.col(BUCKET_COL) != F.col("_a")).count() == 0
-        if not crashed:
-            break
-        step += 1
-    assert step >= 4  # the sweep exercised several crash windows
-
-
 def test_split_idempotent_and_double_split_rejected(spark, tmp_path):
     t = _mk(spark, str(tmp_path / "t"))
     t.split_bucket(0)
@@ -314,46 +299,42 @@ def test_overwrite_preserves_manifest(spark, tmp_path):
 
 
 def test_overwrite_crash_window_keeps_manifest(spark, tmp_path):
-    """Crash between staging-promote and manifest re-save: repair restores
-    the manifest from the parked pre-overwrite dir (like the schema
-    sidecar)."""
-    t = _mk(spark, str(tmp_path / "t"))
-    t.split_bucket(2)
-    leaves = sorted(t.leaf_buckets())
-    # simulate: park the table (manifest inside), promote a manifest-less
-    # copy (what a promoted staging is)
-    parked = t.path + ".overwrite-old-deadbeef"
-    shutil.copytree(t.path, parked)
-    os.remove(t._manifest_path)
-    t.repair()
-    assert sorted(t.leaf_buckets()) == leaves
-    assert not os.path.isdir(parked)
+    """An overwrite of a split table that crashes before or after its
+    commit leaves the split leaves in force, with every row in the leaf
+    they assign it."""
+    fresh = spark.range(400).select(F.col("id").alias("pk"),
+                                    F.concat(F.lit("w"), F.col("id")).alias("v"))
+    for name, only, calls in (("before", MANIFEST_FILE, [(os, "replace")]),
+                              ("after", "", [(os, "remove")])):
+        t = _mk(spark, str(tmp_path / name))
+        t.split_bucket(2)
+        leaves = t.leaf_buckets()
+        with _crash_at(0, t.path, only=only, calls=calls), pytest.raises(OSError):
+            t.overwrite(fresh)
+        t2 = ParquetTable(spark, t.path, ["pk"], n_buckets=4)
+        assert t2.leaf_buckets() == leaves, name
+        raw = t2.read_raw().withColumn("_a", t2.assign_bucket_expr())
+        assert raw.where(F.col(BUCKET_COL) != F.col("_a")).count() == 0, name
+        want = "v" if name == "before" else "w"
+        assert {r.v[0] for r in t2.read().collect()} == {want}, name
 
 
 def test_concurrent_reader_never_sees_split_duplicates(spark, tmp_path):
-    """Round-9 review finding: mid-split (children staged, parent still
-    live, writer holding the lease so readers skip repair) a read must see
-    exactly the original rows — the dot-prefixed child staging names keep
-    them invisible to partition discovery."""
+    """Mid-split — both children's files moved into the table, the manifest
+    not yet published — a reader sees exactly the original rows, and the
+    next split of the same leaf converges."""
     t = _mk(spark, str(tmp_path / "t"))
     expected = sorted((r.pk, r.v) for r in t.read().collect())
-    m, r_ = t.bucket_level(1)
+    m, _r = t.bucket_level(1)
     c1, c2 = 2 * m + 1, 3 * m + 1
-    # hand-build the pre-commit state: marker + dot-staged children present,
-    # parent still live, OUR lease held (a live writer mid-split)
-    import json as _json
-    pdir = os.path.join(t.path, f"{BUCKET_COL}=1")
-    for c in (c1, c2):
-        shutil.copytree(pdir, os.path.join(t.path, f".split-in-{BUCKET_COL}={c}"))
-    with open(os.path.join(t.path, ".split-pending-1.json"), "w") as f:
-        f.write(_json.dumps({"parent": 1, "children": [c1, c2]}))
-    t._acquire_lease()
-    try:
-        got = sorted((r.pk, r.v) for r in t.read().collect())
-        assert got == expected  # no duplicates, no missing rows
-    finally:
-        t._release_lease()
-    # once the writer is gone, repair rolls the attempt back cleanly
-    got = sorted((r.pk, r.v) for r in t.read().collect())
-    assert got == expected
-    assert not any(n.startswith(".split-") for n in os.listdir(t.path))
+    with _crash_at(0, t.path, only=MANIFEST_FILE, calls=[(os, "replace")]), \
+            pytest.raises(OSError):
+        t.split_bucket(1)
+    assert {f"{BUCKET_COL}={c1}", f"{BUCKET_COL}={c2}"} <= set(os.listdir(t.path))
+    reader = ParquetTable(spark, t.path, ["pk"], n_buckets=4)
+    assert 1 in reader.leaf_buckets()
+    got = sorted((r.pk, r.v) for r in reader.read().collect())
+    assert got == expected  # no duplicates, no missing rows
+    assert t.split_bucket(1) == (c1, c2)
+    assert sorted((r.pk, r.v) for r in t.read().collect()) == expected
+    _assert_clean(t)

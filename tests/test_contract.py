@@ -39,3 +39,24 @@ def test_every_query_function_is_in_the_table_once():
 def test_entry_uses_declared_query(spark):
     df = entry.entry(spark)
     assert set(df.columns) == {"pk", "qty", "price", "flag"}
+
+
+def test_storage_layout_names_live_in_storage_only():
+    """The manifest file name and the staging-dir infix are spelled only in
+    storage.py; every other module reaches a table's files through
+    ParquetTable. Spark-free: an AST walk over string literals."""
+    import ast
+    import pathlib
+
+    import peerdb_spark
+
+    names = ("_peerdb_buckets.json", ".staging-")
+    root = pathlib.Path(peerdb_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "storage.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                found += [(str(path.relative_to(root)), n) for n in names if n in node.value]
+    assert not found, found

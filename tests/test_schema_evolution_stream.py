@@ -70,7 +70,7 @@ def test_relation_record_adds_column_mid_stream(spark, tmp_path):
 
 def test_repeated_relation_record_dedups(spark, tmp_path):
     cat = Catalog(str(tmp_path / "cat"))
-    cfg = cdc.CdcTableConfig("t", ["id"], VAL, str(tmp_path / "dst"), n_buckets=0)
+    cfg = cdc.CdcTableConfig("t", ["id"], VAL, str(tmp_path / "dst"), n_buckets=4)
     pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg],
                            catalog=cat, mirror_name="m1")
     pipe.sync_batch(_feed(spark, [_row("insert", 1, json.dumps({"id": 1, "v": "a"}))]), 0)
@@ -90,7 +90,7 @@ def test_message_record_is_inert(spark, tmp_path):
     """MessageRecords (logical-decoding messages) and unknown kinds stage in
     raw for queue consumers but never merge — previously an unknown kind
     mapped to delete and merged a destructive null-pk row."""
-    cfg = cdc.CdcTableConfig("t", ["id"], VAL, str(tmp_path / "dst"), n_buckets=0)
+    cfg = cdc.CdcTableConfig("t", ["id"], VAL, str(tmp_path / "dst"), n_buckets=4)
     pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
     pipe.sync_batch(_feed(spark, [
         _row("insert", 1, json.dumps({"id": 1, "v": "a"})),
@@ -98,7 +98,7 @@ def test_message_record_is_inert(spark, tmp_path):
         _row("bogus-kind", 3, json.dumps({"id": 1})),
     ]), 0)
     pipe.normalize_batches(0, 0)
-    table = ParquetTable(spark, cfg.path, ["id"], 0)
+    table = ParquetTable(spark, cfg.path, ["id"], 4)
     rows = [(r["id"], r["v"]) for r in table.read().collect()]
     assert rows == [(1, "a")]  # no null-pk row, no phantom delete
     # counts exclude metadata kinds
