@@ -883,7 +883,7 @@ class CorpusStateView:
 
     def fold(self, pre_image: DataFrame, post_image: DataFrame,
              batch_id: int) -> bool:
-        from peerdb_spark.rollup import is_applied, publish_version, read_pointer
+        from peerdb_spark.rollup import is_applied, publish_epoch, read_pointer
 
         m = read_pointer(self.path)
         if is_applied(m, batch_id):
@@ -909,7 +909,7 @@ class CorpusStateView:
             new_state = cur.join(
                 F.broadcast(touched), self.id_col, "left_anti"
             ).unionByName(feats)
-        publish_version(self.path, m, new_state, batch_id)
+        publish_epoch(self.path, m, new_state, batch_id)
         return True
 
     def accepted(self) -> DataFrame:

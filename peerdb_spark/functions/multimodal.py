@@ -1256,10 +1256,9 @@ def explode_jsonl(
     """Compressed JSONL shards → one row per line: (media_id, line_idx,
     line) — the Pile/RedPajama corpus layout (.jsonl.gz / .jsonl.zst /
     plain). Compression auto-detects per blob by magic: gzip (stdlib,
-    multi-member via zlib unused_data), zstd (the from-scratch RFC 8878
-    decoder incl. Compressed blocks — peerdb_spark/zstd_codec; honest
-    note: pure-Python entropy decode, so .gz is the fast path and .zst
-    correctness-complete), else plain bytes. Parse the JSON downstream
+    multi-member via zlib unused_data), zstd (libzstd through
+    peerdb_spark/codecs, bounded at codecs.MAX_SIZE per blob), else plain
+    bytes. Parse the JSON downstream
     with from_json (JVM-side) — this op only splits lines, keeping the
     UDF boundary minimal."""
     out_schema = T.StructType(
@@ -1273,8 +1272,8 @@ def explode_jsonl(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
 
+        from peerdb_spark import codecs
         from peerdb_spark.functions.warc import split_gzip_members
-        from peerdb_spark.zstd_codec import zstd_decompress
 
         for pdf in batches:
             ids, idxs, lines = [], [], []
@@ -1285,7 +1284,7 @@ def explode_jsonl(
                 if blob[:2] == b"\x1f\x8b":
                     raw = b"".join(split_gzip_members(blob))
                 elif blob[:4] == b"\x28\xb5\x2f\xfd":
-                    raw = zstd_decompress(blob)
+                    raw = codecs.decompress("zstd", blob)
                 else:
                     raw = blob
                 for i, ln in enumerate(raw.split(b"\n")):

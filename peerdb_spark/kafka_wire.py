@@ -17,9 +17,9 @@ Scope (deliberately minimal, documented):
 - Produce v3 (v7 negotiated automatically for zstd batches — KIP-110:
   brokers reject zstd below Produce v7), acks=1, optional record-batch
   compression covering the full
-  franz-go default codec matrix — gzip (stdlib zlib), snappy
-  (snappy_codec.py), lz4 (lz4_codec.py), zstd (zstd_codec.py; spec-minimal
-  Raw/RLE frames, valid for any decoder) — no idempotence/transactions:
+  franz-go default codec matrix — gzip, snappy, lz4 and zstd, through the
+  libz/libsnappy/liblz4/libzstd that pyarrow bundles (codecs.py), as
+  franz-go takes them from libraries — no idempotence/transactions:
   the at-least-once profile the engine's redelivery-tolerant merge expects.
 - One connection per executor partition (`deliver_kafka_wire` uses
   foreachPartition); batching = one record batch per Spark partition chunk.
@@ -48,6 +48,8 @@ from __future__ import annotations
 
 import socket
 import struct
+
+from peerdb_spark import codecs
 
 
 # -- CRC32C (software, slice-by-1 table) -----------------------------------
@@ -136,46 +138,32 @@ def encode_record(offset_delta: int, ts_delta: int, key: bytes | None,
     return enc_varint(len(body)) + bytes(body)
 
 
-# attributes bits 0-2: compression codec (Kafka protocol). gzip is stdlib;
-# snappy is the from-scratch codec in snappy_codec.py (we EMIT raw blocks;
-# decode auto-detects xerial framing, which Java producers still use for
-# v2); lz4 is the from-scratch FRAME codec in lz4_codec.py (v2 uses the
-# real frame format — the broken legacy-HC variant applied only to v0/v1
-# message sets); zstd is the from-scratch spec-minimal RFC 8878 codec in
-# zstd_codec.py (raw/RLE-block frames — valid zstd any decoder reads).
+# attributes bits 0-2: compression codec (Kafka protocol), coded by
+# codecs.py. snappy EMITS raw blocks and decode also unwraps the xerial
+# framing Java producers still use for v2; lz4 is the LZ4 FRAME format (the
+# broken legacy header checksum applied only to v0/v1 message sets). Every
+# decode is bounded at codecs.MAX_SIZE and rejects with ValueError.
 _CODECS = {"none": 0, "gzip": 1, "snappy": 2, "lz4": 3, "zstd": 4}
+_CODEC_NAMES = {v: k for k, v in _CODECS.items()}
 
 
 def encode_record_batch(records: list[tuple],
                         first_timestamp_ms: int = 0,
                         compression: str = "none") -> bytes:
     """records = [(key, value)] or [(key, value, headers)] → one record
-    batch (headers = [(str, bytes|None), ...]). With compression='gzip'
-    the concatenated records section is gzip-deflated (mtime pinned to 0
-    so identical input → identical bytes) and the codec bit set in the
-    batch attributes; the header itself stays uncompressed and the CRC32C
-    covers attributes..compressed-records per the spec."""
+    batch (headers = [(str, bytes|None), ...]). With compression set
+    (gzip / snappy / lz4 / zstd) the concatenated records section is
+    compressed by codecs.compress (gzip pins mtime 0, so identical input →
+    identical bytes) and the codec bit set in the batch attributes; the
+    header itself stays uncompressed and the CRC32C covers
+    attributes..compressed-records per the spec."""
     codec = _CODECS[compression]
     recs = b"".join(
         encode_record(i, 0, r[0], r[1], r[2] if len(r) > 2 else ())
         for i, r in enumerate(records)
     )
-    if codec == 1:
-        import gzip as _gzip
-
-        recs = _gzip.compress(recs, mtime=0)
-    elif codec == 2:
-        from peerdb_spark.snappy_codec import snappy_compress
-
-        recs = snappy_compress(recs)
-    elif codec == 3:
-        from peerdb_spark.lz4_codec import lz4_frame_compress
-
-        recs = lz4_frame_compress(recs)
-    elif codec == 4:
-        from peerdb_spark.zstd_codec import zstd_compress
-
-        recs = zstd_compress(recs)
+    if codec:
+        recs = codecs.compress(compression, recs)
     after_crc = struct.pack(
         ">hiqqqhii",
         codec,                  # attributes: compression codec bits
@@ -216,26 +204,11 @@ def _decode_record_batch(buf: bytes) -> list[tuple]:
     )
     hdr = struct.calcsize(">hiqqqhii")
     codec = attrs & 0x7
-    if codec == 1:
-        import gzip as _gzip
-
-        after = after[:hdr] + _gzip.decompress(after[hdr:])
-    elif codec == 2:
-        # auto-detect framing: Java producers wrap v2 batches in xerial
-        # stream framing; this sink (and franz-go) emit raw blocks
-        from peerdb_spark.snappy_codec import snappy_decompress_auto
-
-        after = after[:hdr] + snappy_decompress_auto(after[hdr:])
-    elif codec == 3:
-        from peerdb_spark.lz4_codec import lz4_frame_decompress
-
-        after = after[:hdr] + lz4_frame_decompress(after[hdr:])
-    elif codec == 4:
-        from peerdb_spark.zstd_codec import zstd_decompress
-
-        after = after[:hdr] + zstd_decompress(after[hdr:])
-    elif codec != 0:
+    if codec not in _CODEC_NAMES:
         raise ValueError(f"unsupported compression codec {codec}")
+    if codec:
+        records = codecs.decompress(_CODEC_NAMES[codec], after[hdr:])
+        after = after[:hdr] + records
     pos = hdr
     out = []
     for _ in range(count):

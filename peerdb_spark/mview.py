@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peerdb_spark.rollup import is_applied, publish_version, read_pointer, read_version
+from peerdb_spark.rollup import (
+    is_applied,
+    publish_epoch,
+    publish_version,
+    read_pointer,
+    read_version,
+)
 
 
 def group_contrib(rows: DataFrame, dims: list[str], value_col: str) -> DataFrame:
@@ -209,7 +215,9 @@ class ViewTable:
     Folds (pre, post) touched-pk images produced by the merge step
     (normalize.merge_into_table(return_images=True)); same versioned-
     pointer crash contract and single-writer assumption as MviewTable.
-    The pointer also records each version's schema, so reads infer none."""
+    The pointer also records each version's schema, so reads infer none.
+    `batch_id` is the normalize epoch, recorded as a watermark
+    (rollup.publish_epoch): a fold at or below it is a no-op."""
 
     def __init__(self, spark, path: str, dims: list[str], value_col: str):
         import os
@@ -243,7 +251,7 @@ class ViewTable:
         new_view = mview_fold(
             self.read(), pre_image, post_image, self.dims, self.value_col
         )
-        publish_version(self.path, m, new_view, batch_id)
+        publish_epoch(self.path, m, new_view, batch_id)
         return True
 
 

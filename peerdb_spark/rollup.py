@@ -179,6 +179,16 @@ def publish_version(table_path: str, m: dict, data: DataFrame | dict[str, DataFr
     retire_snapshot(table_path, nxt)
 
 
+def publish_epoch(table_path: str, m: dict, data: DataFrame, epoch: int) -> None:
+    """publish_version for stores folded once per normalize epoch
+    (mview.ViewTable, corpus.CorpusStateView). Epochs only move forward but
+    need not start at 0 or be contiguous (process_batch callers number from
+    1; a cadence of k folds every k-th id), so the applied set is recorded
+    as one watermark and the pointer never grows."""
+    until = max([m["applied_until"], epoch, *m["applied_extra"]])
+    publish_version(table_path, {**m, "applied_until": until, "applied_extra": []}, data)
+
+
 def retire_snapshot(table_path: str, published_version: int) -> None:
     """Grace-window snapshot retention: when v{n} is published, delete
     v{n-2} and keep v{n-1}. A reader that resolved `_CURRENT` → v{n-1}

@@ -58,6 +58,7 @@ def _ship_package(spark: SparkSession) -> None:
     any module-level function reaching a Python worker (UDF hooks) fails with
     ModuleNotFoundError when the driver wasn't launched from the repo root."""
     try:
+        import atexit
         import tempfile
         import zipfile
 
@@ -65,7 +66,11 @@ def _ship_package(spark: SparkSession) -> None:
         marker = "_peerdb_spark_shipped"
         if spark.conf.get(f"spark.{marker}", None):
             return
-        zpath = os.path.join(tempfile.gettempdir(), "peerdb_spark_pkg.zip")
+        # one zip per session: sessions from other checkouts sharing the
+        # temp dir must not overwrite a zip their executors still fetch
+        fd, zpath = tempfile.mkstemp(prefix="peerdb_spark_pkg-", suffix=".zip")
+        os.close(fd)
+        atexit.register(lambda: os.path.exists(zpath) and os.remove(zpath))
         with zipfile.ZipFile(zpath, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in files:

@@ -196,10 +196,9 @@ def write_kafka_wire(
     back to single-socket before anything is sent; routed=False forces the
     single-socket scope up front. acks=1 at-least-once either way; the
     idempotent merge downstream absorbs redelivery. compression: none /
-    gzip (stdlib) / snappy (from-scratch raw-block codec, snappy_codec.py;
-    decode also unwraps Java's xerial framing) / lz4 (from-scratch frame
-    codec + XXH32, lz4_codec.py) / zstd (from-scratch spec-minimal RFC
-    8878 frames, zstd_codec.py)."""
+    gzip / snappy (raw blocks; decode also unwraps Java's xerial framing) /
+    lz4 (frame format) / zstd, all through the libraries pyarrow bundles
+    (codecs.py)."""
     from peerdb_spark.kafka_wire import (
         deliver_kafka_wire,
         deliver_kafka_wire_routed,

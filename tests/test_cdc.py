@@ -700,3 +700,46 @@ def test_steady_normalize_with_attached_view_job_budget(spark, tmp_path):
         want[r["val"]] = (cnt + 1, s + r["amt"])
     assert {r["val"]: (r["cnt"], r["sum_v"]) for r in view.read().collect()} == want
     assert want == {"a": (9, 162.0), "b": (10, 241.0), "c": (10, 155.0), "d": (1, 0.5)}
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason="ROADMAP item 1")
+def test_view_fold_crash_after_destination_commit_recovers(spark, tmp_path, monkeypatch):
+    """A crash after the destination commit and before the view fold must
+    not lose the batch's view delta: a fresh pipeline's forced normalize of
+    the pending range leaves the view equal to the aggregate over the table.
+    Today the replayed merge reads the already-merged buckets, its pre and
+    post images are equal, and the view stays at the pre-batch state."""
+    from peerdb_spark.mview import ViewTable
+
+    def start():
+        cfg = cdc.CdcTableConfig("t1", ["id"], VAL_SCHEMA, str(tmp_path / "t1"), n_buckets=4)
+        pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
+        view = ViewTable(spark, str(tmp_path / "view"), ["val"], "amt")
+        pipe.attach_view("t1", view)
+        return pipe, view
+
+    pipe, view = start()
+    pipe.process_batch(_changelog(spark, [
+        ("insert", i, "t1", {"id": i, "val": "ab"[i % 2], "amt": float(i)}, None, [])
+        for i in range(1, 7)]), 0)
+    real_fold = ViewTable.fold
+
+    def crash_once(self, *args, **kwargs):
+        monkeypatch.setattr(ViewTable, "fold", real_fold)
+        raise RuntimeError("crash after the destination commit")
+
+    monkeypatch.setattr(ViewTable, "fold", crash_once)
+    with pytest.raises(RuntimeError, match="destination commit"):
+        pipe.process_batch(_changelog(spark, [
+            ("update", 40, "t1", {"id": 3, "val": "a", "amt": 100.0}, None, []),
+            ("insert", 41, "t1", {"id": 50, "val": "b", "amt": 0.5}, None, []),
+        ]), 1)
+
+    pipe, view = start()
+    assert pipe.maybe_normalize(1, force=True) is True
+    want = {}
+    for r in pipe.read_table("t1").collect():
+        cnt, s = want.get(r["val"], (0, 0.0))
+        want[r["val"]] = (cnt + 1, s + r["amt"])
+    assert want == {"a": (4, 112.0), "b": (3, 6.5)}
+    assert {r["val"]: (r["cnt"], r["sum_v"]) for r in view.read().collect()} == want

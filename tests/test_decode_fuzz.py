@@ -15,12 +15,10 @@ import random
 import numpy as np
 import pytest
 
+from peerdb_spark import codecs
 from peerdb_spark import kafka_wire as KW
 from peerdb_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from peerdb_spark.functions.png import decode_png, encode_png
-from peerdb_spark.lz4_codec import lz4_frame_compress, lz4_frame_decompress
-from peerdb_spark.snappy_codec import snappy_compress, snappy_decompress
-from peerdb_spark.zstd_codec import zstd_compress, zstd_decompress
 
 
 def _img():
@@ -103,12 +101,12 @@ _SEEDS = {
         lambda: encode_png(_img().tobytes(), 24, 24, lambda y: y % 5),
     ),
     "snappy": (
-        snappy_decompress,
-        lambda: snappy_compress(b"the quick brown fox " * 50),
+        lambda b: codecs.decompress("snappy", b),
+        lambda: codecs.compress("snappy", b"the quick brown fox " * 50),
     ),
     "lz4_frame": (
-        lz4_frame_decompress,
-        lambda: lz4_frame_compress(b"the quick brown fox " * 50),
+        lambda b: codecs.decompress("lz4", b),
+        lambda: codecs.compress("lz4", b"the quick brown fox " * 50),
     ),
     "mjpeg_container": (
         lambda b: __import__("peerdb_spark.functions.jpeg",
@@ -118,8 +116,8 @@ _SEEDS = {
                       progressive=True),
     ),
     "zstd_frame": (
-        zstd_decompress,
-        lambda: zstd_compress(b"the quick brown fox " * 50 + b"z" * 400),
+        lambda b: codecs.decompress("zstd", b),
+        lambda: codecs.compress("zstd", b"the quick brown fox " * 50 + b"z" * 400),
     ),
     "kafka_record_batch": (
         KW.decode_record_batch,
@@ -257,6 +255,47 @@ def test_mutated_streams_reject_cleanly(name):
         except Exception as e:  # noqa: BLE001 — the assertion target
             escapes.append((trial, type(e).__name__, str(e)[:60]))
     assert not escapes, escapes[:5]
+
+
+_PAYLOAD = b'{"pk": 1, "op": "u"}|' * 12
+# per codec: a frame whose integrity check covers the content (captured
+# from the earlier hand-written encoders where pyarrow's sets none), and a
+# frame that needs a dictionary (None: the format has no dictionaries)
+_CHECKED = {
+    "gzip": ("1f8b0800000000000203ab562ac856b25230d45150ca2f0032944a956a6baa47"
+             "8620009ddbafbdfc000000"),
+    "snappy": ("fc01507b22706b223a20312c20226f70223a202275227d7cfe1500fe5400"
+               "fe93009ad200"),
+    "lz4": ("04224d186440a720000000ff067b22706b223a20312c20226f70223a202275"
+            "227d7c1500cf502275227d7c000000004ca3cc97"),
+    "zstd": ("28b52ffd24fced0000a87b22706b223a20312c20226f70223a202275227d7c"
+             "015412042bc918b5d0ce0d"),
+}
+_DICTIONARY = {
+    "lz4": "04224d18614007000000e30a0000001461050050626364656600000000",
+    "zstd": "28b52ffd210703",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CHECKED))
+def test_codec_reject_contract(name):
+    """Every Kafka codec: empty, truncated, checksum-flipped, dictionary and
+    over-bound input raise ValueError; the checked frame decodes."""
+    frame = bytes.fromhex(_CHECKED[name])
+    assert codecs.decompress(name, frame) == _PAYLOAD
+    if name == "snappy":  # no checksum: the length preamble is the check
+        flipped = frame[:1] + bytes([frame[1] ^ 1]) + frame[2:]
+    else:  # the last byte of the trailing checksum
+        flipped = frame[:-1] + bytes([frame[-1] ^ 1])
+    bad = [b"", flipped] + [frame[:cut] for cut in range(1, len(frame))]
+    if name in _DICTIONARY:
+        bad.append(bytes.fromhex(_DICTIONARY[name]))
+    for data in bad:
+        with pytest.raises(ValueError):
+            codecs.decompress(name, data)
+    with pytest.raises(ValueError, match="size bound"):
+        codecs.decompress(name, frame, max_size=len(_PAYLOAD) - 1)
+    assert codecs.decompress(name, frame, max_size=len(_PAYLOAD)) == _PAYLOAD
 
 
 def _mutations(rng, data):

@@ -89,6 +89,51 @@ def test_record_batch_gzip_roundtrip():
     assert len(a) < len(KW.encode_record_batch(recs)) // 4
 
 
+def test_gzip_literal_frame_and_rejects():
+    """gzip keeps the stdlib encoder (mtime 0): the bytes equal a frame
+    captured from the engine's earlier encoder, which decodes; empty,
+    truncated and CRC-flipped frames raise ValueError."""
+    from peerdb_spark import codecs
+
+    payload = b'{"pk": 1, "op": "u"}|' * 12
+    frame = bytes.fromhex(
+        "1f8b0800000000000203ab562ac856b25230d45150ca2f0032944a956a6baa47"
+        "8620009ddbafbdfc000000")
+    assert codecs.compress("gzip", payload) == frame
+    assert codecs.decompress("gzip", frame) == payload
+    crc_flipped = frame[:-8] + bytes([frame[-8] ^ 1]) + frame[-7:]
+    for bad in (b"", frame[:-3], crc_flipped):
+        with pytest.raises(ValueError):
+            codecs.decompress("gzip", bad)
+
+
+def test_gzip_batch_inflating_past_bound_rejects():
+    """gzip records decode under the same 128 MiB bound as the other
+    codecs: a ~130 kB section holding one record whose value is 128 MiB
+    + 1 KiB of zeros raises ValueError instead of inflating in full."""
+    import zlib
+
+    from peerdb_spark import codecs
+
+    n = codecs.MAX_SIZE + 1024
+    body_head = b"\x00" + KW.enc_varint(0) + KW.enc_varint(0)
+    body_head += KW.enc_varint(1) + b"k" + KW.enc_varint(n)
+    body_len = len(body_head) + n + 1  # + the header count
+    z = zlib.compressobj(9, zlib.DEFLATED, 31)  # gzip wrapper
+    comp = z.compress(KW.enc_varint(body_len) + body_head)
+    chunk = bytes(1 << 20)
+    for _ in range(n >> 20):
+        comp += z.compress(chunk)
+    comp += z.compress(bytes(n & ((1 << 20) - 1)) + KW.enc_varint(0))
+    comp += z.flush()
+    assert len(comp) < 200_000
+    after_crc = struct.pack(">hiqqqhii", 1, 0, 0, 0, -1, -1, -1, 1) + comp
+    tail = struct.pack(">ibI", -1, 2, KW.crc32c(after_crc)) + after_crc
+    batch = struct.pack(">qi", 0, len(tail)) + tail
+    with pytest.raises(ValueError, match="size bound"):
+        KW.decode_record_batch(batch)
+
+
 def test_produce_gzip_end_to_end_stub_broker(broker):
     # the stub decodes with the independent decoder → gzip path exercised
     # over the real socket round-trip
@@ -626,7 +671,7 @@ def test_write_kafka_wire_routed_follows_leadership_move(spark, cluster):
 
 
 def test_produce_snappy_end_to_end_stub_broker(broker):
-    """From-scratch snappy compression over the wire: the stub broker's
+    """snappy compression over the wire: the stub broker's
     independent decoder (decode_record_batch) destuffs codec bits and
     decompresses the records section."""
     import socket
@@ -644,7 +689,7 @@ def test_produce_snappy_end_to_end_stub_broker(broker):
 
 
 def test_produce_lz4_end_to_end_stub_broker(broker):
-    """From-scratch LZ4-frame compression over the wire, decoded by the
+    """LZ4-frame compression over the wire, decoded by the
     stub broker's independent decoder."""
     import socket
 

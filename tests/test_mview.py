@@ -266,6 +266,45 @@ def test_view_table_crash_and_redelivery(spark, tmp_path):
     assert os.path.isdir(str(tmp_path / "v" / "v2"))
 
 
+def test_epoch_pointer_stays_constant_size(spark, tmp_path):
+    """Pipeline-fed stores fold once per normalize epoch, and epochs need
+    not start at 0 nor be contiguous: process_batch callers number batches
+    from 1, and a cadence of k folds every k-th id. ViewTable and
+    CorpusStateView record the epoch as a watermark, so the pointer holds
+    no applied-id list in either case and an older epoch no-ops."""
+    import json
+    import os
+
+    from peerdb_spark.functions.corpus import CorpusStateView
+    from peerdb_spark.mview import ViewTable
+    from peerdb_spark.rollup import publish_epoch, read_pointer
+
+    def pointer(path):
+        with open(os.path.join(path, "_CURRENT")) as fh:
+            return json.load(fh)
+
+    rows = spark.createDataFrame([], "doc_id long, text string, grp string, amt long")
+    for store, ids in (
+        (ViewTable(spark, str(tmp_path / "v"), ["grp"], "amt"), [1, 2]),
+        (CorpusStateView(spark, str(tmp_path / "c")), [3, 6]),
+    ):
+        for epoch in ids:
+            assert store.fold(rows, rows, batch_id=epoch) is True
+            m = pointer(store.path)
+            assert (m["applied_until"], m["applied_extra"]) == (epoch, [])
+        assert store.fold(rows, rows, batch_id=ids[0]) is False
+    # many epochs through the same publish, pointer only ({} writes no part)
+    for name, epochs in (("from1", range(1, 100)), ("every3", range(3, 300, 3))):
+        path = str(tmp_path / name)
+        os.makedirs(path)
+        sizes = []
+        for epoch in epochs:
+            publish_epoch(path, read_pointer(path), {}, epoch)
+            sizes.append(os.path.getsize(os.path.join(path, "_CURRENT")))
+        assert pointer(path)["applied_extra"] == []
+        assert max(sizes) - min(sizes) <= 4  # the digits of version and epoch
+
+
 def test_minmax_refresh_after_extremum_deletion(spark):
     """min/max can't retract algebraically: deleting the current max forces
     a re-scan of the touched group — minmax_refresh does exactly that, and

@@ -231,19 +231,19 @@ def test_webdataset_end_to_end_spark(spark):
 
 def test_explode_jsonl_all_compressions(spark):
     """JSONL shards in all three layouts (.gz multi-member, .zst through
-    the from-scratch decoder, plain) split to identical rows, and
-    from_json parses them JVM-side."""
+    libzstd, plain) split to identical rows, and from_json parses them
+    JVM-side."""
     import zlib
 
     from pyspark.sql import functions as F
 
+    from peerdb_spark import codecs
     from peerdb_spark.functions.multimodal import explode_jsonl
-    from peerdb_spark.zstd_codec import zstd_compress
 
     lines = [b'{"text": "doc %d", "score": %d}' % (i, i * 7) for i in range(5)]
     raw = b"\n".join(lines) + b"\n"
     gz = zlib.compress(raw[:30], 6, 31) + zlib.compress(raw[30:], 6, 31)
-    zst = zstd_compress(raw)
+    zst = codecs.compress("zstd", raw)
     df = spark.createDataFrame(
         [(0, raw), (1, gz), (2, zst)], "media_id long, content binary")
     out = explode_jsonl(df)

@@ -1,16 +1,26 @@
-"""From-scratch raw-block snappy codec (peerdb_spark/snappy_codec.py).
+"""Raw-block snappy through libsnappy (peerdb_spark/codecs.py).
 
-No snappy library exists in this environment, so correctness is pinned by
-(1) hand-built spec vectors (element grammar worked out on paper from
-format_description.txt), (2) roundtrip properties over adversarial and
-random inputs, and (3) a decompressor that accepts the FULL grammar —
-including element types our compressor never emits — verified against
-hand-encoded streams.
+Pinned by hand-built spec vectors (element grammar worked out on paper from
+format_description.txt, including element types libsnappy never emits),
+roundtrip properties over adversarial and random inputs, a literal block
+and a xerial-framed Java-producer batch, and the ValueError reject contract.
 """
+
+import struct
 
 import pytest
 
-from peerdb_spark.snappy_codec import snappy_compress, snappy_decompress
+from peerdb_spark import codecs
+from peerdb_spark import kafka_wire as KW
+from peerdb_spark.codecs import XERIAL_MAGIC
+
+
+def snappy_compress(data):
+    return codecs.compress("snappy", data)
+
+
+def snappy_decompress(data, **kw):
+    return codecs.decompress("snappy", data, **kw)
 
 
 def test_empty_and_tiny():
@@ -30,8 +40,6 @@ def test_overlapping_copy_hand_vector():
     # (overlapping copy — the spec's run-length idiom)
     enc = b"\x0c" + b"\x08abc" + bytes([((9 - 1) << 2) | 2, 3, 0])
     assert snappy_decompress(enc) == b"abcabcabcabc"
-    # and our compressor produces exactly this shape
-    assert snappy_compress(b"abcabcabcabc") == enc
 
 
 def test_copy1_and_copy4_hand_vectors():
@@ -46,10 +54,12 @@ def test_copy1_and_copy4_hand_vectors():
 
 def test_long_literal_length_encoding():
     # length-1 >= 60 → length bytes follow the tag
-    data = bytes(range(256)) * 2  # 512 incompressible-ish bytes, no 4-gram repeats... (256-periodic: repeats at offset 256!)
     data = bytes(i % 251 for i in range(300))  # prime period > window match len
     out = snappy_decompress(snappy_compress(data))
     assert out == data
+    # hand vector: tag 60<<2 → one length byte follows (length-1 = 99)
+    lits = bytes(range(100))
+    assert snappy_decompress(b"\x64" + bytes([60 << 2, 99]) + lits) == lits
 
 
 def test_roundtrip_adversarial_patterns():
@@ -80,21 +90,35 @@ def test_roundtrip_hypothesis_random():
 
 
 def test_decompress_rejects_corruption():
-    good = snappy_compress(b"abcabcabcabc")
-    with pytest.raises(ValueError, match="truncated|declared"):
+    good = b"\x0c" + b"\x08abc" + bytes([((9 - 1) << 2) | 2, 3, 0])
+    with pytest.raises(ValueError, match="[Cc]orrupt"):
         snappy_decompress(good[:-1])  # truncated copy/short output
     with pytest.raises(ValueError):
         snappy_decompress(b"\x05\x08abc")  # declared 5, decodes 3
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(ValueError, match="[Cc]orrupt"):
         # copy back past the start of output
         snappy_decompress(b"\x04" + bytes([((4 - 1) << 2) | 2, 9, 0]))
     with pytest.raises(ValueError, match="truncated"):
         snappy_decompress(b"")
+    with pytest.raises(ValueError, match="truncated"):
+        snappy_decompress(b"\xff\xff")  # preamble never terminates
+    # the declared size is checked against the bound before any decode
+    with pytest.raises(ValueError, match="size bound"):
+        snappy_decompress(snappy_compress(b"x" * 1000), max_size=999)
+    with pytest.raises(ValueError, match="size bound"):
+        snappy_decompress(b"\xff\xff\xff\xff\x0f")  # declares 4 GiB
+
+
+def test_literal_block_from_earlier_encoder():
+    """A raw block captured from the engine's earlier hand-written encoder
+    (2-byte-offset copies only) decodes to the same bytes."""
+    block = bytes.fromhex(
+        "fc01507b22706b223a20312c20226f70223a202275227d7cfe1500fe5400fe93"
+        "009ad200")
+    assert snappy_decompress(block) == b'{"pk": 1, "op": "u"}|' * 12
 
 
 def test_kafka_record_batch_snappy_roundtrip():
-    from peerdb_spark import kafka_wire as KW
-
     recs = [(b"k%d" % i, b'{"v":%d,"pad":"' % i + b"x" * 200 + b'"}')
             for i in range(50)]
     batch = KW.encode_record_batch(recs, compression="snappy")
@@ -108,14 +132,6 @@ def test_xerial_framing_unwrap():
     """Java Kafka producers wrap v2 record batches in xerial stream framing
     (\\x82SNAPPY\\x00 magic, BE version fields, BE-length-prefixed raw
     blocks); the decode path must auto-detect and unwrap it."""
-    import struct
-
-    from peerdb_spark.snappy_codec import (
-        XERIAL_MAGIC,
-        snappy_decompress_auto,
-        xerial_decompress,
-    )
-
     payload = b"the quick brown fox " * 500
     # frame it the way snappy-java does: two blocks
     half = len(payload) // 2
@@ -123,26 +139,22 @@ def test_xerial_framing_unwrap():
     for part in (payload[:half], payload[half:]):
         blk = snappy_compress(part)
         frame += struct.pack(">i", len(blk)) + blk
-    assert xerial_decompress(frame) == payload
     # auto-detect picks the right framing for both producers
-    assert snappy_decompress_auto(frame) == payload
-    assert snappy_decompress_auto(snappy_compress(payload)) == payload
-    # strict rejects
-    with pytest.raises(ValueError, match="magic"):
-        xerial_decompress(b"not a frame")
+    assert snappy_decompress(frame) == payload
+    assert snappy_decompress(snappy_compress(payload)) == payload
+    # strict rejects; the bound covers the whole stream, not each block
     with pytest.raises(ValueError, match="truncated"):
-        xerial_decompress(frame[:-3])
+        snappy_decompress(frame[:-3])
+    with pytest.raises(ValueError, match="truncated header"):
+        snappy_decompress(XERIAL_MAGIC + b"\x00\x00")
+    with pytest.raises(ValueError, match="size bound"):
+        snappy_decompress(frame, max_size=len(payload) - 1)
 
 
 def test_kafka_decodes_java_producer_snappy_batch():
     """A v2 record batch whose records section was compressed by a Java
     client (xerial framing) must decode — rebuild one by re-framing the
     records section of our own batch and recomputing the CRC."""
-    import struct
-
-    from peerdb_spark import kafka_wire as KW
-    from peerdb_spark.snappy_codec import XERIAL_MAGIC
-
     recs = [(b"k%d" % i, b"v" * 100) for i in range(20)]
     plain = KW.encode_record_batch(recs, compression="none")
     hdr_len = struct.calcsize(">hiqqqhii")
@@ -157,3 +169,11 @@ def test_kafka_decodes_java_producer_snappy_batch():
     tail = struct.pack(">ibI", -1, 2, crc) + new_after
     batch = struct.pack(">qi", 0, len(tail)) + tail
     assert [(k, v) for k, v, _h in KW.decode_record_batch(batch)] == recs
+    # the same shape as literal bytes, captured from the earlier encoder
+    batch = bytes.fromhex(
+        "000000000000000000000067ffffffff0297b2af4300020000000200000000"
+        "000000000000000000000000ffffffffffffffffffffffffffff0000000382"
+        "534e415050590000000001000000010000002275204c000000046b303c7672"
+        "01001c004c000002046b318a27000c04046b327e2700")
+    assert KW.decode_record_batch(batch) == [
+        (b"k%d" % i, b"v" * 30, []) for i in range(3)]

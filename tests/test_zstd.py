@@ -1,67 +1,65 @@
-"""Zstd frame codec + XXH64 (peerdb_spark/zstd_codec.py).
+"""Zstd frames through libzstd (peerdb_spark/codecs.py).
 
-Correctness is pinned by the XXH64 spec check value, a cross-check against
-Spark SQL's xxhash64 (an independent JVM implementation of the same
-published spec), hand-built frame vectors, roundtrip properties over
+Pinned by the XXH64 spec check value (as the frame content checksum
+libzstd verifies), hand-built frame vectors, roundtrip properties over
 adversarial inputs, and strict-reject corruption tests — the same battery
-as test_lz4.py. Compressed-block (FSE/Huffman) decoding is pinned against
-pyarrow's bundled libzstd in test_zstd_entropy.py.
+as test_lz4.py. libzstd's own Compressed-block frames and the size bound
+are covered in test_zstd_entropy.py.
 """
 
 import struct
 
 import pytest
 
-from peerdb_spark.zstd_codec import xxh64, zstd_compress, zstd_decompress
+from peerdb_spark import codecs
 
 _MAGIC = struct.pack("<I", 0xFD2FB528)
+_ABC_CHECKSUM = struct.pack("<I", 0xAD770999)  # low 32 bits of XXH64("abc")
+
+
+def zstd_compress(data):
+    return codecs.compress("zstd", data)
+
+
+def zstd_decompress(data, **kw):
+    return codecs.decompress("zstd", data, **kw)
+
+
+def _block_header(size, btype, last=True):
+    return ((size << 3) | (btype << 1) | int(last)).to_bytes(3, "little")
 
 
 def test_xxh64_spec_check_value():
-    # the published xxHash spec check value for the empty input, seed 0
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    # seed participates
-    assert xxh64(b"abc", seed=1) != xxh64(b"abc")
-    # all the size classes: <4, 4-7, 8-31, exactly 32, >32 with tail
-    for blob in (b"x", b"four", b"0123456789abcdef",
-                 b"0123456789abcdef" * 2, b"0123456789abcdefg" * 9):
-        assert 0 <= xxh64(blob) <= (1 << 64) - 1
-
-
-def test_xxh64_matches_spark_jvm(spark):
-    """Spark SQL's xxhash64 hashes a binary column's raw bytes with seed 42
-    — an independent JVM implementation of the same public spec."""
-    import random
-
-    import pyspark.sql.functions as F
-
-    rng = random.Random(7)
-    blobs = [b"", b"a", b"abc" * 100, bytes(range(256)),
-             bytes(rng.randrange(256) for _ in range(5000))]
-    df = spark.createDataFrame(
-        [(i, bytearray(b)) for i, b in enumerate(blobs)], "i int, b binary"
-    )
-    for r in df.select("i", F.xxhash64("b").alias("h")).collect():
-        assert r["h"] & (1 << 64) - 1 == xxh64(blobs[r["i"]], seed=42)
+    # the published xxHash spec check value for the empty input, seed 0:
+    # 0xEF46DB3751D8E999, whose low 32 bits are the frame checksum
+    empty = _MAGIC + bytes([0x24, 0]) + _block_header(0, 0)
+    assert zstd_decompress(empty + struct.pack("<I", 0x51D8E999)) == b""
+    with pytest.raises(ValueError, match="checksum"):
+        zstd_decompress(empty + struct.pack("<I", 0x51D8E998))
+    abc = _MAGIC + bytes([0x24, 3]) + _block_header(3, 0) + b"abc"
+    assert zstd_decompress(abc + _ABC_CHECKSUM) == b"abc"
+    with pytest.raises(ValueError, match="checksum"):
+        zstd_decompress(abc + struct.pack("<I", 0xAD770998))
 
 
 def test_frame_hand_vectors():
     # single raw block "abc": FHD single-segment+checksum, FCS 1 byte
-    enc = zstd_compress(b"abc")
-    assert enc[:4] == _MAGIC
-    fhd = enc[4]
-    assert fhd >> 6 == 0 and fhd & (1 << 5) and fhd & (1 << 2)
-    assert enc[5] == 3  # FCS = 3
-    hdr = int.from_bytes(enc[6:9], "little")
-    assert hdr & 1 == 1            # last block
-    assert (hdr >> 1) & 3 == 0     # raw
-    assert hdr >> 3 == 3
-    assert enc[9:12] == b"abc"
+    enc = _MAGIC + bytes([0x24, 3]) + _block_header(3, 0) + b"abc"
+    assert zstd_decompress(enc + _ABC_CHECKSUM) == b"abc"
+    # one RLE block regenerates 100 000 bytes from one content byte
+    # (FHD: 4-byte FCS, single segment, no checksum)
+    enc = (_MAGIC + bytes([0xA0]) + struct.pack("<I", 100_000)
+           + _block_header(100_000, 1) + b"\x00")
+    assert zstd_decompress(enc) == b"\x00" * 100_000
+    # raw / RLE / raw blocks in one frame
+    enc = (_MAGIC + bytes([0x20, 12]) + _block_header(4, 0, False) + b"head"
+           + _block_header(4, 1, False) + b"z" + _block_header(4, 0) + b"tail")
+    assert zstd_decompress(enc) == b"headzzzztail"
     # an RLE run compresses to a constant-size frame
     enc = zstd_compress(b"\x00" * 100_000)
+    assert enc[:4] == _MAGIC
     assert len(enc) < 32
     assert zstd_decompress(enc) == b"\x00" * 100_000
-    # mixed runs: raw / rle / raw block split
     data = b"head" + b"z" * 500 + b"tail"
     assert zstd_decompress(zstd_compress(data)) == data
 
@@ -74,7 +72,7 @@ def test_frame_roundtrip_adversarial():
         b"",
         b"a",
         b"\x00" * 200_000,                       # multi-block RLE
-        bytes(range(256)) * 700,                 # > 128 KiB, incompressible
+        bytes(range(256)) * 700,                 # > 128 KiB
         b"the quick brown fox " * 9000,
         bytes(rng.randrange(256) for _ in range(100_000)),
         bytes(rng.randrange(2) for _ in range(131_073)),  # block boundary
@@ -101,50 +99,52 @@ def test_frame_roundtrip_hypothesis():
 
 
 def test_frame_rejects_corruption():
-    good = zstd_compress(b"abcabcabcabc" * 10)
+    good = _MAGIC + bytes([0x24, 3]) + _block_header(3, 0) + b"abc"
+    good += _ABC_CHECKSUM
     # flip a content byte → checksum mismatch
     bad = bytearray(good)
     bad[-6] ^= 0x01
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="checksum"):
         zstd_decompress(bytes(bad))
-    with pytest.raises(ValueError, match="magic"):
+    with pytest.raises(ValueError, match="Unknown frame descriptor"):
         zstd_decompress(b"\x00" * 16)
-    with pytest.raises(ValueError, match="truncated"):
+    with pytest.raises(ValueError, match="Truncated"):
         zstd_decompress(good[:6])
+    with pytest.raises(ValueError, match="empty"):
+        zstd_decompress(b"")
     # reserved FHD bit
     bad = bytearray(good)
     bad[4] |= 1 << 3
-    with pytest.raises(ValueError, match="reserved FHD"):
+    with pytest.raises(ValueError, match="Unsupported frame parameter"):
         zstd_decompress(bytes(bad))
     # FCS mismatch: declare 5 bytes, deliver 3
-    hdr = (3 << 3) | (0 << 1) | 1  # last | raw | size 3
-    frame = _MAGIC + bytes([0x24, 5]) + hdr.to_bytes(3, "little") + b"abc"
-    frame += struct.pack("<I", xxh64(b"abc") & 0xFFFFFFFF)
-    with pytest.raises(ValueError, match="declared"):
-        zstd_decompress(frame)
+    frame = _MAGIC + bytes([0x24, 5]) + _block_header(3, 0) + b"abc"
+    with pytest.raises(ValueError, match="corruption"):
+        zstd_decompress(frame + _ABC_CHECKSUM)
 
 
 def test_frame_rejects_out_of_scope():
-    # Compressed block type now DECODES (round 9, zstd_entropy); garbage
-    # entropy payload must reject as corruption, not crash or emit bytes
-    hdr = (3 << 3) | (2 << 1) | 1
-    frame = _MAGIC + bytes([0x20, 3]) + hdr.to_bytes(3, "little") + b"abc"
+    # a garbage entropy payload in a Compressed block rejects as
+    # corruption, never crashes or emits bytes
+    frame = _MAGIC + bytes([0x20, 3]) + _block_header(3, 2) + b"abc"
     with pytest.raises(ValueError):
         zstd_decompress(frame)
     # reserved block type
-    hdr = (3 << 3) | (3 << 1) | 1
-    frame = _MAGIC + bytes([0x20, 3]) + hdr.to_bytes(3, "little") + b"abc"
-    with pytest.raises(ValueError, match="reserved block type"):
+    frame = _MAGIC + bytes([0x20, 3]) + _block_header(3, 3) + b"abc"
+    with pytest.raises(ValueError, match="corruption"):
         zstd_decompress(frame)
     # dictionary frames are out of scope (FHD dict-id flag, nonzero id)
     frame = _MAGIC + bytes([0x21, 7, 3]) + b""
-    with pytest.raises(ValueError, match="dictionary"):
+    with pytest.raises(ValueError, match="Dictionary"):
         zstd_decompress(frame)
     # a block larger than the declared single-segment window rejects
-    hdr = (100 << 3) | (0 << 1) | 1
-    frame = _MAGIC + bytes([0x20, 3]) + hdr.to_bytes(3, "little") + b"x" * 100
-    with pytest.raises(ValueError, match="exceeds maximum"):
+    frame = _MAGIC + bytes([0x20, 3]) + _block_header(100, 0) + b"x" * 100
+    with pytest.raises(ValueError, match="corruption"):
         zstd_decompress(frame)
+    # a window past libzstd's 128 MiB decode limit rejects before decoding
+    frame = _MAGIC + bytes([0x00, (31 - 10) << 3]) + _block_header(3, 0)
+    with pytest.raises(ValueError, match="too much memory"):
+        zstd_decompress(frame + b"abc")
 
 
 def test_kafka_record_batch_zstd_roundtrip():
@@ -156,6 +156,5 @@ def test_kafka_record_batch_zstd_roundtrip():
     plain = KW.encode_record_batch(recs, compression="none")
     attrs = int.from_bytes(batch[21:23], "big")
     assert attrs & 0x7 == 4
-    # Raw/RLE frames don't shrink JSON much, but the long z-runs do RLE
     assert len(batch) < len(plain)
     assert [(k, v) for k, v, _h in KW.decode_record_batch(batch)] == recs
