@@ -250,11 +250,7 @@ def test_encoder_hypothesis_roundtrip():
 
 def test_encoder_lz_sequences_roundtrip_and_interop():
     """Encode direction with LZ matches and sequences: every frame decodes
-    both ways, repetitive payloads compress hard, and on semi-structured
-    JSON the sink stays within 1.25x of libzstd level 3 (the ratio bar the
-    hand-written encoder was held to)."""
-    import json
-
+    both ways and repetitive payloads compress hard."""
     rng = random.Random(31)
     c = pa.Codec("zstd")
     cases = {
@@ -279,7 +275,15 @@ def test_encoder_lz_sequences_roundtrip_and_interop():
     ours = len(zstd_compress(cases["semi"]))
     ref = len(c.compress(cases["semi"], asbytes=True))
     assert ours < 3 * ref, (ours, ref)
-    # the ratio bar, on event records
+
+
+def test_encode_ratio_bar_and_matcher_regimes():
+    """The ratio bar the engine's encoder is held to: on semi-structured
+    event JSON and on phase-locked fixed-stride record data the sink stays
+    within 1.25x of libzstd level 3, and every frame decodes through both
+    the bounded stream and the one-shot API."""
+    import json
+
     rng = random.Random(42)
     recs = [json.dumps({
         "id": i, "user": f"user_{rng.randrange(5000)}",
@@ -290,9 +294,15 @@ def test_encoder_lz_sequences_roundtrip_and_interop():
                   "score": round(rng.random(), 4)},
     }) for i in range(400)]
     semi = ("\n".join(recs)).encode()
+    stride = b"".join(
+        bytes([i % 7, (i * 3) % 11, 0, 0, i % 256,
+               1, 2, 3, 4, 5, 6, 7, 8, 9, 10, i % 2]) for i in range(8000))
     level3 = pa.Codec("zstd", compression_level=3)
-    assert zstd_decompress(zstd_compress(semi)) == semi
-    assert len(zstd_compress(semi)) <= 1.25 * level3.compress(semi).size
+    for data in (semi, stride):
+        ours = zstd_compress(data)
+        assert zstd_decompress(ours) == data
+        assert bytes(level3.decompress(ours, len(data))) == data
+        assert len(ours) <= 1.25 * level3.compress(data).size, len(data)
 
 
 def test_encoder_lz_block_unit():
