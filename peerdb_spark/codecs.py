@@ -1,20 +1,20 @@
 """Kafka record-batch codecs over the libraries pyarrow bundles.
 
 Record batch v2 compresses its records section with gzip, snappy (a raw
-block), lz4 (the LZ4 frame format) or zstd (a zstd frame). pyarrow ships
-libz, libsnappy, liblz4 and libzstd, so this module only adapts them to the
-engine's decoder contract, the one the reference gets from franz-go
-(flow/connectors/kafka/kafka.go):
+block), lz4 (an LZ4 frame) or zstd (a zstd frame); pyarrow ships libz,
+libsnappy, liblz4 and libzstd. This module adapts them to the decoder
+contract the reference gets from franz-go (flow/connectors/kafka/kafka.go):
 
-- every malformed, truncated, empty, checksum-failing or dictionary frame
-  raises ValueError — pyarrow's OSError / ArrowException never escape;
-- output is bounded: a frame that inflates past `max_size` raises
-  ValueError. Kafka batches do not carry the decompressed size, so gzip,
-  lz4 and zstd decode as streams read to `max_size + 1`; a snappy block's
-  uvarint preamble is checked against the bound before any buffer is sized;
-- snappy also accepts the xerial stream framing Java producers still wrap
-  v2 batches in ("\\x82SNAPPY\\x00", two BE int32 versions, then
-  BE-int32-length-prefixed raw blocks).
+- malformed, truncated, empty, checksum-failing and dictionary frames raise
+  ValueError; pyarrow's OSError / ArrowException never escape;
+- output past `max_size` raises ValueError. Batches do not carry the
+  decoded size, so gzip, lz4 and zstd decode as streams read in 1 MiB
+  steps; a snappy block's uvarint preamble is checked before any buffer;
+- lz4 frames use independent 64 KiB blocks (FLG bit 5), as librdkafka
+  does: Kafka's Java reader decodes each block alone, and liblz4's one-shot
+  frame encoder links blocks once input passes 64 KiB;
+- snappy also accepts the xerial framing Java producers wrap batches in
+  ("\\x82SNAPPY\\x00", two BE int32 versions, BE-int32-prefixed blocks).
 
 gzip encodes with the stdlib and mtime 0, so equal input gives equal bytes.
 """
@@ -27,12 +27,17 @@ import pyarrow as pa
 
 MAX_SIZE = 1 << 27  # 128 MiB per decoded records section
 XERIAL_MAGIC = b"\x82SNAPPY\x00"
+# magic, FLG (v01, independent blocks), BD (64 KiB blocks), header checksum
+LZ4_HEADER = b"\x04\x22\x4d\x18\x60\x40\x82"
+LZ4_BLOCK = 1 << 16
 
 
 def compress(name: str, data: bytes) -> bytes:
     """`name` is one of gzip / snappy / lz4 / zstd (Kafka's codec names)."""
     if name == "gzip":
         return gzip.compress(data, mtime=0)
+    if name == "lz4":
+        return _lz4_frame(data)
     return pa.Codec(name).compress(data, asbytes=True)
 
 
@@ -46,12 +51,31 @@ def decompress(name: str, data: bytes, max_size: int = MAX_SIZE) -> bytes:
         if not data:
             raise ValueError(f"{name}: empty frame")
         stream = pa.CompressedInputStream(pa.BufferReader(data), name)
-        out = stream.read(max_size + 1)
+        parts, n = [], 0
+        while n <= max_size:  # bounded reads: never size a max_size buffer
+            part = stream.read(1 << 20)
+            if not part:
+                break
+            parts.append(part)
+            n += len(part)
+        out = b"".join(parts)
     except (OSError, pa.ArrowException) as e:
         raise ValueError(f"{name}: {e}") from e
     if len(out) > max_size:
         raise ValueError(f"{name}: output exceeds size bound {max_size}")
     return out
+
+
+def _lz4_frame(data: bytes) -> bytes:
+    raw, out = pa.Codec("lz4_raw"), bytearray(LZ4_HEADER)
+    for i in range(0, len(data), LZ4_BLOCK):
+        chunk = data[i : i + LZ4_BLOCK]
+        blk = raw.compress(chunk, asbytes=True)
+        if len(blk) >= len(chunk):  # stored block: high bit of the size
+            out += (len(chunk) | 1 << 31).to_bytes(4, "little") + chunk
+        else:
+            out += len(blk).to_bytes(4, "little") + blk
+    return bytes(out + b"\0\0\0\0")  # EndMark
 
 
 def _snappy_block(data: bytes, max_size: int) -> bytes:

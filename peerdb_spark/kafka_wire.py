@@ -140,8 +140,9 @@ def encode_record(offset_delta: int, ts_delta: int, key: bytes | None,
 
 # attributes bits 0-2: compression codec (Kafka protocol), coded by
 # codecs.py. snappy EMITS raw blocks and decode also unwraps the xerial
-# framing Java producers still use for v2; lz4 is the LZ4 FRAME format (the
-# broken legacy header checksum applied only to v0/v1 message sets). Every
+# framing Java producers still use for v2; lz4 is the LZ4 FRAME format with
+# independent blocks, which Java's reader needs (the broken legacy header
+# checksum applied only to v0/v1 message sets). Every
 # decode is bounded at codecs.MAX_SIZE and rejects with ValueError.
 _CODECS = {"none": 0, "gzip": 1, "snappy": 2, "lz4": 3, "zstd": 4}
 _CODEC_NAMES = {v: k for k, v in _CODECS.items()}

@@ -197,7 +197,7 @@ def write_kafka_wire(
     single-socket scope up front. acks=1 at-least-once either way; the
     idempotent merge downstream absorbs redelivery. compression: none /
     gzip / snappy (raw blocks; decode also unwraps Java's xerial framing) /
-    lz4 (frame format) / zstd, all through the libraries pyarrow bundles
+    lz4 (frame format, independent blocks) / zstd, all through the libraries pyarrow bundles
     (codecs.py)."""
     from peerdb_spark.kafka_wire import (
         deliver_kafka_wire,

@@ -89,11 +89,14 @@ def test_block_hand_vectors():
 
 
 def test_block_rejects():
-    with pytest.raises(ValueError):
+    # each block is wrapped in a well-formed frame, so the rejection comes
+    # from liblz4's block decoder, not from the framing
+    assert lz4_block_decompress(b"\x30abc") == b"abc"
+    with pytest.raises(ValueError, match="decompressionFailed"):
         lz4_block_decompress(b"\x14a" + b"\x05\x00" + b"\x50bcdef")  # past start
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="decompressionFailed"):
         lz4_block_decompress(b"\x40abc")  # fewer literals than declared
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="decompressionFailed"):
         lz4_block_decompress(b"\x44abcd" + b"\x04")  # half an offset
 
 
@@ -134,6 +137,35 @@ def test_compressor_end_of_block_rules():
     assert out_len == len(data)
     assert last_match_start <= len(data) - 12
     assert pos == n
+
+
+def test_multi_block_frame_has_independent_blocks():
+    """Kafka's Java LZ4 reader decodes each block with no prefix from the
+    one before, so a frame over many 64 KiB blocks must declare independent
+    blocks (FLG bit 5) and every block must decode on its own."""
+    import pyarrow as pa
+
+    data = b"".join(b'{"pk": %d, "op": "u", "v": "%s"}|' % (i, b"z" * (i % 40))
+                    for i in range(8000))
+    assert len(data) >= 200 * 1024
+    frame = lz4_frame_compress(data)
+    assert frame[:4] == _MAGIC and frame[4] & 0x20
+    raw, pos, out, compressed = pa.Codec("lz4_raw"), 7, b"", 0
+    while True:
+        (size,) = struct.unpack_from("<I", frame, pos)
+        pos += 4
+        if size == 0:
+            break
+        blk = frame[pos : pos + (size & 0x7FFFFFFF)]
+        pos += len(blk)
+        if size & 0x80000000:
+            out += blk
+            continue
+        want = min(65536, len(data) - len(out))
+        out += raw.decompress(blk, decompressed_size=want, asbytes=True)
+        compressed += 1
+    assert pos == len(frame) and out == data and compressed >= 4
+    assert len(frame) < len(data) // 2
 
 
 def test_frame_roundtrip_adversarial():
