@@ -17,22 +17,32 @@ Reference behavior (studied, not copied):
   destinations; invalid input → NULL like the reference's conversion-failure
   nulling).
 - geometry hex-WKB → coordinates (flow/shared/datatypes/geo.go GeoValidate:
-  hex → WKB → validate → WKT, SRID-prefixed). Points, LINESTRINGs, and
-  POLYGONs all decode in PURE Spark expressions — the IEEE-754 bit decode
-  is exact integer/power-of-two arithmetic, reproducible bit-for-bit in
-  any engine; variable-length layouts use dynamic-offset substr +
-  transform, and the polygon's data-dependent ring offsets are one
-  aggregate fold; MULTI* kinds decompose into complete nested blobs (one
-  length-computing fold + substr slices) that the single-geometry decoders
-  re-parse. wkb_geometry_wkt renders the geo.go WKT surface (SRID=n;
-  prefix) for all seven kinds, incl. GEOMETRYCOLLECTION of simple members
-  (only collections nesting MULTI*/collections stay NULL — documented).
+  hex → WKB → validate → WKT, SRID-prefixed). All seven kinds decode in
+  PURE Spark expressions — the IEEE-754 bit decode is exact
+  integer/power-of-two arithmetic, reproducible bit-for-bit in any engine;
+  variable-length layouts use dynamic-offset substr + transform, and the
+  polygon's data-dependent ring offsets are one aggregate fold; MULTI*
+  kinds decompose into complete nested blobs (one length-computing fold +
+  substr slices) that the single-geometry decoders re-parse.
+  wkb_geometry_wkt renders the geo.go WKT surface (SRID=n; prefix) for all
+  seven kinds, incl. GEOMETRYCOLLECTION of simple members (only
+  collections nesting MULTI*/collections stay NULL — documented).
 
 Everything is JVM built-in expressions — no Python UDFs — so the parsers
 whole-stage-codegen and run at scan throughput at 100 TB.
+
+The geometry decoders are built as SQL TEXT, one string per output column,
+and parsed by one F.expr: building the same tree node by node through the
+Column API costs one py4j round trip per expression node — seconds per
+decoder (4.5 s per q_exotic_types invocation when it did), against
+milliseconds for one parse. `let()` binds shared subterms so each appears
+once in the plan (fresh lambda-variable names from a module counter, so
+nesting never shadows).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -193,693 +203,641 @@ def valid_macaddr(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# hex-WKB point
+# hex-WKB geometry
 # ---------------------------------------------------------------------------
+#
+# The reference converts EVERY geometry kind via WKB→validate→WKT
+# (flow/shared/datatypes/geo.go GeoValidate, used from
+# flow/connectors/postgres/qvalue_convert.go:725-731). Each decoder is a
+# builder of SQL text (`*_sql`, taking a column name or SQL expression);
+# the public functions parse it with one F.expr (see the module doc).
+#
+# Variable-length layouts decode with pure expressions: dynamic offsets
+# via substr(h, pos, len), per-point decode via transform over an index
+# sequence, and the polygon's ring-by-ring offsets via ONE aggregate fold
+# (each ring's start depends on every prior ring's point count). MULTI*
+# and GEOMETRYCOLLECTION bodies are a count followed by COMPLETE nested
+# WKB blobs (each with its own byte-order + type header): one fold walks
+# them computing each blob's hex LENGTH (points are fixed-size,
+# linestrings read their point count, polygons run an inner ring-length
+# fold) and slices it out, then the single-geometry builders re-parse
+# each slice via transform. Validity is strict — wrong type, wrong total
+# length, non-hex, NaN/Inf coordinate, nested blobs of the wrong kind or
+# that do not tile the buffer exactly → NULL geometry, mirroring
+# GeoValidate's reject-don't-guess behavior.
+
+_ctr = itertools.count()
+
+
+def fresh(prefix: str = "v") -> str:
+    """A lambda-variable name no other builder call returns, so nested
+    lambdas never shadow one another."""
+    return f"_{prefix}{next(_ctr)}"
+
+
+def let(bindings: dict[str, str], body) -> str:
+    """Single-evaluation let-binding: wrap the bindings in a one-element
+    array<struct> and reference them through a higher-order-function lambda
+    variable, then get(..., 0) unwraps. Each binding's expression appears
+    ONCE in the plan no matter how many times `body` uses it — plain reuse
+    inlines, and the decoders nest deep enough that inlining stacks
+    multiplicatively (the linestring plan measured 272 KB / ~8 s of
+    analysis without it, ~2 KB with). A let under a CASE branch is only
+    evaluated when the branch is taken."""
+    var = fresh("l")
+    fields = ", ".join(f"'{k}', ({e})" for k, e in bindings.items())
+    refs = [f"{var}.{k}" for k in bindings]
+    return f"get(transform(array(named_struct({fields})), {var} -> ({body(*refs)})), 0)"
+
+
+def rev_pairs(col: str, n_bytes: int, start: int) -> str:
+    """Reverse the byte order of an n-byte hex slice starting at 1-based
+    `start` (little-endian → big-endian hex)."""
+    parts = [f"substring({col}, {start + 2 * i}, 2)"
+             for i in range(n_bytes - 1, -1, -1)]
+    return "concat(" + ", ".join(parts) + ")"
+
+
+def hex_slice(col: str, le: str, start: int, n_bytes: int) -> str:
+    return (f"CASE WHEN {le} THEN {rev_pairs(col, n_bytes, start)} "
+            f"ELSE substring({col}, {start}, {2 * n_bytes}) END")
+
+
+def rev_pairs_dyn(col: str, n_bytes: int, start: str) -> str:
+    parts = [f"substr({col}, ({start}) + {2 * i}, 2)"
+             for i in range(n_bytes - 1, -1, -1)]
+    return "concat(" + ", ".join(parts) + ")"
+
+
+def hex_slice_dyn(col: str, le: str, start: str, n_bytes: int) -> str:
+    return let(
+        {"st": start},
+        lambda st: (f"CASE WHEN {le} THEN {rev_pairs_dyn(col, n_bytes, st)} "
+                    f"ELSE substr({col}, {st}, {2 * n_bytes}) END"),
+    )
+
 
 _P52 = float(1 << 52)
 
 
-def _rev_pairs(col: Column, n_bytes: int, start: int) -> Column:
-    """Reverse the byte order of an n-byte hex slice starting at 1-based
-    `start` (little-endian → big-endian hex)."""
-    parts = [F.substring(col, start + 2 * i, 2) for i in range(n_bytes - 1, -1, -1)]
-    return F.concat(*parts)
-
-
-def _hex_slice(col: Column, le: Column, start: int, n_bytes: int) -> Column:
-    raw = F.substring(col, start, 2 * n_bytes)
-    return F.when(le, _rev_pairs(col, n_bytes, start)).otherwise(raw)
-
-
-def _let(bindings: dict, body) -> Column:
-    """Single-evaluation let-binding: wrap the bindings in a one-element
-    array<struct> and reference them through a higher-order-function lambda
-    variable. Each binding's expression tree then appears ONCE in the plan
-    no matter how many times `body` uses it — the Column API inlines plain
-    reuse, and the geometry decoders nest helpers deep enough that naive
-    inlining stacks multiplicatively (the linestring decoder's physical
-    plan measured 272 KB / ~8 s of analysis before this, ~2 KB after).
-    Conditional laziness is preserved: a _let under a When branch is only
-    evaluated when the branch is taken."""
-    keys = list(bindings)
-    arr = F.array(F.struct(*[bindings[k].alias(k) for k in keys]))
-    return F.get(F.transform(arr, lambda s: body(*[s[k] for k in keys])), 0)
-
-
-def _ieee754(hex16: Column) -> Column:
+def ieee754(hex16: str) -> str:
     """Big-endian 16-hex-char IEEE-754 double decode — exact integer and
     power-of-two arithmetic (reproducible in any engine; Inf/NaN → NULL)."""
-
-    def decode(head: Column, m: Column) -> Column:
-        sign = F.when(head >= 2048, F.lit(-1.0)).otherwise(F.lit(1.0))
-        e = head % 2048
-        frac = m.cast("double") / F.lit(_P52)
+    def decode(head: str, m: str) -> str:
+        sign = f"(CASE WHEN {head} >= 2048 THEN -1.0D ELSE 1.0D END)"
+        e = f"({head} % 2048)"
+        frac = f"(CAST({m} AS DOUBLE) / {_P52!r}D)"
         return (
-            F.when(e == 2047, F.lit(None).cast("double"))  # Inf/NaN → invalid
-            .when((e == 0) & (m == 0), sign * F.lit(0.0))
-            .when(e == 0, sign * frac * F.pow(F.lit(2.0), F.lit(-1022)))
-            .otherwise(sign * (frac + F.lit(1.0)) * F.pow(F.lit(2.0), e - 1023))
+            f"CASE WHEN {e} = 2047 THEN CAST(NULL AS DOUBLE) "
+            f"WHEN {e} = 0 AND {m} = 0 THEN {sign} * 0.0D "
+            f"WHEN {e} = 0 THEN {sign} * {frac} * power(2.0D, -1022) "
+            f"ELSE {sign} * ({frac} + 1.0D) * power(2.0D, {e} - 1023) END"
         )
 
-    return _let(
+    return let(
         {"hx": hex16},
-        lambda hx: _let(
-            {
-                "head": F.conv(F.substring(hx, 1, 3), 16, 10).cast("long"),
-                "m": F.conv(F.substring(hx, 4, 13), 16, 10).cast("long"),
-            },
+        lambda hx: let(
+            {"head": f"CAST(conv(substring({hx}, 1, 3), 16, 10) AS BIGINT)",
+             "m": f"CAST(conv(substring({hx}, 4, 13), 16, 10) AS BIGINT)"},
             decode,
         ),
     )
 
 
-def wkb_point(col: Column) -> Column:
-    """Hex-WKB/EWKB POINT → struct(x double, y double, srid int).
-
-    Supports both byte orders and the EWKB SRID flag (0x20000000). Anything
-    that is not a well-formed point (wrong geometry type, wrong length,
-    Inf/NaN coordinates) yields NULL x/y — the reference's GeoValidate drops
-    invalid shapes the same way (flow/shared/datatypes/geo.go:11-35)."""
-    h = F.upper(F.trim(col))
-    le = F.substring(h, 1, 2) == "01"
-    type_val = F.conv(_hex_slice(h, le, 3, 4), 16, 10).cast("long")
-    has_srid = (F.floor(type_val / F.lit(0x20000000)) % 2) == 1
-    base_type = type_val % F.lit(0x20000000)
-    srid = F.when(
-        has_srid, F.conv(_hex_slice(h, le, 11, 4), 16, 10).try_cast("int")
-    ).otherwise(F.lit(0))
-    xh = F.when(has_srid, _hex_slice(h, le, 19, 8)).otherwise(_hex_slice(h, le, 11, 8))
-    yh = F.when(has_srid, _hex_slice(h, le, 35, 8)).otherwise(_hex_slice(h, le, 27, 8))
-    expected_len = F.when(has_srid, F.lit(50)).otherwise(F.lit(42))
-    ok = (
-        (base_type == 1)
-        & (F.length(h) == expected_len)
-        & F.substring(h, 1, 2).isin("00", "01")
-        & (h.rlike("^[0-9A-F]+$"))
-    )
-    x = F.when(ok, _ieee754(xh))
-    y = F.when(ok, _ieee754(yh))
-    return F.struct(x.alias("x"), y.alias("y"),
-                    F.when(ok, srid).otherwise(F.lit(None).cast("int")).alias("srid"))
+def geo_header(col: str):
+    """(h, le, base_type, srid, body_pos, structural): the shared (E)WKB
+    header decode as SQL text, for the caller to bind through let().
+    body_pos is the 1-based hex position right after the header (and the
+    SRID when present)."""
+    h = f"upper(trim({col}))"
+    le = f"(substring({h}, 1, 2) = '01')"
+    type_val = f"CAST(conv({hex_slice(h, le, 3, 4)}, 16, 10) AS BIGINT)"
+    has_srid = f"(FLOOR(({type_val}) / 536870912) % 2 = 1)"
+    base_type = f"(({type_val}) % 536870912)"
+    srid = (f"CASE WHEN {has_srid} THEN "
+            f"TRY_CAST(conv({hex_slice(h, le, 11, 4)}, 16, 10) AS INT) "
+            f"ELSE 0 END")
+    body_pos = f"(CASE WHEN {has_srid} THEN 19 ELSE 11 END)"
+    structural = (f"(substring({h}, 1, 2) IN ('00', '01') "
+                  f"AND {h} RLIKE '^[0-9A-F]*$')")
+    return h, le, base_type, srid, body_pos, structural
 
 
-def wkb_point_wkt(col: Column) -> Column:
-    """WKT rendering with the reference's SRID prefix convention
-    ('SRID=n;POINT(x y)' when SRID != 0 — geo.go:29-34). String formatting of
-    doubles is engine-specific, so this is the API surface, not the oracle
-    projection (oracles compare the typed x/y/srid struct instead)."""
-    p = wkb_point(col)
-    body = F.concat(F.lit("POINT("), p["x"].cast("string"), F.lit(" "),
-                    p["y"].cast("string"), F.lit(")"))
-    return F.when(
-        p["x"].isNotNull(),
-        F.when(p["srid"] > 0,
-               F.concat(F.lit("SRID="), p["srid"].cast("string"), F.lit(";"), body)
-               ).otherwise(body),
-    )
-
-
-# -- variable-length geometries (LINESTRING / POLYGON) ----------------------
-#
-# The reference converts EVERY geometry kind via WKB→validate→WKT
-# (flow/shared/datatypes/geo.go GeoValidate, used from
-# flow/connectors/postgres/qvalue_convert.go:725-731); points alone covered
-# only the dominant case. These decoders handle the variable-length layouts
-# with pure expressions: dynamic offsets via substr(col, posColumn, len),
-# per-point decode via transform over an index sequence, and the polygon's
-# ring-by-ring offsets via ONE aggregate fold (each ring's start depends on
-# every prior ring's point count). Structural validity is strict — wrong
-# type, wrong total length, non-hex, NaN/Inf coordinate → NULL geometry,
-# mirroring GeoValidate's reject-don't-guess behavior.
-
-_GEO_POINT_T = "array<struct<x:double,y:double>>"
-
-
-def _rev_pairs_dyn(col: Column, n_bytes: int, start: Column) -> Column:
-    """_rev_pairs with a DYNAMIC 1-based start position (Column)."""
-    parts = [
-        F.substr(col, start + F.lit(2 * i), F.lit(2))
-        for i in range(n_bytes - 1, -1, -1)
-    ]
-    return F.concat(*parts)
-
-
-def _hex_slice_dyn(col: Column, le: Column, start: Column, n_bytes: int) -> Column:
-    return _let(
-        {"st": start},
-        lambda st: F.when(le, _rev_pairs_dyn(col, n_bytes, st)).otherwise(
-            F.substr(col, st, F.lit(2 * n_bytes))
-        ),
-    )
-
-
-def _geo_header(col: Column):
-    """(h, le, base_type, has_srid, srid, body_pos): the shared (E)WKB
-    header decode — body_pos is the 1-based hex position right after the
-    header (and SRID when present)."""
-    h = F.upper(F.trim(col))
-    le = F.substring(h, 1, 2) == "01"
-    type_val = F.conv(_hex_slice(h, le, 3, 4), 16, 10).cast("long")
-    has_srid = (F.floor(type_val / F.lit(0x20000000)) % 2) == 1
-    base_type = type_val % F.lit(0x20000000)
-    srid = F.when(
-        has_srid, F.conv(_hex_slice(h, le, 11, 4), 16, 10).try_cast("int")
-    ).otherwise(F.lit(0))
-    body_pos = F.when(has_srid, F.lit(19)).otherwise(F.lit(11))
-    structural = F.substring(h, 1, 2).isin("00", "01") & h.rlike("^[0-9A-F]*$")
-    return h, le, base_type, has_srid, srid, body_pos, structural
-
-
-def _points_at(h: Column, le: Column, base: Column, n: Column) -> Column:
-    """n points of 16 bytes each starting at hex position `base` (Column) →
-    array<struct<x,y>>. Guarded sequence: n=0 yields [] (sequence(0,-1)
+def points_at(h: str, le: str, base: str, n: str) -> str:
+    """n points of 16 bytes each starting at hex position `base` →
+    array<struct<x,y>>. Guarded sequence: n=0 yields [] (sequence(0, -1)
     would count DOWN)."""
-    idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(
-        F.array().cast("array<int>")
+    i = fresh("i")
+    idx = (f"CASE WHEN {n} > 0 THEN sequence(0, {n} - 1) "
+           f"ELSE CAST(array() AS ARRAY<INT>) END")
+    point = let(
+        {"o": f"({base}) + {i} * 32"},
+        lambda ov: (f"named_struct("
+                    f"'x', {ieee754(hex_slice_dyn(h, le, ov, 8))}, "
+                    f"'y', {ieee754(hex_slice_dyn(h, le, f'({ov}) + 16', 8))})"),
     )
-    return F.transform(
-        idx,
-        lambda i: _let(
-            {"o": base + i * 32},
-            lambda o: F.struct(
-                _ieee754(_hex_slice_dyn(h, le, o, 8)).alias("x"),
-                _ieee754(_hex_slice_dyn(h, le, o + 16, 8)).alias("y"),
-            ),
-        ),
-    )
+    return f"transform({idx}, {i} -> {point})"
 
 
-def _no_bad_coords(pts: Column) -> Column:
-    return ~F.exists(pts, lambda p: p["x"].isNull() | p["y"].isNull())
+def no_bad_coords(pts: str) -> str:
+    p = fresh("p")
+    return f"(NOT exists({pts}, {p} -> {p}.x IS NULL OR {p}.y IS NULL))"
 
 
-def wkb_linestring(col: Column) -> Column:
-    """Hex-WKB/EWKB LINESTRING → struct(srid int, points array<struct<x,y>>).
-    points is NULL for anything malformed (wrong type, truncated/overlong
-    payload, NaN/Inf coordinate). Every shared subterm is _let-bound —
-    header, point count, decoded points — so the plan stays ~KB-sized."""
-    h0, le0, base_type, _hs, srid0, body_pos, structural = _geo_header(col)
+def wkb_point_sql(col: str) -> str:
+    """Builder of `wkb_point`: struct(x, y, srid)."""
+    h0 = f"upper(trim({col}))"
 
-    def with_header(h, le, bt, srid, bp, ok0):
-        def with_n(n):
-            pts_raw = F.when(
-                ok0 & (bt == 2) & n.isNotNull()
-                & (F.length(h) == bp + 7 + n.cast("long") * 32),
-                _points_at(h, le, bp + 8, n),
+    def with_h(h):
+        le = f"(substring({h}, 1, 2) = '01')"
+        type_val = f"CAST(conv({hex_slice(h, le, 3, 4)}, 16, 10) AS BIGINT)"
+
+        def with_parts(lev, tv):
+            has_srid = f"(FLOOR({tv} / 536870912) % 2 = 1)"
+            base_type = f"({tv} % 536870912)"
+            srid = (f"CASE WHEN {has_srid} THEN "
+                    f"TRY_CAST(conv({hex_slice(h, lev, 11, 4)}, 16, 10) AS INT) "
+                    f"ELSE 0 END")
+            xh = (f"CASE WHEN {has_srid} THEN {hex_slice(h, lev, 19, 8)} "
+                  f"ELSE {hex_slice(h, lev, 11, 8)} END")
+            yh = (f"CASE WHEN {has_srid} THEN {hex_slice(h, lev, 35, 8)} "
+                  f"ELSE {hex_slice(h, lev, 27, 8)} END")
+            expected = f"(CASE WHEN {has_srid} THEN 50 ELSE 42 END)"
+            ok = (f"({base_type} = 1 AND length({h}) = {expected} "
+                  f"AND substring({h}, 1, 2) IN ('00', '01') "
+                  f"AND {h} RLIKE '^[0-9A-F]+$')")
+            return let(
+                {"ok": ok},
+                lambda okv: (
+                    f"named_struct("
+                    f"'x', CASE WHEN {okv} THEN {ieee754(xh)} END, "
+                    f"'y', CASE WHEN {okv} THEN {ieee754(yh)} END, "
+                    f"'srid', CASE WHEN {okv} THEN {srid} "
+                    f"ELSE CAST(NULL AS INT) END)"
+                ),
             )
-            return _let(
+
+        return let({"le": le, "tv": type_val}, with_parts)
+
+    return let({"h": h0}, with_h)
+
+
+def wkb_linestring_sql(col: str) -> str:
+    """Builder of `wkb_linestring`: struct(srid, points)."""
+    h0, le0, bt0, srid0, bp0, ok0 = geo_header(col)
+
+    def with_header(h, le, bt, srid, bp, ok):
+        def with_n(n):
+            pts_raw = (
+                f"CASE WHEN {ok} AND {bt} = 2 AND {n} IS NOT NULL "
+                f"AND length({h}) = {bp} + 7 + CAST({n} AS BIGINT) * 32 "
+                f"THEN {points_at(h, le, f'{bp} + 8', n)} END"
+            )
+            return let(
                 {"pts": pts_raw},
-                lambda pts: _let(
-                    {"valid": pts.isNotNull() & _no_bad_coords(pts)},
-                    lambda valid: F.struct(
-                        F.when(valid, srid).alias("srid"),
-                        F.when(valid, pts).alias("points"),
+                lambda pts: let(
+                    {"valid": f"({pts} IS NOT NULL AND {no_bad_coords(pts)})"},
+                    lambda valid: (
+                        f"named_struct("
+                        f"'srid', CASE WHEN {valid} THEN {srid} END, "
+                        f"'points', CASE WHEN {valid} THEN {pts} END)"
                     ),
                 ),
             )
 
-        return _let(
-            {"n": F.conv(_hex_slice_dyn(h, le, bp, 4), 16, 10).try_cast("int")},
+        return let(
+            {"n": f"TRY_CAST(conv({hex_slice_dyn(h, le, bp, 4)}, 16, 10) AS INT)"},
             with_n,
         )
 
-    return _let(
-        {"h": h0, "le": le0, "bt": base_type, "srid": srid0,
-         "bp": body_pos, "ok0": structural},
+    return let(
+        {"h": h0, "le": le0, "bt": bt0, "srid": srid0, "bp": bp0, "ok0": ok0},
         with_header,
     )
 
 
-def wkb_polygon(col: Column) -> Column:
-    """Hex-WKB/EWKB POLYGON → struct(srid int, rings array<array<struct<x,y>>>).
+_GEO_POINT_T = "ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>"
 
-    Ring offsets are data-dependent (ring r starts after all points of
-    rings 0..r-1), so the decode is one aggregate fold over the ring index
-    carrying (next position, rings so far, malformed flag); the final
-    position must land exactly at end-of-hex."""
-    h0, le0, base_type, _hs, srid0, body_pos, structural = _geo_header(col)
 
-    def with_header(h, le, bt, srid, bp, ok0):
-        def step(acc, _i):
+def wkb_polygon_sql(col: str) -> str:
+    """Builder of `wkb_polygon`: struct(srid, rings). Ring offsets are
+    data-dependent (ring r starts after all points of rings 0..r-1), so the
+    decode is one aggregate fold over the ring index carrying (next
+    position, rings so far, malformed flag); the final position must land
+    exactly at end-of-hex."""
+    h0, le0, bt0, srid0, bp0, ok0 = geo_header(col)
+
+    def with_header(h, le, bt, srid, bp, ok):
+        acc = fresh("acc")
+        i = fresh("i")
+
+        def step_body() -> str:
             def with_np(np_):
                 # a ring that would run past the buffer marks the geometry
                 # bad (substr past the end yields short slices → conv
                 # garbage, so the final exact-length check alone could miss
                 # compensating errors)
-                return _let(
-                    {"fits": np_.isNotNull()
-                             & (acc["pos"] + 7 + np_.cast("long") * 32
-                                <= F.length(h))},
-                    lambda fits: F.struct(
-                        F.when(fits, acc["pos"] + 8 + np_ * 32)
-                        .otherwise(acc["pos"]).alias("pos"),
-                        F.when(
-                            fits,
-                            F.concat(
-                                acc["rings"],
-                                F.array(_points_at(h, le, acc["pos"] + 8, np_)),
-                            ),
-                        ).otherwise(acc["rings"]).alias("rings"),
-                        (acc["bad"] | ~fits).alias("bad"),
+                return let(
+                    {"fits": (f"({np_} IS NOT NULL "
+                              f"AND {acc}.pos + 7 + CAST({np_} AS BIGINT) * 32 "
+                              f"<= length({h}))")},
+                    lambda fits: (
+                        f"named_struct("
+                        f"'pos', CASE WHEN {fits} THEN {acc}.pos + 8 + {np_} * 32 "
+                        f"ELSE {acc}.pos END, "
+                        f"'rings', CASE WHEN {fits} THEN concat({acc}.rings, "
+                        f"array({points_at(h, le, f'{acc}.pos + 8', np_)})) "
+                        f"ELSE {acc}.rings END, "
+                        f"'bad', ({acc}.bad OR NOT {fits}))"
                     ),
                 )
 
-            return _let(
-                {"np": F.conv(_hex_slice_dyn(h, le, acc["pos"], 4), 16, 10)
-                       .try_cast("int")},
+            return let(
+                {"np": (f"TRY_CAST(conv({hex_slice_dyn(h, le, f'{acc}.pos', 4)}, "
+                        f"16, 10) AS INT)")},
                 with_np,
             )
 
         def with_n(nrings):
-            ring_idx = F.when(nrings > 0, F.sequence(F.lit(1), nrings)).otherwise(
-                F.array().cast("array<int>")
-            )
-            init = F.struct(
-                (bp + 8).alias("pos"),
-                F.array().cast(f"array<{_GEO_POINT_T}>").alias("rings"),
-                F.lit(False).alias("bad"),
-            )
+            ring_idx = (f"CASE WHEN {nrings} > 0 THEN sequence(1, {nrings}) "
+                        f"ELSE CAST(array() AS ARRAY<INT>) END")
+            init = (f"named_struct('pos', {bp} + 8, "
+                    f"'rings', CAST(array() AS ARRAY<{_GEO_POINT_T}>), "
+                    f"'bad', false)")
             # nrings sanity: every ring needs ≥ 8 hex chars (its count
             # field alone), so a count that cannot fit the buffer is
-            # rejected BEFORE sequence() materializes it — a hostile
-            # header declaring 2^31 rings in a 20-char buffer would
-            # otherwise allocate the index array
-            folded_raw = F.when(
-                ok0 & (bt == 3) & nrings.isNotNull()
-                & (nrings.cast("long") * 8 <= F.length(h)),
-                F.aggregate(ring_idx, init, step),
+            # rejected BEFORE sequence() materializes it — a hostile header
+            # declaring 2^31 rings in a 20-char buffer would otherwise
+            # allocate the index array
+            folded_raw = (
+                f"CASE WHEN {ok} AND {bt} = 3 AND {nrings} IS NOT NULL "
+                f"AND CAST({nrings} AS BIGINT) * 8 <= length({h}) THEN "
+                f"aggregate({ring_idx}, {init}, "
+                f"({acc}, {i}) -> {step_body()}) END"
             )
-            return _let(
+            r = fresh("r")
+            return let(
                 {"folded": folded_raw},
-                lambda folded: _let(
-                    {"ok": folded.isNotNull()
-                           & ~folded["bad"]
-                           & (folded["pos"] - 1 == F.length(h))
-                           & ~F.exists(folded["rings"],
-                                       lambda r: ~_no_bad_coords(r))},
-                    lambda ok: F.struct(
-                        F.when(ok, srid).alias("srid"),
-                        F.when(ok, folded["rings"]).alias("rings"),
+                lambda folded: let(
+                    {"ok2": (f"({folded} IS NOT NULL AND NOT {folded}.bad "
+                             f"AND {folded}.pos - 1 = length({h}) "
+                             f"AND NOT exists({folded}.rings, "
+                             f"{r} -> NOT {no_bad_coords(r)}))")},
+                    lambda ok2: (
+                        f"named_struct("
+                        f"'srid', CASE WHEN {ok2} THEN {srid} END, "
+                        f"'rings', CASE WHEN {ok2} THEN {folded}.rings END)"
                     ),
                 ),
             )
 
-        return _let(
-            {"n": F.conv(_hex_slice_dyn(h, le, bp, 4), 16, 10).try_cast("int")},
+        return let(
+            {"n": f"TRY_CAST(conv({hex_slice_dyn(h, le, bp, 4)}, 16, 10) AS INT)"},
             with_n,
         )
 
-    return _let(
-        {"h": h0, "le": le0, "bt": base_type, "srid": srid0,
-         "bp": body_pos, "ok0": structural},
+    return let(
+        {"h": h0, "le": le0, "bt": bt0, "srid": srid0, "bp": bp0, "ok0": ok0},
         with_header,
     )
 
 
-# -- MULTI* geometries --------------------------------------------------------
-#
-# A MULTIPOINT/MULTILINESTRING/MULTIPOLYGON body is a count followed by
-# COMPLETE nested WKB blobs (each with its own byte-order + type header).
-# Decomposition: one fold walks the nested blobs computing each one's hex
-# LENGTH (points are fixed-size; linestrings read their point count;
-# polygons run an inner ring-length fold), slicing the blob out as a
-# string — then the EXISTING single-geometry decoders run on each slice
-# via transform. Validity is strict: every nested blob must parse, carry
-# the kind its container promises, and the lengths must tile the buffer
-# exactly.
-
-
-def _sub_geo_len(h: Column, pos: Column) -> Column:
+def _sub_geo_len_sql(h: str, pos: str) -> str:
     """Hex length of the complete nested WKB blob starting at 1-based `pos`
     (NULL when the header is unreadable / kind unsupported). Nested blobs
     never carry an EWKB SRID flag (SRID lives on the container)."""
 
-    def with_type(le, t):
-        # linestring: 1+4+4 bytes + 16n;  point: 1+4+16;  polygon: inner fold
-        n = F.conv(_hex_slice_dyn(h, le, pos + 10, 4), 16, 10).cast("long")
+    def with_bo(le, bo_ok):
+        def with_type(t):
+            # linestring: 1+4+4 bytes + 16n;  point: 1+4+16;  polygon: a fold
+            n = (f"CAST(conv({hex_slice_dyn(h, le, f'({pos}) + 10', 4)}, "
+                 f"16, 10) AS BIGINT)")
 
-        def ring_fold(nr):
-            init = F.struct(F.lit(18).cast("long").alias("ln"),
-                            F.lit(False).alias("bad"))
-
-            def step(acc, _i):
-                return _let(
-                    {"m": F.conv(
-                        _hex_slice_dyn(h, le, pos + acc["ln"], 4), 16, 10
-                    ).cast("long")},
-                    lambda m: F.struct(
-                        F.when(m.isNotNull(), acc["ln"] + 8 + 32 * m)
-                        .otherwise(acc["ln"]).alias("ln"),
-                        (acc["bad"] | m.isNull()).alias("bad"),
+            def ring_fold(nr: str) -> str:
+                acc = fresh("acc")
+                i = fresh("i")
+                step = let(
+                    {"m": (f"CAST(conv("
+                           f"{hex_slice_dyn(h, le, f'({pos}) + {acc}.ln', 4)}, "
+                           f"16, 10) AS BIGINT)")},
+                    lambda m: (
+                        f"named_struct("
+                        f"'ln', CASE WHEN {m} IS NOT NULL "
+                        f"THEN {acc}.ln + 8 + 32 * {m} ELSE {acc}.ln END, "
+                        f"'bad', ({acc}.bad OR {m} IS NULL))"
                     ),
                 )
+                # ≥ 8 hex chars per ring; oversized counts reject pre-sequence
+                idx = (f"CASE WHEN {nr} > 0 AND {nr} * 8 <= length({h}) "
+                       f"THEN sequence(1, TRY_CAST({nr} AS INT)) "
+                       f"ELSE CAST(array() AS ARRAY<INT>) END")
+                init = "named_struct('ln', CAST(18 AS BIGINT), 'bad', false)"
+                return let(
+                    {"f": f"aggregate({idx}, {init}, ({acc}, {i}) -> {step})"},
+                    lambda f: f"CASE WHEN NOT {f}.bad THEN {f}.ln END",
+                )
 
-            # ≥ 8 hex chars per ring; oversized counts reject pre-sequence
-            idx = F.when(
-                (nr > 0) & (nr * 8 <= F.length(h)),
-                F.sequence(F.lit(1), nr.try_cast("int")),
-            ).otherwise(F.array().cast("array<int>"))
-            return _let(
-                {"f": F.aggregate(idx, init, step)},
-                lambda f: F.when(~f["bad"], f["ln"]),
+            return let(
+                {"n": n},
+                lambda nv: (
+                    f"CASE WHEN {t} = 1 THEN CAST(42 AS BIGINT) "
+                    f"WHEN {t} = 2 THEN CASE WHEN {nv} IS NOT NULL "
+                    f"THEN 18 + 32 * {nv} END "
+                    f"WHEN {t} = 3 THEN CASE WHEN {nv} IS NOT NULL "
+                    f"THEN {ring_fold(nv)} END END"
+                ),
             )
 
         return (
-            F.when(t == 1, F.lit(42).cast("long"))
-            .when(t == 2, F.when(n.isNotNull(), 18 + 32 * n))
-            .when(t == 3, F.when(n.isNotNull(), ring_fold(n)))
+            f"CASE WHEN {bo_ok} THEN "
+            + let(
+                {"t": (f"CAST(conv({hex_slice_dyn(h, le, f'({pos}) + 2', 4)}, "
+                       f"16, 10) AS BIGINT)")},
+                with_type,
+            )
+            + " END"
         )
 
-    return _let(
-        {"le": F.substr(h, pos, F.lit(2)) == "01",
-         "bo_ok": F.substr(h, pos, F.lit(2)).isin("00", "01")},
-        lambda le, bo_ok: F.when(
-            bo_ok,
-            _let(
-                {"t": F.conv(_hex_slice_dyn(h, le, pos + 2, 4), 16, 10)
-                      .cast("long")},
-                lambda t: with_type(le, t),
-            ),
-        ),
+    return let(
+        {"le": f"(substr({h}, {pos}, 2) = '01')",
+         "bo_ok": f"(substr({h}, {pos}, 2) IN ('00', '01'))"},
+        with_bo,
     )
 
 
-def _wkb_parts(col: Column, container_type: int) -> Column:
-    """struct(srid, parts array<string>): the nested blobs of a MULTI*
-    geometry as hex strings (NULL when malformed). container_type ∈
-    {4: multipoint, 5: multilinestring, 6: multipolygon}."""
-    h0, le0, base_type, _hs, srid0, body_pos, structural = _geo_header(col)
+def _wkb_parts_sql(col: str, container_type: int | str) -> str:
+    """struct(srid, parts array<string>): the nested blobs of a MULTI* or
+    collection geometry as hex strings (NULL when malformed or when the
+    header's kind is not `container_type`: 4 multipoint, 5
+    multilinestring, 6 multipolygon, 7 geometrycollection, or SQL text
+    evaluating to one of them)."""
+    h0, le0, bt0, srid0, bp0, ok0 = geo_header(col)
 
-    def with_header(h, le, bt, srid, bp, ok0):
-        def with_n(n):
-            init = F.struct(
-                (bp + 8).cast("long").alias("pos"),
-                F.array().cast("array<string>").alias("parts"),
-                F.lit(False).alias("bad"),
-            )
+    def with_header(h, le, bt, srid, bp, ok):
+        acc = fresh("acc")
+        i = fresh("i")
 
-            def step(acc, _i):
-                return _let(
-                    {"ln": _sub_geo_len(h, acc["pos"])},
-                    lambda ln: _let(
-                        {"fits": ln.isNotNull()
-                                 & (acc["pos"] + ln - 1 <= F.length(h))},
-                        lambda fits: F.struct(
-                            F.when(fits, acc["pos"] + ln)
-                            .otherwise(acc["pos"]).alias("pos"),
-                            F.when(
-                                fits,
-                                F.concat(acc["parts"],
-                                         F.array(F.substr(h, acc["pos"], ln))),
-                            ).otherwise(acc["parts"]).alias("parts"),
-                            (acc["bad"] | ~fits).alias("bad"),
-                        ),
-                    ),
-                )
-
-            idx = F.when(n > 0, F.sequence(F.lit(1), n)).otherwise(
-                F.array().cast("array<int>")
-            )
-            # same sanity as the polygon fold: a nested blob is ≥ 10 hex
-            # chars (byte order + type header), so an n that cannot fit
-            # rejects before sequence() materializes the index array
-            folded_raw = F.when(
-                ok0 & (bt == container_type) & n.isNotNull()
-                & (n.cast("long") * 10 <= F.length(h)),
-                F.aggregate(idx, init, step),
-            )
-            return _let(
-                {"f": folded_raw},
-                lambda f: _let(
-                    {"ok": f.isNotNull() & ~f["bad"]
-                           & (f["pos"] - 1 == F.length(h))},
-                    lambda ok: F.struct(
-                        F.when(ok, srid).alias("srid"),
-                        F.when(ok, f["parts"]).alias("parts"),
+        def step_body() -> str:
+            return let(
+                {"ln": _sub_geo_len_sql(h, f"{acc}.pos")},
+                lambda ln: let(
+                    {"fits": (f"({ln} IS NOT NULL "
+                              f"AND {acc}.pos + {ln} - 1 <= length({h}))")},
+                    lambda fits: (
+                        f"named_struct("
+                        f"'pos', CASE WHEN {fits} THEN {acc}.pos + {ln} "
+                        f"ELSE {acc}.pos END, "
+                        f"'parts', CASE WHEN {fits} THEN concat({acc}.parts, "
+                        f"array(substr({h}, {acc}.pos, {ln}))) "
+                        f"ELSE {acc}.parts END, "
+                        f"'bad', ({acc}.bad OR NOT {fits}))"
                     ),
                 ),
             )
 
-        return _let(
-            {"n": F.conv(_hex_slice_dyn(h, le, bp, 4), 16, 10).try_cast("int")},
+        def with_n(n):
+            idx = (f"CASE WHEN {n} > 0 THEN sequence(1, {n}) "
+                   f"ELSE CAST(array() AS ARRAY<INT>) END")
+            init = (f"named_struct('pos', CAST({bp} + 8 AS BIGINT), "
+                    f"'parts', CAST(array() AS ARRAY<STRING>), "
+                    f"'bad', false)")
+            # same sanity as the polygon fold: a nested blob is ≥ 10 hex
+            # chars (byte order + type header)
+            folded_raw = (
+                f"CASE WHEN {ok} AND {bt} = {container_type} "
+                f"AND {n} IS NOT NULL "
+                f"AND CAST({n} AS BIGINT) * 10 <= length({h}) THEN "
+                f"aggregate({idx}, {init}, ({acc}, {i}) -> {step_body()}) END"
+            )
+            return let(
+                {"f": folded_raw},
+                lambda f: let(
+                    {"ok2": (f"({f} IS NOT NULL AND NOT {f}.bad "
+                             f"AND {f}.pos - 1 = length({h}))")},
+                    lambda ok2: (
+                        f"named_struct("
+                        f"'srid', CASE WHEN {ok2} THEN {srid} END, "
+                        f"'parts', CASE WHEN {ok2} THEN {f}.parts END)"
+                    ),
+                ),
+            )
+
+        return let(
+            {"n": f"TRY_CAST(conv({hex_slice_dyn(h, le, bp, 4)}, 16, 10) AS INT)"},
             with_n,
         )
 
-    return _let(
-        {"h": h0, "le": le0, "bt": base_type, "srid": srid0,
-         "bp": body_pos, "ok0": structural},
+    return let(
+        {"h": h0, "le": le0, "bt": bt0, "srid": srid0, "bp": bp0, "ok0": ok0},
         with_header,
     )
 
 
-def wkb_multipoint(col: Column) -> Column:
+def _multi_sql(col: str, kind: int, decode, key: str, field: str, out: str,
+               pick=None) -> str:
+    """struct(srid, <out>) of a MULTI* geometry: each nested blob decoded by
+    `decode` (bound as `key`), the whole geometry NULL when any member's
+    `field` is NULL; `pick(m)` projects one decoded member (default: its
+    `field`)."""
+    p, x = fresh("p"), fresh("x")
+    pick = pick or (lambda m: f"{m}.{field}")
+    return let(
+        {"ps": _wkb_parts_sql(col, kind)},
+        lambda ps: let(
+            {key: f"transform({ps}.parts, {p} -> {decode(p)})"},
+            lambda d: let(
+                {"bad": (f"({ps}.parts IS NULL OR "
+                         f"exists({d}, {x} -> {x}.{field} IS NULL))")},
+                lambda bad: (
+                    f"named_struct("
+                    f"'srid', CASE WHEN NOT {bad} THEN {ps}.srid END, "
+                    f"'{out}', CASE WHEN NOT {bad} THEN "
+                    f"transform({d}, {x} -> {pick(x)}) END)"
+                ),
+            ),
+        ),
+    )
+
+
+def wkb_multipoint_sql(col: str) -> str:
+    """Builder of `wkb_multipoint`: struct(srid, points)."""
+    return _multi_sql(col, 4, wkb_point_sql, "pts", "x", "points",
+                      lambda m: f"named_struct('x', {m}.x, 'y', {m}.y)")
+
+
+def wkb_multilinestring_sql(col: str) -> str:
+    """Builder of `wkb_multilinestring`: struct(srid, lines)."""
+    return _multi_sql(col, 5, wkb_linestring_sql, "ls", "points", "lines")
+
+
+def wkb_multipolygon_sql(col: str) -> str:
+    """Builder of `wkb_multipolygon`: struct(srid, polys)."""
+    return _multi_sql(col, 6, wkb_polygon_sql, "pg", "rings", "polys")
+
+
+# -- WKT rendering (geo.go's output surface) ---------------------------------
+
+_WKT_TAGS = ("POINT", "LINESTRING", "POLYGON", "MULTIPOINT", "MULTILINESTRING",
+             "MULTIPOLYGON", "GEOMETRYCOLLECTION")
+
+
+def _tag_sql(kind: str) -> str:
+    whens = " ".join(f"WHEN {k} THEN '{t}'" for k, t in enumerate(_WKT_TAGS, 1))
+    return f"CASE {kind} {whens} END"
+
+
+def _wkt_coords(arr: str, depth: int) -> str:
+    """'x y, x y' for an array of points; each nesting level above that
+    wraps its members in parentheses ('(x y, …), (…)'). NULL for a NULL
+    array."""
+    v = fresh("w")
+    item = (f"concat(CAST({v}.x AS STRING), ' ', CAST({v}.y AS STRING))"
+            if depth == 0 else f"concat('(', {_wkt_coords(v, depth - 1)}, ')')")
+    return f"array_join(transform({arr}, {v} -> {item}), ', ')"
+
+
+def _wkt_body_sql(col: str, kind: str) -> str:
+    """The text inside a simple geometry's WKT parentheses — 'x y' (point),
+    'x y, …' (linestring), '(x y, …), …' (polygon) — for `col` decoded as
+    `kind` (SQL text); NULL when that decode is NULL or `kind` is not 1-3."""
+    pt = let({"p": wkb_point_sql(col)},
+             lambda p: f"concat(CAST({p}.x AS STRING), ' ', CAST({p}.y AS STRING))")
+    ls = _wkt_coords(f"({wkb_linestring_sql(col)}).points", 0)
+    pg = _wkt_coords(f"({wkb_polygon_sql(col)}).rings", 1)
+    return f"CASE {kind} WHEN 1 THEN {pt} WHEN 2 THEN {ls} WHEN 3 THEN {pg} END"
+
+
+def _wkt_sql(col: str, kind: str) -> str:
+    """WKT, without an SRID prefix, of `col` whose header carries `kind`
+    (SQL text evaluating to 1-7). A simple geometry renders as the one
+    member of itself; a MULTI* or GEOMETRYCOLLECTION renders its nested
+    blobs, each of which must be the kind its container promises
+    (kind - 3; any simple kind in a collection, where members keep their
+    tags). NULL when any member is."""
+    p, t = fresh("p"), fresh("t")
+
+    def member(mk: str) -> str:
+        return let(
+            {"b": _wkt_body_sql(p, mk)},
+            lambda b: (f"CASE WHEN {kind} <= 3 OR {kind} = 7 "
+                       f"THEN concat({_tag_sql(mk)}, '(', {b}, ')') "
+                       f"WHEN {mk} != {kind} - 3 THEN NULL "
+                       f"WHEN {kind} = 4 THEN {b} ELSE concat('(', {b}, ')') END"),
+        )
+
+    items = (f"CASE WHEN {kind} <= 3 THEN array({col}) "
+             f"ELSE ({_wkb_parts_sql(col, kind)}).parts END")
+    return let(
+        {"txt": (f"transform({items}, {p} -> "
+                 f"{let({'mk': geo_header(p)[2]}, member)})")},
+        lambda txt: (
+            f"CASE WHEN {txt} IS NOT NULL "
+            f"AND NOT exists({txt}, {t} -> {t} IS NULL) THEN "
+            f"CASE WHEN {kind} <= 3 THEN get({txt}, 0) "
+            f"WHEN {kind} = 7 AND size({txt}) = 0 THEN 'GEOMETRYCOLLECTION EMPTY' "
+            f"ELSE concat({_tag_sql(kind)}, '(', array_join({txt}, ', '), ')') END END"
+        ),
+    )
+
+
+def wkb_point_wkt_sql(col: str) -> str:
+    """Builder of `wkb_point_wkt`."""
+    return let(
+        {"p": wkb_point_sql(col)},
+        lambda p: (f"CASE WHEN {p}.x IS NOT NULL THEN concat("
+                   f"CASE WHEN {p}.srid > 0 THEN concat('SRID=', "
+                   f"CAST({p}.srid AS STRING), ';') ELSE '' END, "
+                   f"'POINT(', CAST({p}.x AS STRING), ' ', "
+                   f"CAST({p}.y AS STRING), ')') END"),
+    )
+
+
+def wkb_geometrycollection_wkt_sql(col: str) -> str:
+    """Builder of `wkb_geometrycollection_wkt`."""
+    return _wkt_sql(col, "7")
+
+
+def wkb_geometry_wkt_sql(col: str) -> str:
+    """Builder of `wkb_geometry_wkt`."""
+    _h, _le, bt0, srid0, _bp, _ok = geo_header(col)
+    return let(
+        {"bt": bt0, "sr": srid0},
+        lambda bt, sr: (
+            f"concat(CASE WHEN {sr} > 0 THEN concat('SRID=', "
+            f"CAST({sr} AS STRING), ';') ELSE '' END, "
+            f"CASE WHEN {bt} BETWEEN 1 AND 7 THEN {_wkt_sql(col, bt)} END)"
+        ),
+    )
+
+
+# -- public Column surface: one F.expr parse per call -------------------------
+
+
+def wkb_point(col: str) -> Column:
+    """Hex-WKB/EWKB POINT → struct(x double, y double, srid int).
+
+    `col` is a column name or SQL expression text, as for every geometry
+    function here. Supports both byte orders and the EWKB SRID flag
+    (0x20000000). Anything that is not a well-formed point (wrong geometry
+    type, wrong length, non-hex) yields NULL x/y — the reference's
+    GeoValidate drops invalid shapes the same way
+    (flow/shared/datatypes/geo.go:11-35) — and an Inf/NaN coordinate
+    reads as a NULL x or y."""
+    return F.expr(wkb_point_sql(col))
+
+
+def wkb_point_wkt(col: str) -> Column:
+    """WKT rendering with the reference's SRID prefix convention
+    ('SRID=n;POINT(x y)' when SRID != 0 — geo.go:29-34). String formatting of
+    doubles is engine-specific, so this is the API surface, not the oracle
+    projection (oracles compare the typed x/y/srid struct instead)."""
+    return F.expr(wkb_point_wkt_sql(col))
+
+
+def wkb_linestring(col: str) -> Column:
+    """Hex-WKB/EWKB LINESTRING → struct(srid int, points array<struct<x,y>>).
+    points is NULL for anything malformed (wrong type, truncated/overlong
+    payload, NaN/Inf coordinate)."""
+    return F.expr(wkb_linestring_sql(col))
+
+
+def wkb_polygon(col: str) -> Column:
+    """Hex-WKB/EWKB POLYGON → struct(srid int, rings array<array<struct<x,y>>>)."""
+    return F.expr(wkb_polygon_sql(col))
+
+
+def wkb_multipoint(col: str) -> Column:
     """MULTIPOINT → struct(srid int, points array<struct<x,y>>)."""
-    return _let(
-        {"ps": _wkb_parts(col, 4)},
-        lambda ps: _let(
-            {"pts": F.transform(ps["parts"], lambda p: wkb_point(p))},
-            lambda pts: _let(
-                {"bad": ps["parts"].isNull()
-                        | F.exists(pts, lambda p: p["x"].isNull())},
-                lambda bad: F.struct(
-                    F.when(~bad, ps["srid"]).alias("srid"),
-                    F.when(
-                        ~bad,
-                        F.transform(pts, lambda p: F.struct(
-                            p["x"].alias("x"), p["y"].alias("y"))),
-                    ).alias("points"),
-                ),
-            ),
-        ),
-    )
+    return F.expr(wkb_multipoint_sql(col))
 
 
-def wkb_multilinestring(col: Column) -> Column:
+def wkb_multilinestring(col: str) -> Column:
     """MULTILINESTRING → struct(srid int, lines array<array<struct<x,y>>>)."""
-    return _let(
-        {"ps": _wkb_parts(col, 5)},
-        lambda ps: _let(
-            {"ls": F.transform(ps["parts"], lambda p: wkb_linestring(p))},
-            lambda ls: _let(
-                {"bad": ps["parts"].isNull()
-                        | F.exists(ls, lambda x: x["points"].isNull())},
-                lambda bad: F.struct(
-                    F.when(~bad, ps["srid"]).alias("srid"),
-                    F.when(~bad, F.transform(ls, lambda x: x["points"]))
-                    .alias("lines"),
-                ),
-            ),
-        ),
-    )
+    return F.expr(wkb_multilinestring_sql(col))
 
 
-def wkb_multipolygon(col: Column) -> Column:
+def wkb_multipolygon(col: str) -> Column:
     """MULTIPOLYGON → struct(srid int, polys array<array<array<struct<x,y>>>>)."""
-    return _let(
-        {"ps": _wkb_parts(col, 6)},
-        lambda ps: _let(
-            {"pg": F.transform(ps["parts"], lambda p: wkb_polygon(p))},
-            lambda pg: _let(
-                {"bad": ps["parts"].isNull()
-                        | F.exists(pg, lambda x: x["rings"].isNull())},
-                lambda bad: F.struct(
-                    F.when(~bad, ps["srid"]).alias("srid"),
-                    F.when(~bad, F.transform(pg, lambda x: x["rings"]))
-                    .alias("polys"),
-                ),
-            ),
-        ),
-    )
+    return F.expr(wkb_multipolygon_sql(col))
 
 
-def _simple_wkt(col: Column) -> Column:
-    """WKT for the three simple kinds only (no SRID prefix — used for the
-    nested members of a GEOMETRYCOLLECTION, which carry no SRID flag)."""
-    _h, _le, base_type, _hs, _sr, _bp, _ok = _geo_header(col)
-
-    def pt_txt(p):
-        return F.concat(p["x"].cast("string"), F.lit(" "), p["y"].cast("string"))
-
-    ls_txt = _let(
-        {"ls": wkb_linestring(col)},
-        lambda ls: F.when(
-            ls["points"].isNotNull(),
-            F.concat(
-                F.lit("LINESTRING("),
-                F.array_join(F.transform(ls["points"], pt_txt), ", "),
-                F.lit(")"),
-            ),
-        ),
-    )
-    pg_txt = _let(
-        {"pg": wkb_polygon(col)},
-        lambda pg: F.when(
-            pg["rings"].isNotNull(),
-            F.concat(
-                F.lit("POLYGON("),
-                F.array_join(
-                    F.transform(
-                        pg["rings"],
-                        lambda r: F.concat(
-                            F.lit("("),
-                            F.array_join(F.transform(r, pt_txt), ", "),
-                            F.lit(")"),
-                        ),
-                    ),
-                    ", ",
-                ),
-                F.lit(")"),
-            ),
-        ),
-    )
-    return (
-        F.when(base_type == 1, wkb_point_wkt(col))
-        .when(base_type == 2, ls_txt)
-        .when(base_type == 3, pg_txt)
-    )
-
-
-def wkb_geometrycollection_wkt(col: Column) -> Column:
+def wkb_geometrycollection_wkt(col: str) -> Column:
     """GEOMETRYCOLLECTION → WKT ('GEOMETRYCOLLECTION(POINT(…), …)'; empty →
     'GEOMETRYCOLLECTION EMPTY'). Members are the simple kinds — a
     collection holding MULTI* or nested collections returns NULL
     (documented scope: the member-length fold handles kinds 1-3)."""
-    return _let(
-        {"ps": _wkb_parts(col, 7)},
-        lambda ps: _let(
-            {"txt": F.transform(ps["parts"], lambda p: _simple_wkt(p))},
-            lambda txt: _let(
-                {"bad": ps["parts"].isNull()
-                        | F.exists(txt, lambda t: t.isNull())},
-                lambda bad: F.when(
-                    ~bad,
-                    F.when(
-                        F.size(txt) == 0, F.lit("GEOMETRYCOLLECTION EMPTY")
-                    ).otherwise(
-                        F.concat(
-                            F.lit("GEOMETRYCOLLECTION("),
-                            F.array_join(txt, ", "),
-                            F.lit(")"),
-                        )
-                    ),
-                ),
-            ),
-        ),
-    )
+    return F.expr(wkb_geometrycollection_wkt_sql(col))
 
 
-def wkb_geometry_wkt(col: Column) -> Column:
+def wkb_geometry_wkt(col: str) -> Column:
     """Any supported hex-WKB geometry → WKT with the reference's SRID
     prefix convention ('SRID=n;…' when SRID != 0 — geo.go:29-34). All
     seven kinds: point/linestring/polygon, the three MULTI* kinds, and
     GEOMETRYCOLLECTION of simple members (nested collections → NULL).
-    Double→string formatting is engine-specific,
-    so (like wkb_point_wkt) this is the API surface — oracles compare
-    typed/integer-scaled coordinates instead."""
-    _h, _le, base_type, _hs, srid, _bp, _ok = _geo_header(col)
-
-    def pt_txt(p):
-        return F.concat(p["x"].cast("string"), F.lit(" "), p["y"].cast("string"))
-
-    # each kind's text is NULL when that kind's decode is NULL — so the
-    # final When chain is also the validity gate, with every decode bound once
-    ls_txt = _let(
-        {"ls": wkb_linestring(col)},
-        lambda ls: F.when(
-            ls["points"].isNotNull(),
-            F.concat(
-                F.lit("LINESTRING("),
-                F.array_join(F.transform(ls["points"], pt_txt), ", "),
-                F.lit(")"),
-            ),
-        ),
-    )
-    pg_txt = _let(
-        {"pg": wkb_polygon(col)},
-        lambda pg: F.when(
-            pg["rings"].isNotNull(),
-            F.concat(
-                F.lit("POLYGON("),
-                F.array_join(
-                    F.transform(
-                        pg["rings"],
-                        lambda r: F.concat(
-                            F.lit("("),
-                            F.array_join(F.transform(r, pt_txt), ", "),
-                            F.lit(")"),
-                        ),
-                    ),
-                    ", ",
-                ),
-                F.lit(")"),
-            ),
-        ),
-    )
-    def ring_txt(r):
-        return F.concat(
-            F.lit("("), F.array_join(F.transform(r, pt_txt), ", "), F.lit(")")
-        )
-
-    mp_txt = _let(
-        {"mp": wkb_multipoint(col)},
-        lambda mp: F.when(
-            mp["points"].isNotNull(),
-            F.concat(
-                F.lit("MULTIPOINT("),
-                F.array_join(F.transform(mp["points"], pt_txt), ", "),
-                F.lit(")"),
-            ),
-        ),
-    )
-    mls_txt = _let(
-        {"ml": wkb_multilinestring(col)},
-        lambda ml: F.when(
-            ml["lines"].isNotNull(),
-            F.concat(
-                F.lit("MULTILINESTRING("),
-                F.array_join(F.transform(ml["lines"], ring_txt), ", "),
-                F.lit(")"),
-            ),
-        ),
-    )
-    mpg_txt = _let(
-        {"mg": wkb_multipolygon(col)},
-        lambda mg: F.when(
-            mg["polys"].isNotNull(),
-            F.concat(
-                F.lit("MULTIPOLYGON("),
-                F.array_join(
-                    F.transform(
-                        mg["polys"],
-                        lambda rings: F.concat(
-                            F.lit("("),
-                            F.array_join(F.transform(rings, ring_txt), ", "),
-                            F.lit(")"),
-                        ),
-                    ),
-                    ", ",
-                ),
-                F.lit(")"),
-            ),
-        ),
-    )
-    body = (
-        F.when(base_type == 1, wkb_point_wkt(col))
-        .when(base_type == 2, ls_txt)
-        .when(base_type == 3, pg_txt)
-        .when(base_type == 4, mp_txt)
-        .when(base_type == 5, mls_txt)
-        .when(base_type == 6, mpg_txt)
-        .when(base_type == 7, wkb_geometrycollection_wkt(col))
-    )
-    # point WKT already carries its own SRID prefix; add it for ls/pg
-    return _let(
-        {"bt": base_type, "sr": srid, "b": body},
-        lambda bt, sr, b: F.when(
-            (bt != 1) & (sr > 0) & b.isNotNull(),
-            F.concat(F.lit("SRID="), sr.cast("string"), F.lit(";"), b),
-        ).otherwise(b),
-    )
+    Double→string formatting is engine-specific, so (like wkb_point_wkt)
+    this is the API surface — oracles compare typed/integer-scaled
+    coordinates instead."""
+    return F.expr(wkb_geometry_wkt_sql(col))
 
 
 # ---------------------------------------------------------------------------

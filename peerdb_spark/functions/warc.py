@@ -22,29 +22,46 @@ from __future__ import annotations
 
 import zlib
 
+from peerdb_spark import codecs
+
 __all__ = ["split_gzip_members", "parse_warc", "encode_warc"]
+
+_STEP = 1 << 20  # inflate step: the most one decompress call may return
 
 
 def split_gzip_members(data: bytes) -> list[bytes]:
     """Multi-member gzip → list of decompressed members (the .warc.gz
     convention: one record per member). Raises ValueError on corrupt
-    streams; a non-gzip payload is one 'member' returned as-is when it
-    lacks the magic (plain .warc passthrough)."""
+    streams and once the members together inflate past codecs.MAX_SIZE
+    (inflation runs in bounded steps, so a small hostile blob never
+    allocates its full output); a non-gzip payload is one 'member'
+    returned as-is when it lacks the magic (plain .warc passthrough)."""
     if data[:2] != b"\x1f\x8b":
         return [data]
-    out = []
+    out, total = [], 0
     rest = data
     while rest:
         if rest[:2] != b"\x1f\x8b":
             raise ValueError("garbage between gzip members")
         d = zlib.decompressobj(wbits=31)
+        parts, buf = [], rest
         try:
-            member = d.decompress(rest)
+            while not d.eof:
+                n_in = len(buf)
+                part = d.decompress(buf, _STEP)
+                buf = d.unconsumed_tail
+                if not part and len(buf) == n_in:
+                    break  # no progress: the member is cut short
+                total += len(part)
+                if total > codecs.MAX_SIZE:
+                    raise ValueError(
+                        f"gzip: output exceeds size bound {codecs.MAX_SIZE}")
+                parts.append(part)
         except zlib.error as e:
             raise ValueError(f"corrupt gzip member ({e})") from e
         if not d.eof:
             raise ValueError("truncated gzip member")
-        out.append(member)
+        out.append(b"".join(parts))
         rest = d.unused_data
     return out
 

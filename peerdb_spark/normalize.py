@@ -84,8 +84,9 @@ def kind_code(col=COL_KIND):
 def kind_code_sql(col=COL_KIND) -> str:
     """SQL text of kind_code — the merge builders compose projections as
     text so one selectExpr parse replaces per-node py4j round-trips (the
-    exotic_sql.py lesson: each Column-API node is a ~1 ms driver round
-    trip; a parsed CASE chain is identical Catalyst output)."""
+    lesson of the SQL-text geometry builders in functions/exotic.py: each
+    Column-API node is a ~1 ms driver round trip; a parsed CASE chain is
+    identical Catalyst output)."""
     c = _qid(col)
     return (
         f"CASE WHEN {c} = 'insert' THEN {KIND_INSERT}"

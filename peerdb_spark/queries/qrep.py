@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from peerdb_spark.functions import exotic as X
 from peerdb_spark.functions.exotic import INET4_RE as X_INET4_RE
 from peerdb_spark.functions.exotic import INET6_RE as X_INET6_RE
 from peerdb_spark.partition import ntile_partition_ranges
@@ -435,8 +436,6 @@ def q_exotic_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _exotic_col_lists() -> tuple[list, list]:
-    from peerdb_spark.functions import exotic as X
-
     k = F.col("o_orderkey")
     src_cols = [
         k.alias("pk"),
@@ -484,18 +483,14 @@ def _exotic_col_lists() -> tuple[list, list]:
         .otherwise(F.bin(k + 2))
         .alias("bit_raw"),
     ]
-    from peerdb_spark.functions import exotic_sql as XS
-
     iv = X.parse_interval(F.col("iv"))
-    # geometry decodes are the SQL-TEXT mirrors (exotic_sql.py): building
-    # the Column versions costs ~4.5 s of py4j round-trips PER invocation
-    # (measured; the dominant cost of this query), while one F.expr parse
-    # is milliseconds. tests/test_exotic.py pins text==Column equivalence
-    # over every fixture including the malformed ones.
-    pt = F.expr(XS.wkb_point_sql("wkb"))
-    ls_canon = F.expr(XS.linestring_canon_sql("wkb_ls"))
-    pg_canon = F.expr(XS.polygon_canon_sql("wkb_pg"))
-    mpg_canon = F.expr(XS.multipolygon_canon_sql("wkb_mpg"))
+    # geometry columns parse exotic.py's SQL-text builders, one F.expr
+    # each; tests/test_exotic.py pins those decoders to the fixtures'
+    # ground-truth coordinates and every malformed shape to NULL
+    pt = X.wkb_point("wkb")
+    ls_canon = F.expr(_linestring_canon_sql("wkb_ls"))
+    pg_canon = F.expr(_polygon_canon_sql("wkb_pg"))
+    mpg_canon = F.expr(_multipolygon_canon_sql("wkb_mpg"))
     out_cols = [
         F.col("pk"),
         iv["years"].alias("iv_years"),
@@ -519,9 +514,62 @@ def _exotic_col_lists() -> tuple[list, list]:
     return src_cols, out_cols
 
 
+# -- canonical text renderings for the gate query -----------------------------
+#
+# SRID + quantized coordinates (exact: fixture coords are multiples of
+# 1/1024) joined with ','/'|'/'/' per nesting level, over the exotic.py
+# decoder builders. One SQL string per output column.
+
+
+def _qtext(c: str) -> str:
+    return f"CAST(CAST(round(({c}) * 1024) AS BIGINT) AS STRING)"
+
+
+def _pt_txt(p: str) -> str:
+    return f"concat({_qtext(f'{p}.x')}, ' ', {_qtext(f'{p}.y')})"
+
+
+def _ring_txt(r: str) -> str:
+    p = X.fresh("p")
+    return f"array_join(transform({r}, {p} -> {_pt_txt(p)}), ',')"
+
+
+def _linestring_canon_sql(col: str) -> str:
+    return X.let(
+        {"ls": X.wkb_linestring_sql(col)},
+        lambda ls: (f"CASE WHEN {ls}.points IS NOT NULL THEN concat("
+                    f"CAST({ls}.srid AS STRING), ':', "
+                    f"{_ring_txt(f'{ls}.points')}) END"),
+    )
+
+
+def _polygon_canon_sql(col: str) -> str:
+    r = X.fresh("r")
+    return X.let(
+        {"pg": X.wkb_polygon_sql(col)},
+        lambda pg: (f"CASE WHEN {pg}.rings IS NOT NULL THEN concat("
+                    f"CAST({pg}.srid AS STRING), ':', "
+                    f"array_join(transform({pg}.rings, "
+                    f"{r} -> {_ring_txt(r)}), '|')) END"),
+    )
+
+
+def _multipolygon_canon_sql(col: str) -> str:
+    rings = X.fresh("rs")
+    r = X.fresh("r")
+    return X.let(
+        {"mg": X.wkb_multipolygon_sql(col)},
+        lambda mg: (f"CASE WHEN {mg}.polys IS NOT NULL THEN concat("
+                    f"CAST({mg}.srid AS STRING), ':', "
+                    f"array_join(transform({mg}.polys, {rings} -> "
+                    f"array_join(transform({rings}, {r} -> {_ring_txt(r)}), "
+                    f"'|')), '/')) END"),
+    )
+
+
 def _sql_rev_hex(start: int, n: int) -> str:
-    """Little-endian → big-endian hex slice reversal (oracle mirror of
-    exotic._rev_pairs; the declared WKB literals are all little-endian)."""
+    """Little-endian → big-endian hex slice reversal (oracle form of
+    exotic.rev_pairs; the declared WKB literals are all little-endian)."""
     parts = [f"substr(h, {start + 2 * i}, 2)" for i in range(n - 1, -1, -1)]
     return "(" + " || ".join(parts) + ")"
 

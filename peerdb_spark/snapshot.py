@@ -19,7 +19,7 @@ one-orchestrator model).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peerdb_spark.registry import MirrorConfig
@@ -44,7 +44,6 @@ def snapshot_table(
 
 
 def resync_table(
-    spark: SparkSession,
     source: DataFrame,
     table: ParquetTable,
     soft_delete_col: str | None = None,

@@ -430,7 +430,7 @@ class SqlSurface:
                 if tcfg is None:
                     continue
                 if cfg.resync:
-                    resync_table(self.spark, src, pipeline._table(tcfg),
+                    resync_table(src, pipeline._table(tcfg),
                                  soft_delete_col=tcfg.soft_delete_col)
                 else:
                     pipeline.add_table(tcfg, backfill=src)

@@ -11,7 +11,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from peerdb_spark.session import get_spark
 
-    s = get_spark("peerdb_spark_tests", cpus=8)
+    s = get_spark("peerdb_spark_tests")  # SPARK_GRAFT_CPUS, 8 when unset
     yield s
 
 

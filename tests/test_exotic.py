@@ -16,16 +16,12 @@ def _one(spark, col):
 
 
 def _col_batch(spark, col_fn, inputs):
-    """Evaluate col_fn(input_column) over many inputs in ONE Spark job.
-    The geometry decoder Columns are expensive to build and analyze
-    (seconds of py4j round trips per build), so per-assertion _one()
-    calls dominated this module's wall time; building the decoder once
-    over a batched DataFrame keeps every assertion at a fraction of the
-    cost."""
+    """Evaluate col_fn over many inputs in ONE Spark job (col_fn takes
+    the input column's name, like the geometry decoders)."""
     df = spark.createDataFrame(
         [(i, h) for i, h in enumerate(inputs)], "i int, h string"
     )
-    rows = df.select("i", col_fn(F.col("h")).alias("v")).collect()
+    rows = df.select("i", col_fn("h").alias("v")).collect()
     return [r["v"] for r in sorted(rows, key=lambda r: r["i"])]
 
 
@@ -122,9 +118,9 @@ def test_wkb_point_invalid(spark):
 
 def test_wkb_point_wkt(spark):
     h = wkb_hex(1.5, -2.5, 4326, True)
-    assert _one(spark, X.wkb_point_wkt(F.lit(h))) == "SRID=4326;POINT(1.5 -2.5)"
+    assert _one(spark, X.wkb_point_wkt(f"'{h}'")) == "SRID=4326;POINT(1.5 -2.5)"
     h = wkb_hex(1.5, -2.5, None, True)
-    assert _one(spark, X.wkb_point_wkt(F.lit(h))) == "POINT(1.5 -2.5)"
+    assert _one(spark, X.wkb_point_wkt(f"'{h}'")) == "POINT(1.5 -2.5)"
 
 
 def test_wkb_point_property(spark):
@@ -149,7 +145,7 @@ def test_wkb_point_property(spark):
         [(i, wkb_hex(x, y, srid, little)) for i, (x, y, srid, little) in enumerate(cases)],
         "i long, h string",
     )
-    out = {r["i"]: r["v"] for r in df.select("i", X.wkb_point(F.col("h")).alias("v")).collect()}
+    out = {r["i"]: r["v"] for r in df.select("i", X.wkb_point("h").alias("v")).collect()}
     for i, (x, y, srid, little) in enumerate(cases):
         v = out[i]
         assert v["x"] == x and v["y"] == y, (x, y, srid, little)
@@ -408,28 +404,10 @@ def test_wkb_polygon_invalid(spark):
         assert v["rings"] is None
 
 
-_WKT_COL = []  # memo: the 7-kind dispatch tree, built once per session
-
-
-def _wkt_batch(spark, hexes):
-    """Evaluate wkb_geometry_wkt over many inputs in ONE job: the 7-kind
-    dispatch Column is expensive to build/analyze (~12 s of py4j +
-    analysis), so per-assertion _one() calls dominated this module's wall
-    time — one build (cached across the three WKT tests) over a batched
-    DataFrame keeps every assertion at a fraction of the cost."""
-    if not _WKT_COL:
-        _WKT_COL.append(X.wkb_geometry_wkt(F.col("h")).alias("v"))
-    df = spark.createDataFrame(
-        [(i, h) for i, h in enumerate(hexes)], "i int, h string"
-    )
-    rows = df.select("i", _WKT_COL[0]).collect()
-    return [r["v"] for r in sorted(rows, key=lambda r: r["i"])]
-
-
 def test_wkb_geometry_wkt_all_kinds(spark):
     ls = wkb_ls_hex([(1.5, 2.5), (3.0, -4.0)], srid=4326)
     pg = wkb_pg_hex([[(0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.0, 0.0)]])
-    got = _wkt_batch(spark, [wkb_hex(1.5, -2.5, 4326), ls, pg, pg[:-2]])
+    got = _col_batch(spark, X.wkb_geometry_wkt, [wkb_hex(1.5, -2.5, 4326), ls, pg, pg[:-2]])
     assert got[0] == "SRID=4326;POINT(1.5 -2.5)"
     assert got[1] == "SRID=4326;LINESTRING(1.5 2.5, 3.0 -4.0)"
     assert got[2] == "POLYGON((0.0 0.0, 1.0 0.0, 0.0 1.0, 0.0 0.0))"
@@ -458,7 +436,7 @@ def test_wkb_linestring_property(spark):
         "i long, h string",
     )
     rows = {r["i"]: r["v"] for r in
-            df.select("i", X.wkb_linestring(F.col("h")).alias("v")).collect()}
+            df.select("i", X.wkb_linestring("h").alias("v")).collect()}
     for i, (pts, srid, _l) in enumerate(cases):
         v = rows[i]
         assert [(p["x"], p["y"]) for p in v["points"]] == pts, cases[i]
@@ -533,12 +511,14 @@ def test_wkb_multipolygon_roundtrip(spark):
 def test_wkb_geometry_wkt_multi_kinds(spark):
     gc = "01" + struct.pack("<I", 7).hex() + struct.pack("<I", 0).hex()
     unk = "01" + struct.pack("<I", 8).hex() + struct.pack("<I", 0).hex()
-    got = _wkt_batch(spark, [
+    got = _col_batch(spark, X.wkb_geometry_wkt, [
         wkb_multi_hex(4, [(1.5, 2.5), (3.0, -4.0)], srid=4326),
         wkb_multi_hex(5, [[(0.0, 1.0), (2.0, 3.0)]]),
         wkb_multi_hex(6, [[[(0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.0, 0.0)]]]),
         gc.upper(),
         unk.upper(),
+        # a NaN y rejects the whole multipoint, as it rejects a point
+        wkb_multi_hex(4, [(1.5, 2.5), (3.0, float("nan"))]),
     ])
     assert got[0] == "SRID=4326;MULTIPOINT(1.5 2.5, 3.0 -4.0)"
     assert got[1] == "MULTILINESTRING((0.0 1.0, 2.0 3.0))"
@@ -547,6 +527,7 @@ def test_wkb_geometry_wkt_multi_kinds(spark):
     # test_wkb_geometrycollection_wkt); unknown kind 8 → NULL
     assert got[3] == "GEOMETRYCOLLECTION EMPTY"
     assert got[4] is None
+    assert got[5] is None
 
 
 def test_wkb_multilinestring_property(spark):
@@ -568,7 +549,7 @@ def test_wkb_multilinestring_property(spark):
         "i long, h string",
     )
     rows = {r["i"]: r["v"] for r in
-            df.select("i", X.wkb_multilinestring(F.col("h")).alias("v")).collect()}
+            df.select("i", X.wkb_multilinestring("h").alias("v")).collect()}
     for i, (lines, srid) in enumerate(cases):
         v = rows[i]
         assert [[(p["x"], p["y"]) for p in ln] for ln in v["lines"]] == lines, cases[i]
@@ -590,7 +571,7 @@ def test_wkb_geometrycollection_wkt(spark):
         return (b + struct.pack("<I", n) + body).hex().upper()
 
     nested_multi = bytes.fromhex(wkb_multi_hex(4, [(1.0, 2.0)]))
-    got = _wkt_batch(spark, [
+    got = _col_batch(spark, X.wkb_geometry_wkt, [
         gc_hex(None, 3, parts),
         gc_hex(4326, 3, parts),
         gc_hex(None, 0, b""),      # empty collection
@@ -609,49 +590,73 @@ def test_wkb_geometrycollection_wkt(spark):
 
 
 def test_sql_text_mirrors_match_column_decoders(spark):
-    """exotic_sql.py renders the geometry decoders as one SQL string per
-    column (the py4j-free fast path used by q_exotic_types). Pin value
-    equality against the canonical Column implementations over every
-    fixture literal PLUS malformed/adversarial inputs — including the
-    ANSI-overflow shapes (count/srid slices above INT_MAX) that the
-    round-8 try_cast fix turned from crashes into NULL geometries."""
-    from peerdb_spark.functions import exotic_sql as XS
-    from peerdb_spark.queries.qrep import _WKB_LITS, _ls_hexes, _mpg_hexes, _pg_hexes
+    """The one geometry decoder against ground truth, four kinds over every
+    input in one job: the gate fixtures decode to the coordinates they were
+    packed from, and each decodes as its own kind only; every malformed
+    shape — including the ANSI-overflow counts above INT_MAX that the
+    round-8 try_cast fix turned from crashes into NULL geometries — is
+    NULL as all four kinds. Zero-ring polygons and zero-part multipolygons
+    are valid empties, and an EWKB srid above INT_MAX keeps its
+    coordinates with a NULL srid: each is stated with its own truth."""
+    from peerdb_spark.queries.qrep import (
+        _WKB_LITS, _WKB_MPG_FIXT, _ls_canon_truth, _ls_hexes, _mpg_canon_truth,
+        _mpg_hexes, _pg_canon_truth, _pg_hexes,
+    )
 
-    vals = (
-        list(_WKB_LITS) + _ls_hexes() + _pg_hexes() + _mpg_hexes() + [
-            "", "00", "zz", "01", "0101000000", "0" * 100,
-            "01020000000200000000000000000000f03f000000000000f03f",
-            "010300000000000000",          # polygon, zero rings, short
-            "010600000000000000",          # multipolygon, truncated
-            "0102000000ffffffff",          # linestring, count > INT_MAX
-            "0103000000ffffffff",          # polygon, ring count > INT_MAX
-            "0101000020ffffffff" + "00" * 16,  # EWKB srid > INT_MAX
-            None,
-        ]
-    )
+    points = [(1.5, -2.25, 0), (-122.419416, 37.774929, 4326), (0.0, 0.0, 0),
+              (12345.6789, -0.001, 3857), (1e-310, 2.0, 0)]
+    assert [wkb_hex(x, y, srid or None) for x, y, srid in points] == _WKB_LITS[:5]
+    malformed = [
+        "", "00", "zz", "01", "0101000000", "0" * 100, _WKB_LITS[5],
+        "01020000000200000000000000000000f03f000000000000f03f",  # 2 points, 1 given
+        "0102000000ffffffff",          # linestring, count > INT_MAX
+        "0103000000ffffffff",          # polygon, ring count > INT_MAX
+        None,
+    ]
+    # (input, {kind: truth}); a kind not named must decode to NULL
+    cases = [(h, {"pt": p}) for h, p in zip(_WKB_LITS, points)]
+    cases += [(h, {"ls": t}) for h, t in zip(_ls_hexes(), _ls_canon_truth())]
+    cases += [(h, {"pg": t}) for h, t in zip(_pg_hexes(), _pg_canon_truth())]
+    cases += [(h, {"mpg": t}) for h, t in zip(_mpg_hexes(), _mpg_canon_truth())]
+    # the malformed multipolygon slot is a one-ring, one-point POLYGON
+    assert _WKB_MPG_FIXT[-1][0] is None
+    cases[-1] = (cases[-1][0], {"pg": "0:1024 2048"})
+    cases += [
+        ("010300000000000000", {"pg": "0:"}),   # POLYGON EMPTY
+        ("010600000000000000", {"mpg": "0:"}),  # MULTIPOLYGON EMPTY
+        # EWKB srid 4294967295 does not fit the int srid: coordinates only
+        ("0101000020ffffffff" + "00" * 16, {"pt": (0.0, 0.0, None)}),
+    ]
+    cases += [(h, {}) for h in malformed]
+
+    def pts(ps):
+        return ",".join(f"{int(p['x'] * 1024)} {int(p['y'] * 1024)}" for p in ps)
+
+    def canon(kind, v):
+        if kind == "pt":
+            return None if v["x"] is None else (v["x"], v["y"], v["srid"])
+        field, render = {
+            "ls": ("points", pts),
+            "pg": ("rings", lambda g: "|".join(map(pts, g))),
+            "mpg": ("polys", lambda g: "/".join("|".join(map(pts, rs)) for rs in g)),
+        }[kind]
+        return None if v[field] is None else f"{v['srid']}:{render(v[field])}"
+
     df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i int, wkb string"
+        [(i, h) for i, (h, _t) in enumerate(cases)], "i int, wkb string"
     )
-    col_rows = df.select(
+    rows = df.select(
         "i",
-        X.wkb_point(F.col("wkb")).alias("pt"),
-        X.wkb_linestring(F.col("wkb")).alias("ls"),
-        X.wkb_polygon(F.col("wkb")).alias("pg"),
-        X.wkb_multipolygon(F.col("wkb")).alias("mpg"),
+        X.wkb_point("wkb").alias("pt"),
+        X.wkb_linestring("wkb").alias("ls"),
+        X.wkb_polygon("wkb").alias("pg"),
+        X.wkb_multipolygon("wkb").alias("mpg"),
     ).collect()
-    sql_rows = df.select(
-        "i",
-        F.expr(XS.wkb_point_sql("wkb")).alias("pt"),
-        F.expr(XS.wkb_linestring_sql("wkb")).alias("ls"),
-        F.expr(XS.wkb_polygon_sql("wkb")).alias("pg"),
-        F.expr(XS.wkb_multipolygon_sql("wkb")).alias("mpg"),
-    ).collect()
-    a = {r["i"]: r for r in col_rows}
-    b = {r["i"]: r for r in sql_rows}
-    assert len(a) == len(vals)
-    for i in a:
-        assert a[i] == b[i], f"mismatch at fixture {i}: {a[i]} != {b[i]}"
+    assert len(rows) == len(cases)
+    for r in rows:
+        h, truth = cases[r["i"]]
+        for kind in ("pt", "ls", "pg", "mpg"):
+            assert canon(kind, r[kind]) == truth.get(kind), (h, kind, r[kind])
 
 
 def test_hostile_counts_reject_not_crash(spark):
@@ -667,10 +672,10 @@ def test_hostile_counts_reject_not_crash(spark):
     ]
     df = spark.createDataFrame([(v,) for v in hostile], "wkb string")
     out = df.select(
-        X.wkb_point(F.col("wkb")).alias("pt"),
-        X.wkb_linestring(F.col("wkb"))["points"].alias("ls"),
-        X.wkb_polygon(F.col("wkb"))["rings"].alias("pg"),
-        X.wkb_multipolygon(F.col("wkb"))["polys"].alias("mpg"),
+        X.wkb_point("wkb").alias("pt"),
+        X.wkb_linestring("wkb")["points"].alias("ls"),
+        X.wkb_polygon("wkb")["rings"].alias("pg"),
+        X.wkb_multipolygon("wkb")["polys"].alias("mpg"),
     ).collect()
     for r in out:
         assert r["ls"] is None and r["pg"] is None and r["mpg"] is None

@@ -125,6 +125,27 @@ def test_warc_rejects():
         parse_warc(bad)
 
 
+def test_gzip_members_inflating_past_bound_reject():
+    """A ~130 kB .warc.gz blob whose two members each stay under
+    codecs.MAX_SIZE but together inflate past it raises ValueError instead
+    of inflating in full."""
+    from peerdb_spark import codecs
+
+    half = codecs.MAX_SIZE // 2 + (1 << 19)
+    chunk = bytes(1 << 20)
+    member = bytearray()
+    z = zlib.compressobj(9, zlib.DEFLATED, 31)  # gzip wrapper
+    for _ in range(half >> 20):
+        member += z.compress(chunk)
+    member += z.compress(bytes(half & ((1 << 20) - 1))) + z.flush()
+    blob = bytes(member) * 2
+    assert len(blob) < 200_000
+    with pytest.raises(ValueError, match="size bound"):
+        split_gzip_members(blob)
+    with pytest.raises(ValueError, match="size bound"):
+        parse_warc(blob)
+
+
 # -- Spark paths -----------------------------------------------------------------
 
 

@@ -110,7 +110,7 @@ def _op(spark, t, op):
     elif op == "split_bucket":
         t.split_bucket(0)
     else:
-        resync_table(spark, spark.createDataFrame(NEW, schema), t)
+        resync_table(spark.createDataFrame(NEW, schema), t)
 
 
 def _sweep_crashes(spark, tmp_path, op):
@@ -404,9 +404,9 @@ def test_resync_crash_window_promotes_fresh_clone(spark, tmp_path):
         t = _mk_table(spark, path, OLD[:8])
         with _crash_at(0, path, only=MANIFEST_FILE if name == "before" else "",
                        calls=calls), pytest.raises(OSError):
-            resync_table(spark, fresh, t)
+            resync_table(fresh, t)
         assert _rows(ParquetTable(spark, path, ["id"], 4).read()) == seen, name
-        resync_table(spark, fresh, t)
+        resync_table(fresh, t)
         assert _rows(t.read()) == want, name
         _assert_clean(t)
 

@@ -230,7 +230,7 @@ def test_snapshot_then_resync(spark, tmp_path, tables):
     n_tomb = old.where("_del").count()
     t.overwrite(old)
     fresh = tables["orders"].where(F.col("o_orderkey") % 100 != 0)
-    resync_table(spark, fresh, ParquetTable(spark, dest, ["o_orderkey"], 0), soft_delete_col="_del")
+    resync_table(fresh, ParquetTable(spark, dest, ["o_orderkey"], 0), soft_delete_col="_del")
     out = ParquetTable(spark, dest, ["o_orderkey"], 0).read()
     assert out.where("_del").count() == n_tomb  # tombstones carried forward
     assert out.count() == fresh.count() + n_tomb
