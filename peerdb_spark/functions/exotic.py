@@ -707,36 +707,47 @@ def _wkt_body_sql(col: str, kind: str) -> str:
     return f"CASE {kind} WHEN 1 THEN {pt} WHEN 2 THEN {ls} WHEN 3 THEN {pg} END"
 
 
+def _wkt_wrap(tag: str, body: str) -> str:
+    """'TAG(body)', or 'TAG EMPTY' for an empty body (no points, rings or
+    members); NULL for a NULL body."""
+    return (f"CASE WHEN {body} = '' THEN concat({tag}, ' EMPTY') "
+            f"ELSE concat({tag}, '(', {body}, ')') END")
+
+
 def _wkt_sql(col: str, kind: str) -> str:
     """WKT, without an SRID prefix, of `col` whose header carries `kind`
     (SQL text evaluating to 1-7). A simple geometry renders as the one
     member of itself; a MULTI* or GEOMETRYCOLLECTION renders its nested
     blobs, each of which must be the kind its container promises
     (kind - 3; any simple kind in a collection, where members keep their
-    tags). NULL when any member is."""
+    tags). A geometry with no points, rings or members renders as
+    'TAG EMPTY' (an empty member of a MULTI* as 'EMPTY'). NULL when any
+    member is."""
     p, t = fresh("p"), fresh("t")
 
     def member(mk: str) -> str:
         return let(
             {"b": _wkt_body_sql(p, mk)},
             lambda b: (f"CASE WHEN {kind} <= 3 OR {kind} = 7 "
-                       f"THEN concat({_tag_sql(mk)}, '(', {b}, ')') "
+                       f"THEN {_wkt_wrap(_tag_sql(mk), b)} "
                        f"WHEN {mk} != {kind} - 3 THEN NULL "
-                       f"WHEN {kind} = 4 THEN {b} ELSE concat('(', {b}, ')') END"),
+                       f"WHEN {kind} = 4 THEN {b} "
+                       f"WHEN {b} = '' THEN 'EMPTY' ELSE concat('(', {b}, ')') END"),
         )
+
+    def render(txt: str) -> str:
+        joined = f"array_join({txt}, ', ')"
+        return (f"CASE WHEN {txt} IS NOT NULL "
+                f"AND NOT exists({txt}, {t} -> {t} IS NULL) THEN "
+                f"CASE WHEN {kind} <= 3 THEN get({txt}, 0) "
+                f"ELSE {_wkt_wrap(_tag_sql(kind), joined)} END END")
 
     items = (f"CASE WHEN {kind} <= 3 THEN array({col}) "
              f"ELSE ({_wkb_parts_sql(col, kind)}).parts END")
     return let(
         {"txt": (f"transform({items}, {p} -> "
                  f"{let({'mk': geo_header(p)[2]}, member)})")},
-        lambda txt: (
-            f"CASE WHEN {txt} IS NOT NULL "
-            f"AND NOT exists({txt}, {t} -> {t} IS NULL) THEN "
-            f"CASE WHEN {kind} <= 3 THEN get({txt}, 0) "
-            f"WHEN {kind} = 7 AND size({txt}) = 0 THEN 'GEOMETRYCOLLECTION EMPTY' "
-            f"ELSE concat({_tag_sql(kind)}, '(', array_join({txt}, ', '), ')') END END"
-        ),
+        render,
     )
 
 
@@ -833,8 +844,8 @@ def wkb_geometry_wkt(col: str) -> Column:
     """Any supported hex-WKB geometry → WKT with the reference's SRID
     prefix convention ('SRID=n;…' when SRID != 0 — geo.go:29-34). All
     seven kinds: point/linestring/polygon, the three MULTI* kinds, and
-    GEOMETRYCOLLECTION of simple members (nested collections → NULL).
-    Double→string formatting is engine-specific, so (like wkb_point_wkt)
+    GEOMETRYCOLLECTION of simple members (nested collections → NULL). An
+    empty geometry renders as '<TAG> EMPTY'. Double→string formatting is engine-specific, so (like wkb_point_wkt)
     this is the API surface — oracles compare typed/integer-scaled
     coordinates instead."""
     return F.expr(wkb_geometry_wkt_sql(col))

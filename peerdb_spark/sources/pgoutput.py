@@ -687,9 +687,10 @@ def decode_pgoutput(messages_df, slot_col: str = "slot", lsn_col: str = "lsn",
         slot — `_src_table` = the slot, `_data` = the JSON state,
         `_checkpoint_id` = the earliest buffered row's checkpoint (the
         replay anchor). The caller filters these out of the changelog
-        (they are decoder state, not change data), collects them
+        (they are decoder state, not change data), harvests them
         (bounded: ≤1 per slot) and passes them back as `stream_state`
-        for the next batch — see streaming.WalStreamRunner.
+        for the next batch. streaming.WalStreamRunner observes them as a
+        metric of the job that materializes the decode, with no collect.
 
     `state_dir` (carry mode): when set, the state BODY is written by the
     EXECUTOR to a uniquely-named JSON file under this directory (shared
@@ -780,10 +781,10 @@ def sweep_stream_state_files(state_dir: str, keep=()) -> list[str]:
     removed. `keep` is an iterable of still-replayable states: pointer
     dicts ({"state_file": path}), inline state dicts (ignored — they own
     no file), or bare paths. The cleanup counterpart of decode_pgoutput's
-    state_dir mode for direct API users (WalStreamRunner._save_decoder_state
-    has its own sweep tied to its persisted records); call it after each
-    batch with the states you will pass to the NEXT batch — anything a
-    future decode could still replay must be in `keep`."""
+    state_dir mode (WalStreamRunner._save_decoder_state keeps the streams
+    of its two surviving records); call it after each batch with the
+    states you will pass to the NEXT batch — anything a future decode
+    could still replay must be in `keep`."""
     import os
 
     referenced = set()

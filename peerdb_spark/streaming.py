@@ -23,7 +23,7 @@ no state-store growth and the cluster can restart cold from checkpoints.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -329,16 +329,18 @@ class WalStreamRunner(CdcStreamRunner):
       batch. Postgres re-sends Relation messages per replication session
       (the reference's pglogrepl session cache,
       flow/connectors/postgres/cdc.go); here the driver harvests each
-      batch's 'R' payloads (schema messages are rare — a bounded collect)
-      and replays them as a preamble into the next batch's decoders.
+      batch's 'R' payloads (schema messages are rare) as an observed
+      metric of the decode's checkpoint job and replays them as a
+      preamble into the next batch's decoders.
     - Protocol-v2 streamed in-progress transactions: a streamed
       transaction can span micro-batches (StreamStart in one, StreamCommit
       in a later one). Each batch decodes with on_incomplete='carry': a
       slot that ends mid-stream emits one synthetic `stream_state` row
       (its buffered uncommitted rows + open-segment xid) which the driver
-      filters OUT of the changelog, collects (≤1 row per slot) and feeds
-      into the next batch's decoders — so the transaction's rows reach
-      the raw table exactly once, at their commit, in commit order.
+      filters OUT of the changelog, observes on the same checkpoint job
+      (≤1 row per slot) and feeds into the next batch's decoders — so
+      the transaction's rows reach the raw table exactly once, at their
+      commit, in commit order.
 
     Both are persisted per batch id under the raw directory
     (`_PG_DECODER_STATE/state_<batch_id>.json`, written atomically before
@@ -418,6 +420,8 @@ class WalStreamRunner(CdcStreamRunner):
         import json
         import os
 
+        from peerdb_spark.sources.pgoutput import sweep_stream_state_files
+
         os.makedirs(self._state_dir(), exist_ok=True)
         blob = {
             "relations": {
@@ -429,28 +433,18 @@ class WalStreamRunner(CdcStreamRunner):
         atomic_write(self._state_path(batch_id), json.dumps(blob))
         # prune the superseded record AND any executor-written stream-state
         # files only IT references (a replay can only target the last
-        # uncommitted batch, which reads state_{batch_id - 1})
+        # uncommitted batch, which reads state_{batch_id - 1}); the sweep
+        # also removes orphans of a crash between the executor write and
+        # this record write
         stale = self._state_path(batch_id - 2)
         if os.path.exists(stale):
             os.remove(stale)
-        # sweep stream-state bodies not referenced by any surviving record
-        # (covers both superseded carries and orphans from a crash between
-        # the executor write and this record write)
-        referenced = set()
-        for keep_id in (batch_id, batch_id - 1):
-            kp = self._state_path(keep_id)
-            if os.path.exists(kp):
-                with open(kp) as fh:
-                    for st in json.load(fh).get("streams", {}).values():
-                        if isinstance(st, dict) and "state_file" in st:
-                            referenced.add(os.path.basename(st["state_file"]))
-        for fn in os.listdir(self._state_dir()):
-            if fn.startswith("stream_") and fn.endswith(".json") \
-                    and fn not in referenced:
-                try:
-                    os.remove(os.path.join(self._state_dir(), fn))
-                except OSError:
-                    pass
+        keep = list(self._stream_states.values())
+        prev = self._state_path(batch_id - 1)
+        if os.path.exists(prev):
+            with open(prev) as fh:
+                keep += json.load(fh).get("streams", {}).values()
+        sweep_stream_state_files(self._state_dir(), keep=keep)
 
     def _restore_decoder_state(self, batch_id: int) -> None:
         """Reset driver-side decoder state to what batch `batch_id`
@@ -474,6 +468,8 @@ class WalStreamRunner(CdcStreamRunner):
         self._stream_states = blob.get("streams", {})
 
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        import json
+
         from peerdb_spark.sources.pgoutput import (
             STREAM_STATE_KIND,
             decode_pgoutput,
@@ -481,45 +477,54 @@ class WalStreamRunner(CdcStreamRunner):
 
         self._restore_decoder_state(batch_id)
         preamble = list(self._relation_cache.relation_messages.values())
-        changelog = decode_pgoutput(
-            batch_df, relation_preamble=preamble,
-            stream_state=self._stream_states, on_incomplete="carry",
-            # executors write state BODIES to shared storage; only
-            # {"state_file": ...} pointers flow through the driver, so a
-            # giant open transaction never rides a collect
-            state_dir=self._state_dir(),
-        ).localCheckpoint()  # decode once: state harvest + sync share it
-        # harvest carried streamed-transaction state (bounded: ≤1 row/slot).
-        # A slot ABSENT from this batch keeps its previous carry — its open
-        # transaction is still pending even though no decoder ran for it;
-        # a slot present in the batch either re-emits its state or consumed
-        # it (commit/abort), so the harvested rows are authoritative for
-        # exactly the slots that appeared.
-        import json as _json
-
-        carried = changelog.where(F.col("_kind") == STREAM_STATE_KIND).collect()
-        # ONE scan for both driver harvests (r12 — they were two separate
-        # full jobs costing ~1.3 s each per batch on a 200k-message batch):
-        # the slots present in this batch (authoritative-carry bookkeeping)
-        # and each slot's Relation ('R') messages for FUTURE batches (this
-        # batch's executors see them in-stream, in WAL order; collect_list
-        # drops the non-'R' nulls, so only the rare schema messages ride
-        # the collect)
-        slot_rels = batch_df.groupBy("slot").agg(
+        # both driver harvests ride the decode's eager checkpoint as observed
+        # metrics, with no job of their own (the bucket-probe technique of
+        # normalize.merge_into_table). `seen` sits in the shuffle-map stage
+        # over the raw batch: the slots present and their Relation ('R')
+        # payloads for FUTURE batches (this batch's executors see them
+        # in-stream; collect_list drops the non-'R' nulls). `carry` holds
+        # each slot's carried streamed-transaction state (≤1 row/slot).
+        # A re-run stage may merge a task's metrics twice, so the harvest
+        # is idempotent: slots form a set, Relation payloads replay in lsn
+        # order (replay is idempotent per oid), and a slot keeps one state
+        # (a re-run writes a second file with an equal body; the sweep
+        # removes whichever one no record references).
+        seen, carry = Observation(), Observation()
+        wal = batch_df.observe(
+            seen,
+            F.collect_set("slot").alias("slots"),
             F.collect_list(
                 F.when(F.expr("substring(payload, 1, 1) == X'52'"),
                        F.struct("lsn", "payload"))
-            ).alias("rels")
-        ).collect()
-        slots_in_batch = {r["slot"] for r in slot_rels}
+            ).alias("rels"),
+        )
+        changelog = decode_pgoutput(
+            wal, relation_preamble=preamble,
+            stream_state=self._stream_states, on_incomplete="carry",
+            # executors write state BODIES to shared storage; only
+            # {"state_file": ...} pointers flow through the driver, so a
+            # giant open transaction never rides an observation
+            state_dir=self._state_dir(),
+        ).observe(
+            carry,
+            F.collect_list(
+                F.when(F.col("_kind") == STREAM_STATE_KIND,
+                       F.struct("_src_table", "_data"))
+            ).alias("states"),
+        ).localCheckpoint(eager=True)  # decode once: harvests + sync share it
+        # A slot ABSENT from this batch keeps its previous carry — its open
+        # transaction is still pending even though no decoder ran for it;
+        # a slot present in the batch either re-emits its state or consumed
+        # it (commit/abort), so the harvested states are authoritative for
+        # exactly the slots that appeared.
+        wal_seen = seen.get
+        slots_in_batch = set(wal_seen["slots"])
         states = {s: st for s, st in self._stream_states.items()
                   if s not in slots_in_batch}
-        states.update(
-            {r["_src_table"]: _json.loads(r["_data"]) for r in carried})
+        states.update({r["_src_table"]: json.loads(r["_data"])
+                       for r in carry.get["states"]})
         self._stream_states = states
-        rels = sorted((rr for r in slot_rels for rr in r["rels"]),
-                      key=lambda rr: rr["lsn"])
-        for r in rels:
+        for r in sorted(wal_seen["rels"], key=lambda r: r["lsn"]):
             self._relation_cache.replay(bytes(r["payload"]))
         # persist BEFORE the sink write: a crash inside sync replays this
         # batch against state_{batch_id - 1}, which this write never touches

@@ -530,6 +530,33 @@ def test_wkb_geometry_wkt_multi_kinds(spark):
     assert got[5] is None
 
 
+def test_wkb_geometry_wkt_empty_kinds(spark):
+    """An empty geometry renders as '<TAG> EMPTY', never as 'TAG()'; an
+    empty member of a MULTI* renders as 'EMPTY' and one of a collection
+    keeps its tag."""
+    tri = [(0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.0, 0.0)]
+    gc_empty_ls = ("01" + struct.pack("<II", 7, 1).hex()
+                   + wkb_ls_hex([])).upper()
+    got = _col_batch(spark, X.wkb_geometry_wkt, [
+        wkb_ls_hex([]),
+        "010300000000000000",
+        wkb_multi_hex(4, []),
+        wkb_multi_hex(5, []),
+        wkb_multi_hex(6, []),
+        wkb_ls_hex([], srid=4326),
+        wkb_multi_hex(5, [[], [(0.0, 1.0), (2.0, 3.0)]]),
+        wkb_multi_hex(6, [[[*tri]], []]),
+        gc_empty_ls,
+    ])
+    assert got[:5] == ["LINESTRING EMPTY", "POLYGON EMPTY", "MULTIPOINT EMPTY",
+                       "MULTILINESTRING EMPTY", "MULTIPOLYGON EMPTY"]
+    assert got[5] == "SRID=4326;LINESTRING EMPTY"
+    assert got[6] == "MULTILINESTRING(EMPTY, (0.0 1.0, 2.0 3.0))"
+    assert got[7] == ("MULTIPOLYGON(((0.0 0.0, 1.0 0.0, 0.0 1.0, 0.0 0.0)), "
+                      "EMPTY)")
+    assert got[8] == "GEOMETRYCOLLECTION(LINESTRING EMPTY)"
+
+
 def test_wkb_multilinestring_property(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st

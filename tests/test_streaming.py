@@ -484,6 +484,189 @@ def test_wal_stream_state_survives_batches_without_the_slot(spark, tmp_path):
     assert got == [("1", "a-str"), ("2", "b-plain")]
 
 
+def test_wal_trigger_harvest_rides_the_decode_job(spark, tmp_path, monkeypatch):
+    """One WAL trigger submits at most 2 jobs of its own before the sync:
+    the decode's eager checkpoint (slot shuffle map, then the checkpoint).
+    The slots present, the Relation payloads and the carried stream state
+    are observed metrics of that job, not collects of their own."""
+    import uuid
+
+    from pyspark.sql import types as TT
+
+    from peerdb_spark.streaming import WalStreamRunner
+    from tests.test_pgoutput import (
+        TS1,
+        enc_begin,
+        enc_commit,
+        enc_insert,
+        enc_relation,
+        enc_stream_start,
+        v2,
+    )
+
+    val = TT.StructType([TT.StructField("id", TT.StringType()),
+                         TT.StructField("v", TT.StringType())])
+    rel = enc_relation(42, "public", "items", ["id", "v"], key_cols=("id",))
+    # slot A: an empty v1 transaction; slot B: the Relation, then a v2
+    # stream left open with one buffered row
+    wal = spark.createDataFrame([
+        ("A", 10, bytes(enc_begin(5, TS1))),
+        ("A", 11, bytes(enc_commit(TS1))),
+        ("B", 20, bytes(rel)),
+        ("B", 21, bytes(enc_stream_start(900))),
+        ("B", 22, bytes(v2(enc_insert(42, ["1", "open"]), 900))),
+    ], WalStreamRunner.WAL_SCHEMA)
+    runner = WalStreamRunner(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"),
+        [cdc.CdcTableConfig("public.items", ["id"], val,
+                            str(tmp_path / "items"), n_buckets=2)],
+        str(tmp_path / "raw"), max_files_per_trigger=1,
+    )
+    # A was carrying (present now, ends clean: its carry is consumed);
+    # C is absent from the batch, so its carry survives untouched
+    runner._stream_states = {"A": {"stream_xid": None, "pending": {}},
+                             "C": {"stream_xid": 7, "pending": {}}}
+
+    sc = spark.sparkContext
+    group = f"wal-trigger-{uuid.uuid4().hex}"
+    seen = {}
+
+    class Stop(Exception):
+        pass
+
+    def sync_batch(self, df, batch_id):
+        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        seen["rows"] = df.collect()
+        raise Stop
+
+    monkeypatch.setattr(cdc.CdcPipeline, "sync_batch", sync_batch)
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(Stop):
+            runner._foreach_batch(wal, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    assert seen["jobs"] <= 2, seen["jobs"]
+    assert seen["rows"] == []  # nothing committed; the carry row is filtered
+    assert runner._relation_cache.relation_messages == {42: bytes(rel)}
+    assert set(runner._stream_states) == {"B", "C"}
+    assert runner._stream_states["C"] == {"stream_xid": 7, "pending": {}}
+    with open(runner._stream_states["B"]["state_file"]) as fh:
+        body = json.load(fh)
+    assert body["stream_xid"] == 900
+    assert [json.loads(r["_data"]) for r in body["pending"]["900"]] == [
+        {"id": "1", "v": "open"}]
+    # the harvest is persisted before the sync
+    with open(runner._state_path(1)) as fh:
+        record = json.load(fh)
+    assert record["relations"] == {"42": bytes(rel).hex()}
+    assert record["streams"] == runner._stream_states
+
+
+def test_wal_stream_crash_between_harvest_and_sync(spark, tmp_path, monkeypatch):
+    """A crash inside the sync of trigger 2, after its decoder state is
+    persisted, replays to the destination of an uninterrupted drain. The
+    Relation arrives only in trigger 0 and a v2 transaction is open at both
+    boundaries, so the replay must decode against state_1, not the state_2
+    the crashed attempt wrote. Afterwards no stream-state body is left that
+    neither surviving record references."""
+    from pyspark.sql import types as TT
+
+    from peerdb_spark.storage import ParquetTable
+    from peerdb_spark.streaming import WalStreamRunner
+    from tests.test_pgoutput import (
+        TS1,
+        TS2,
+        enc_begin,
+        enc_commit,
+        enc_insert,
+        enc_relation,
+        enc_stream_commit,
+        enc_stream_start,
+        enc_stream_stop,
+        enc_update,
+        v2,
+    )
+
+    wal_dir = str(tmp_path / "wal")
+    val = TT.StructType([TT.StructField("id", TT.StringType()),
+                         TT.StructField("v", TT.StringType())])
+    chunks = [
+        [(10, enc_relation(42, "public", "items", ["id", "v"],
+                           key_cols=("id",))),
+         (11, enc_begin(1, TS1)),
+         (12, enc_insert(42, ["1", "a"])),
+         (13, enc_commit(TS1)),
+         (14, enc_stream_start(900)),
+         (15, v2(enc_insert(42, ["2", "s900-a"]), 900))],
+        [(16, v2(enc_insert(42, ["3", "s900-b"]), 900)),
+         (17, enc_stream_stop()),
+         (18, enc_begin(2, TS2)),
+         (19, enc_update(42, ["1", "A2"])),
+         (20, enc_insert(42, ["4", "d"])),
+         (21, enc_commit(TS2))],
+        [(22, enc_stream_commit(900, 10**15)),
+         (23, enc_stream_start(901)),
+         (24, v2(enc_insert(42, ["5", "open"]), 901))],
+    ]
+    for msgs in chunks:
+        spark.createDataFrame([("slot0", lsn, bytes(p)) for lsn, p in msgs],
+                              WalStreamRunner.WAL_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(wal_dir)
+
+    def drain(name):
+        dest = str(tmp_path / name / "items")
+        runner = WalStreamRunner(
+            spark, wal_dir, str(tmp_path / name / "ckpt"),
+            [cdc.CdcTableConfig("public.items", ["id"], val, dest,
+                                n_buckets=2)],
+            str(tmp_path / name / "raw"), max_files_per_trigger=1,
+        )
+        try:
+            runner.run_available()
+        finally:
+            runner.stop()
+        return runner, dest
+
+    def rows(dest):
+        t = ParquetTable(spark, dest, ["id"], 2)
+        return sorted((r["id"], r["v"]) for r in t.read().collect())
+
+    _, want_dest = drain("clean")
+    want = rows(want_dest)
+    assert want == [("1", "A2"), ("2", "s900-a"), ("3", "s900-b"), ("4", "d")]
+
+    sync = cdc.CdcPipeline.sync_batch
+    crash = {}
+
+    def crashing_sync(self, df, batch_id):
+        if batch_id == 2 and not crash:
+            sdir = os.path.join(self.raw.path, "_PG_DECODER_STATE")
+            crash["state_2"] = os.path.exists(
+                os.path.join(sdir, "state_2.json"))
+            raise RuntimeError("injected crash before the sync")
+        return sync(self, df, batch_id)
+
+    monkeypatch.setattr(cdc.CdcPipeline, "sync_batch", crashing_sync)
+    with pytest.raises(Exception, match="injected crash"):
+        drain("crashed")
+    assert crash == {"state_2": True}
+    monkeypatch.setattr(cdc.CdcPipeline, "sync_batch", sync)
+    runner, dest = drain("crashed")
+    assert rows(dest) == want
+
+    sdir = runner._state_dir()
+    referenced = set()
+    for b in (1, 2):
+        with open(runner._state_path(b)) as fh:
+            for st in json.load(fh)["streams"].values():
+                referenced.add(os.path.basename(st["state_file"]))
+    bodies = {f for f in os.listdir(sdir) if f.startswith("stream_")}
+    assert bodies == referenced and len(bodies) == 2, (bodies, referenced)
+
+
 def test_dedup_within_watermark_streaming(spark, tmp_path):
     """Native redelivery filter: duplicate event ids delivered twice in the
     stream collapse to one row; distinct ids all survive."""
