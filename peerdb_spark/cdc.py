@@ -153,17 +153,16 @@ class RawTable:
         return os.path.exists(os.path.join(self.batch_dir(batch_id), self.MARKER))
 
     def append(self, changelog: DataFrame, batch_id: int) -> None:
-        from peerdb_spark.functions import ensure_parallelism
-
         part = self.batch_dir(batch_id)
         if os.path.isdir(part) and not self.is_batch_committed(batch_id):
             # partial directory from a crashed job commit — redo cleanly
             shutil.rmtree(part)
-        # an under-split changelog batch (one WAL file, one parquet split)
-        # would serialize the JSON/uuid projection and the parquet encode on
-        # a few tasks — fan out first; no-op for well-split feeds, and the
-        # parallel write also gives normalize a well-split read
-        raw = changelog_to_raw(ensure_parallelism(changelog), batch_id)
+        # written at the partitioning the changelog arrives with, which is
+        # already sized by data volume (byte-based file splits for a feed,
+        # AQE's advisory size on the WAL decode checkpoint); the raw
+        # projection is not CPU-bound, and each extra partition would be
+        # one more parquet file for normalize to open
+        raw = changelog_to_raw(changelog, batch_id)
         raw.write.mode("append").partitionBy(RAW_BATCH).parquet(self.path)
         if not os.path.exists(os.path.join(self.path, SCHEMA_FILE)):
             save_schema(self.path, raw.drop(RAW_BATCH).schema)

@@ -21,6 +21,11 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     partition count is well below the cluster's parallelism, pay one narrow
     round-robin shuffle to fan out. No-op for already-well-split inputs, so
     it's safe on 100 TB sources (which arrive with thousands of splits).
+
+    Its callers are CPU-bound operators (shingling, hashing, featurizing).
+    The CDC product path does not use it: the raw append
+    (`cdc.RawTable.append`) is an I/O-bound projection and writes each batch
+    at the partitioning it arrives with.
     """
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism

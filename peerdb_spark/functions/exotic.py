@@ -633,21 +633,22 @@ def _wkb_parts_sql(col: str, container_type: int | str) -> str:
     )
 
 
-def _multi_sql(col: str, kind: int, decode, key: str, field: str, out: str,
-               pick=None) -> str:
+def _multi_sql(col: str, kind: int, decode, key: str, fields: tuple[str, ...],
+               out: str, pick=None) -> str:
     """struct(srid, <out>) of a MULTI* geometry: each nested blob decoded by
-    `decode` (bound as `key`), the whole geometry NULL when any member's
-    `field` is NULL; `pick(m)` projects one decoded member (default: its
-    `field`)."""
+    `decode` (bound as `key`), the whole geometry NULL when any of a member's
+    `fields` is NULL; `pick(m)` projects one decoded member (default: its
+    first field)."""
     p, x = fresh("p"), fresh("x")
-    pick = pick or (lambda m: f"{m}.{field}")
+    pick = pick or (lambda m: f"{m}.{fields[0]}")
+    missing = " OR ".join(f"{x}.{f} IS NULL" for f in fields)
     return let(
         {"ps": _wkb_parts_sql(col, kind)},
         lambda ps: let(
             {key: f"transform({ps}.parts, {p} -> {decode(p)})"},
             lambda d: let(
                 {"bad": (f"({ps}.parts IS NULL OR "
-                         f"exists({d}, {x} -> {x}.{field} IS NULL))")},
+                         f"exists({d}, {x} -> {missing}))")},
                 lambda bad: (
                     f"named_struct("
                     f"'srid', CASE WHEN NOT {bad} THEN {ps}.srid END, "
@@ -661,18 +662,18 @@ def _multi_sql(col: str, kind: int, decode, key: str, field: str, out: str,
 
 def wkb_multipoint_sql(col: str) -> str:
     """Builder of `wkb_multipoint`: struct(srid, points)."""
-    return _multi_sql(col, 4, wkb_point_sql, "pts", "x", "points",
+    return _multi_sql(col, 4, wkb_point_sql, "pts", ("x", "y"), "points",
                       lambda m: f"named_struct('x', {m}.x, 'y', {m}.y)")
 
 
 def wkb_multilinestring_sql(col: str) -> str:
     """Builder of `wkb_multilinestring`: struct(srid, lines)."""
-    return _multi_sql(col, 5, wkb_linestring_sql, "ls", "points", "lines")
+    return _multi_sql(col, 5, wkb_linestring_sql, "ls", ("points",), "lines")
 
 
 def wkb_multipolygon_sql(col: str) -> str:
     """Builder of `wkb_multipolygon`: struct(srid, polys)."""
-    return _multi_sql(col, 6, wkb_polygon_sql, "pg", "rings", "polys")
+    return _multi_sql(col, 6, wkb_polygon_sql, "pg", ("rings",), "polys")
 
 
 # -- WKT rendering (geo.go's output surface) ---------------------------------

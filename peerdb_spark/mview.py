@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from peerdb_spark.rollup import (
     is_applied,
+    key_join,
     publish_epoch,
     publish_version,
     read_pointer,
@@ -83,12 +84,12 @@ def mview_fold(
         pre_image.select(*dims, F.lit(-1).alias("cnt"), (-v).alias("sum_v")))
     types = (view if view is not None else group_contrib(pre_image, dims, value_col)).schema
     if view is not None:
-        touched = F.broadcast(rows.select(*dims).distinct())
-        rows = view.join(touched, dims, "left_semi").unionByName(rows)
+        touched = rows.select(*dims).distinct()
+        rows = key_join(view, touched, dims, "left_semi").unionByName(rows)
     out = (rows.groupBy(*dims)
            .agg(*[F.sum(c).cast(types[c].dataType).alias(c) for c in ("cnt", "sum_v")])
            .where(F.col("cnt") != 0))
-    return out if view is None else view.join(touched, dims, "left_anti").unionByName(out)
+    return out if view is None else key_join(view, touched, dims, "left_anti").unionByName(out)
 
 
 def enrich_images(
@@ -155,13 +156,13 @@ def minmax_refresh(
     100 TB keep the mirror bucketed/partitioned by a dim prefix so the
     slice prunes files."""
     fresh = (
-        mirror_live.join(F.broadcast(touched_dims), dims, "left_semi")
+        key_join(mirror_live, touched_dims, dims, "left_semi")
         .groupBy(*dims)
         .agg(F.min(value_col).alias("min_v"), F.max(value_col).alias("max_v"))
     )
     if view is None:
         return fresh
-    cold = view.join(F.broadcast(touched_dims), dims, "left_anti")
+    cold = key_join(view, touched_dims, dims, "left_anti")
     return cold.unionByName(fresh)
 
 

@@ -64,6 +64,15 @@ def rollup_delta(
     )
 
 
+def key_join(df: DataFrame, keys_df: DataFrame, keys: list[str], how: str) -> DataFrame:
+    """`df` semi- (`how="left_semi"`) or anti-joined (`"left_anti"`) to a
+    broadcast key set on `keys`, matching NULL to NULL: a NULL group key is
+    a group like any other, and `=` would leave it both cold and hot."""
+    probe = F.broadcast(keys_df.select(*[F.col(k).alias(f"_k{i}") for i, k in enumerate(keys)]))
+    on = [df[k].eqNullSafe(probe[f"_k{i}"]) for i, k in enumerate(keys)]
+    return df.join(probe, on, how)
+
+
 def rollup_merge(
     state: DataFrame | None,
     delta: DataFrame,
@@ -91,8 +100,8 @@ def rollup_merge(
     if materialize_state:
         state = state.localCheckpoint(eager=True)
     touched = delta.select(*keys).distinct()
-    cold = state.join(F.broadcast(touched), keys, "left_anti")
-    hot = state.join(F.broadcast(touched), keys, "left_semi")
+    cold = key_join(state, touched, keys, "left_anti")
+    hot = key_join(state, touched, keys, "left_semi")
     merged = (
         hot.unionByName(delta)
         .groupBy(*keys)

@@ -599,6 +599,27 @@ def _jobs_while(sc, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_sync_writes_the_changelog_at_its_own_partitioning(spark, tmp_path):
+    """The raw append writes the changelog as it arrives: a one-partition
+    batch is one Spark job and one data file, and a four-partition batch
+    still writes four files."""
+    import os
+
+    cfg = cdc.CdcTableConfig("t1", ["id"], VAL_SCHEMA, str(tmp_path / "t1"), n_buckets=4)
+    pipe = cdc.CdcPipeline(spark, str(tmp_path / "raw"), [cfg])
+    feed = _changelog(spark, [("insert", i, "t1", {"id": i, "val": "x", "amt": 0.0}, None, [])
+                              for i in range(40)])
+
+    def files(b):
+        return [n for n in os.listdir(pipe.raw.batch_dir(b)) if n.endswith(".parquet")]
+
+    _, jobs = _jobs_while(spark.sparkContext, lambda: pipe.sync_batch(feed.coalesce(1), 0))
+    assert (jobs, len(files(0))) == (1, 1)
+    pipe.sync_batch(feed.repartition(4), 1)
+    assert len(files(1)) == 4
+    assert pipe.raw.read_batches(0, 1).count() == 80
+
+
 def test_read_batches_lists_only_the_requested_range(spark, tmp_path):
     """A raw root holding more partitions than Spark's parallel-discovery
     threshold (32) is never listed as a whole: building a one-batch read

@@ -474,6 +474,10 @@ def test_wkb_multipoint_roundtrip(spark):
         wkb_ls_hex(pts),
         h[:-2],
         h + "00",
+        # so does a member with a NaN/Inf coordinate, y as well as x
+        wkb_multi_hex(4, [(1.0, 2.0), (3.0, float("nan"))]),
+        wkb_multi_hex(4, [(1.0, float("inf"))], 4326),
+        wkb_multi_hex(4, [(float("nan"), 2.0), (3.0, 4.0)]),
     ])
     for srid, v in zip((None, 4326), got[:2]):
         assert [(p["x"], p["y"]) for p in v["points"]] == pts

@@ -331,6 +331,27 @@ def test_minmax_refresh_after_extremum_deletion(spark):
     assert {r["grp"] for r in view2.collect()} == {"b"}
 
 
+def test_fold_matches_a_null_group_key(spark):
+    """A NULL dim is one group: the fold must combine the view's NULL row
+    with the batch's NULL contribution instead of keeping both."""
+    view = spark.createDataFrame([(None, 2, 10), ("a", 1, 1)], "flag string, cnt long, sum_v long")
+    schema = "id long, flag string, qty long"
+    post = spark.createDataFrame([(7, None, 5)], schema)
+    out = mview_fold(view, spark.createDataFrame([], schema), post, ["flag"], "qty")
+    assert sorted(out.collect(), key=lambda r: r["flag"] or "") == [
+        (None, 3, 15), ("a", 1, 1)]
+
+
+def test_minmax_refresh_rescans_a_null_group(spark):
+    """A touched NULL group is re-scanned from the live rows, not kept stale."""
+    from peerdb_spark.mview import minmax_refresh
+
+    view = spark.createDataFrame([(None, 1, 9)], "grp string, min_v long, max_v long")
+    live = spark.createDataFrame([(1, None, 3), (2, None, 4)], "id long, grp string, v long")
+    touched = spark.createDataFrame([(None,)], "grp string")
+    assert minmax_refresh(view, live, touched, ["grp"], "v").collect() == [(None, 3, 4)]
+
+
 def test_enriched_view_dim_join_folds(spark):
     """enrich_images: Δ(fact ⋈ dim) = Δfact ⋈ dim — a customer-moving
     update retracts from the old nation group and lands in the new one."""

@@ -46,6 +46,14 @@ def test_rollup_merge_only_touches_batch_keys(spark):
     assert len(merged) == 2
 
 
+def test_rollup_merge_combines_a_null_dim(spark):
+    """A NULL dim is one key: its state row is hot, not both cold and hot."""
+    schema = "window_start_s long, event_type string, cnt long, sum_v double, min_v double, max_v double"
+    state = spark.createDataFrame([(0, None, 2, 10.0, 1.0, 9.0)], schema)
+    delta = spark.createDataFrame([(0, None, 1, 5.0, 5.0, 5.0)], schema)
+    assert rollup_merge(state, delta, ["event_type"]).collect() == [(0, None, 3, 15.0, 1.0, 9.0)]
+
+
 def test_rollup_bootstrap_from_none(spark):
     rows = [("2024-01-01 00:10:00", "a", 1.5)]
     df = spark.createDataFrame(rows, "ts string, event_type string, value double") \

@@ -23,20 +23,21 @@ def run(name: str, cmd: list[str], env: dict[str, str] | None = None) -> bool:
 
 
 def main() -> int:
-    # the ROADMAP Tier-1 command: all cores (nproc), a fixed Spark scratch
-    # dir, no pytest cache, inside the 2670 s window; --durations lists the
-    # 25 slowest tests so every run shows where tier-1 time goes
-    tier1_env = {**os.environ, "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
-                 "SPARK_LOCAL_DIRS": "/tmp/spark-local"}
+    # Spark sessions run on the host's own cores (nproc) with a fixed Spark
+    # scratch dir; the tests gate is the ROADMAP Tier-1 command: no pytest
+    # cache, inside the 2670 s window; --durations lists the 25 slowest
+    # tests so every run shows where tier-1 time goes
+    host_env = {**os.environ, "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+                "SPARK_LOCAL_DIRS": "/tmp/spark-local"}
     results = [
         run("tests", ["timeout", "-k", "10", "2670", sys.executable, "-m", "pytest",
                       "tests/", "-q", "--continue-on-collection-errors",
-                      "-p", "no:cacheprovider", "--durations=25"], env=tier1_env),
+                      "-p", "no:cacheprovider", "--durations=25"], env=host_env),
         run("perfbench", [sys.executable, "-m", "pytest", "perfbench/tests", "-q",
                           "-p", "no:cacheprovider"]),
-        run("oracle", [sys.executable, "tools/check_oracle.py"]),
+        run("oracle", [sys.executable, "tools/check_oracle.py"], env=host_env),
         run("plans", [sys.executable, "tools/audit_plans.py"]),
-        run("bench", [sys.executable, "bench.py"]),
+        run("bench", [sys.executable, "bench.py"], env=host_env),
     ]
     print("ALL GATES:", "PASS" if all(results) else "FAIL")
     return 0 if all(results) else 1
